@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.inference.{Inferencer, SurrogateInferencer}
 import graft.model.{AudioChunk, TranscriptEvent}
@@ -20,7 +21,7 @@ import graft.model.{AudioChunk, TranscriptEvent}
   *  - W5 session TTL: finalize sessions idle > timeout via
   *    GroupStateTimeout (`stt_worker.py:419-430`)
   *  - W6 final flush: is_final emits the whole remainder and drops state
-  *    (`stt_worker.py:396-417`)
+  *    — the state row is removed, not stored reset (`stt_worker.py:396-417`)
   *  - W7/W8 partial vs final emission with a 150 ms event-time debounce
   *    (`stt_worker.py:332-356`, `config.py:124`)
   *
@@ -31,6 +32,13 @@ import graft.model.{AudioChunk, TranscriptEvent}
   * checkpoint recovery are deterministic (the reference can duplicate
   * partials on redelivery; we key results by (session, offset) like its
   * `{session_id}_{offset_ms}` result keys, `stt_worker.py:297-300`).
+  *
+  * State layout: one row per live session, keyed by the `sessionId`
+  * column, holding a Kryo-encoded [[SessionLogic.State]] whose buffered
+  * [[SessionLogic.Seg]]s carry primitive `Array[Byte]` audio (written as
+  * a length plus raw bytes). Audio is copied once on emission, into the
+  * array handed to the inferencer; only the suffix of a segment
+  * straddling the overlap cut is copied again to stay buffered.
   */
 object SessionLogic {
 
@@ -46,9 +54,19 @@ object SessionLogic {
   /** One buffered chunk's bytes pinned to its own time span — byte
     * positions map to time per-chunk, so variable-rate content (chunk
     * byte length not proportional to durationMs) still splits at exact
-    * positions instead of drifting with a global bytes/ms estimate. */
-  final case class Seg(startMs: Long, durMs: Long, bytes: Vector[Byte]) {
+    * positions instead of drifting with a global bytes/ms estimate.
+    * `bytes` is never mutated: it is the chunk's own content array, or
+    * the copied suffix of one that straddled an emission boundary.
+    * Equality compares the bytes, so a [[State]] stays a value. */
+  final case class Seg(startMs: Long, durMs: Long, bytes: Array[Byte]) {
     def endMs: Long = startMs + durMs
+    override def equals(o: Any): Boolean = o match {
+      case s: Seg => startMs == s.startMs && durMs == s.durMs &&
+        java.util.Arrays.equals(bytes, s.bytes)
+      case _ => false
+    }
+    override def hashCode: Int =
+      (startMs, durMs, java.util.Arrays.hashCode(bytes)).##
   }
 
   /** Carried per-session state. `segs` holds the not-yet-emitted chunks
@@ -62,36 +80,58 @@ object SessionLogic {
       speechSeen: Boolean,
       lastPartialMs: Long,
       nEmitted: Int) {
-    def buffer: Vector[Byte] = segs.flatMap(_.bytes)
+    def buffer: Array[Byte] = bytesBefore(segs, Long.MaxValue)
     def bufferMs: Long = segs.map(_.durMs).sum
   }
 
   val empty: State = State(Vector.empty, 0L, 0L, false, Long.MinValue, 0)
 
-  /** Split buffered segments at time `t`: bytes strictly before `t` /
-    * segments from `t` on. A segment straddling `t` splits at the byte
-    * proportional to `t` WITHIN that segment (exact at chunk
-    * boundaries; proportional only inside one chunk). */
-  private def splitAt(segs: Vector[Seg], t: Long)
-      : (Vector[Byte], Vector[Seg]) = {
-    val emitted = Vector.newBuilder[Byte]
-    val kept = Vector.newBuilder[Seg]
+  /** Byte offset of time `t` within `s`: proportional to `t` WITHIN the
+    * segment (exact at chunk boundaries). */
+  private def cut(s: Seg, t: Long): Int =
+    if (t >= s.endMs) s.bytes.length
+    else if (t <= s.startMs) 0
+    else (s.bytes.length.toLong * (t - s.startMs) / s.durMs).toInt
+
+  /** The buffered bytes strictly before `t`, copied once into one array. */
+  private def bytesBefore(segs: Vector[Seg], t: Long): Array[Byte] = {
+    val out = new Array[Byte](segs.iterator.map(cut(_, t)).sum)
+    var pos = 0
     segs.foreach { s =>
-      if (s.endMs <= t) emitted ++= s.bytes
-      else if (s.startMs >= t) kept += s
-      else {
-        val n = (s.bytes.length.toLong * (t - s.startMs) / s.durMs).toInt
-        emitted ++= s.bytes.take(n)
-        kept += Seg(t, s.endMs - t, s.bytes.drop(n))
-      }
+      val n = cut(s, t)
+      System.arraycopy(s.bytes, 0, out, pos, n)
+      pos += n
     }
-    (emitted.result(), kept.result())
+    out
   }
+
+  /** The segments from `t` on; a segment straddling `t` keeps a copy of
+    * its suffix, re-pinned to start at `t`. */
+  private def segsFrom(segs: Vector[Seg], t: Long): Vector[Seg] =
+    segs.filter(_.endMs > t).map { s =>
+      if (s.startMs >= t) s
+      else Seg(t, s.endMs - t,
+        java.util.Arrays.copyOfRange(s.bytes, cut(s, t), s.bytes.length))
+    }
 
   def rms(bytes: Array[Byte]): Double =
     if (bytes.isEmpty) 0.0
-    else math.sqrt(bytes.map(b => (b & 0xff).toDouble * (b & 0xff)).sum /
-      bytes.length)
+    else {
+      var sum = 0.0
+      var i = 0
+      while (i < bytes.length) {
+        val v = (bytes(i) & 0xff).toDouble
+        sum += v * v
+        i += 1
+      }
+      math.sqrt(sum / bytes.length)
+    }
+
+  /** True when `st` carries nothing a later chunk would read: no
+    * buffered audio and no VAD or debounce history. Its time origin is
+    * reset by the next chunk, so the state store can drop it (W6). */
+  private[streaming] def isIdle(st: State): Boolean =
+    st.copy(bufferStartMs = empty.bufferStartMs) == empty
 
   /** Process one ordered slice of a session's chunks. Returns the new
     * state and the emitted events. Pure — no wall clock, no I/O. */
@@ -117,8 +157,7 @@ object SessionLogic {
           st.lastPartialMs != Long.MinValue &&
           upToMs - st.lastPartialMs < cfg.partialIntervalMs
         if (debounced) return
-        val (segBytes, _) = splitAt(st.segs, upToMs)
-        val (text, conf) = inferencer.transcribe(segBytes.toArray)
+        val (text, conf) = inferencer.transcribe(bytesBefore(st.segs, upToMs))
         out += TranscriptEvent(
           sessionId = sessionId,
           eventType = if (isFinal) "FINAL" else "PARTIAL",
@@ -130,7 +169,7 @@ object SessionLogic {
         val keepFromMs = if (isFinal) upToMs
           else math.max(st.bufferStartMs, upToMs - cfg.overlapMs)
         val keptSegs = if (isFinal) Vector.empty[Seg]
-          else splitAt(st.segs, keepFromMs)._2
+          else segsFrom(st.segs, keepFromMs)
         st = st.copy(segs = keptSegs, bufferStartMs = keepFromMs)
       }
     }
@@ -140,7 +179,7 @@ object SessionLogic {
       if (st.segs.isEmpty)
         st = st.copy(bufferStartMs = c.offsetMs)
       st = st.copy(segs =
-        st.segs :+ Seg(c.offsetMs, c.durationMs, c.content.toVector))
+        st.segs :+ Seg(c.offsetMs, c.durationMs, c.content))
       // VAD bookkeeping (P7 energy VAD, `stt_worker.py:522-536`).
       if (rms(c.content) < cfg.silenceRmsThreshold)
         st = st.copy(silenceMs = st.silenceMs + c.durationMs)
@@ -165,13 +204,16 @@ object SessionLogic {
 
   /** W5: timeout finalization — flush whatever remains. */
   def finalize(sessionId: String, state: State,
-      inferencer: Inferencer = SurrogateInferencer): Seq[TranscriptEvent] =
-    if (state.buffer.isEmpty) Seq.empty
+      inferencer: Inferencer = SurrogateInferencer)
+      : Seq[TranscriptEvent] = {
+    val buffer = state.buffer
+    if (buffer.isEmpty) Seq.empty
     else {
-      val (text, conf) = inferencer.transcribe(state.buffer.toArray)
+      val (text, conf) = inferencer.transcribe(buffer)
       Seq(TranscriptEvent(sessionId, "END_OF_UTTERANCE", text, conf,
         state.bufferStartMs, isPartial = false))
     }
+  }
 }
 
 object SessionProcessor {
@@ -187,29 +229,11 @@ object SessionProcessor {
   def attachEventTime(
       chunks: Dataset[AudioChunk],
       cfg: SessionLogic.Config = SessionLogic.Config(),
-      idleGapMs: Long = 300000L): Dataset[TranscriptEvent] = {
-    implicit val stateEnc = Encoders.kryo[SessionLogic.State]
-    implicit val outEnc = Encoders.product[TranscriptEvent]
-    chunks.groupByKey(_.sessionId)(Encoders.STRING)
-      .flatMapGroupsWithState[SessionLogic.State, TranscriptEvent](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (sid, it, gs: GroupState[SessionLogic.State]) =>
-          if (gs.hasTimedOut) {
-            val events = SessionLogic.finalize(sid,
-              gs.getOption.getOrElse(SessionLogic.empty))
-            gs.remove()
-            events.iterator
-          } else {
-            val batch = it.toSeq
-            val (next, events) = SessionLogic.step(sid, batch,
-              gs.getOption.getOrElse(SessionLogic.empty), cfg)
-            gs.update(next)
-            val lastEndMs = batch.map(c => c.offsetMs + c.durationMs).max
-            gs.setTimeoutTimestamp(lastEndMs + idleGapMs)
-            events.iterator
-          }
-      }
-  }
+      idleGapMs: Long = 300000L): Dataset[TranscriptEvent] =
+    sessionize(chunks, cfg, GroupStateTimeout.EventTimeTimeout()) {
+      (gs, batch) => gs.setTimeoutTimestamp(
+        batch.map(c => c.offsetMs + c.durationMs).max + idleGapMs)
+    }
 
   /** Wire the session logic into a (streaming or batch) Dataset. With a
     * streaming source use OutputMode.Append/Update and a checkpoint; the
@@ -222,26 +246,45 @@ object SessionProcessor {
   def attach(
       chunks: Dataset[AudioChunk],
       cfg: SessionLogic.Config = SessionLogic.Config(),
-      timeoutMs: Long = 300000L): Dataset[TranscriptEvent] = {
+      timeoutMs: Long = 300000L): Dataset[TranscriptEvent] =
+    sessionize(chunks, cfg,
+      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
+      else GroupStateTimeout.NoTimeout()) {
+      (gs, _) => if (timeoutMs > 0) gs.setTimeoutDuration(timeoutMs)
+    }
+
+  /** The state function behind both variants. Chunks are grouped by the
+    * `sessionId` column (a key read off the row, not a deserialized
+    * chunk); the state row is a Kryo-encoded [[SessionLogic.State]],
+    * whose segments write a length plus their raw bytes. A timed-out
+    * session flushes and is removed (W5); an idle state — one just reset
+    * by `isFinal` — is removed instead of stored (W6), and only a kept
+    * state has its timeout armed by `arm`. */
+  private def sessionize(
+      chunks: Dataset[AudioChunk],
+      cfg: SessionLogic.Config,
+      timeout: GroupStateTimeout)(
+      arm: (GroupState[SessionLogic.State], Seq[AudioChunk]) => Unit)
+      : Dataset[TranscriptEvent] = {
     implicit val stateEnc = Encoders.kryo[SessionLogic.State]
     implicit val outEnc = Encoders.product[TranscriptEvent]
-    val timeoutConf =
-      if (timeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    chunks.groupByKey(_.sessionId)(Encoders.STRING)
+    chunks.groupBy(col("sessionId"))
+      .as[String, AudioChunk](Encoders.STRING, Encoders.product[AudioChunk])
       .flatMapGroupsWithState[SessionLogic.State, TranscriptEvent](
-        OutputMode.Append(), timeoutConf) {
+        OutputMode.Append(), timeout) {
         case (sid, it, gs: GroupState[SessionLogic.State]) =>
+          val state = gs.getOption.getOrElse(SessionLogic.empty)
           if (gs.hasTimedOut) {
-            val events = SessionLogic.finalize(sid,
-              gs.getOption.getOrElse(SessionLogic.empty))
             gs.remove()
-            events.iterator
+            SessionLogic.finalize(sid, state).iterator
           } else {
-            val (next, events) = SessionLogic.step(sid, it.toSeq,
-              gs.getOption.getOrElse(SessionLogic.empty), cfg)
-            gs.update(next)
-            if (timeoutMs > 0) gs.setTimeoutDuration(timeoutMs)
+            val batch = it.toSeq
+            val (next, events) = SessionLogic.step(sid, batch, state, cfg)
+            if (SessionLogic.isIdle(next)) gs.remove()
+            else {
+              gs.update(next)
+              arm(gs, batch)
+            }
             events.iterator
           }
       }

@@ -73,6 +73,15 @@ class SessionLogicSpec extends SparkSpec {
     assert(a._1 == b._1)
   }
 
+  test("states holding distinct but equal byte arrays are equal values") {
+    val a = SessionLogic.step("s1", Seq(loud(0, 100)), SessionLogic.empty, cfg)._1
+    val b = SessionLogic.step("s1", Seq(loud(0, 100)), SessionLogic.empty, cfg)._1
+    assert(a.segs.head.bytes ne b.segs.head.bytes)
+    assert(a == b && a.hashCode == b.hashCode)
+    val c = SessionLogic.step("s1", Seq(quiet(0, 100)), SessionLogic.empty, cfg)._1
+    assert(a.copy(speechSeen = false, silenceMs = 100) != c)
+  }
+
   test("W5: timeout finalization flushes remainder as END_OF_UTTERANCE") {
     val (st, _) = SessionLogic.step("s1", Seq(loud(0, 100)), SessionLogic.empty, cfg)
     val events = SessionLogic.finalize("s1", st)

@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's t2 correctness gate.
 
-Usage: python3 tools/check_parity.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_parity.py <sfDir> <verifyOutDir> [names]
 
 Reads each <verifyOutDir>/<query>/ parquet (Spark side) and runs the
 matching SQL from <verifyOutDir>/oracle_sql.json in DuckDB with views
 named after the testdata tables in <sfDir>. Sorts columns by name,
 sorts rows, compares exactly. Dev tool only — never a library dep.
+
+[names] is the comma-separated query filter that graft.Verify takes as
+its third argument: only those queries are checked, and each of them
+must still have its output dir. An unknown name is an error. Without
+it, every query in oracle_sql.json is checked.
 """
 import json
 import math
@@ -42,12 +47,19 @@ def rows_key(cols, rows):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.exists():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.loads((Path(out_dir) / "oracle_sql.json").read_text())
+    if only is not None:
+        unknown = only - oracle.keys()
+        if unknown:
+            sys.exit("unknown query name(s) in filter: "
+                     + ", ".join(sorted(unknown)))
+        oracle = {k: v for k, v in oracle.items() if k in only}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         qdir = Path(out_dir) / name
