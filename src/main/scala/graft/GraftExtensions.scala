@@ -2,55 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.expressions.{FloatVectorDot, RollingFingerprint, SortedLongIntersectCount, TokenWindowHashes}
+import graft.expressions.Registration
 
-/** Session extensions for cluster deployment: ship the engine's native
-  * expressions to every session via
+/** Session extensions for cluster deployment: ship every native
+  * expression on [[Registration.natives]] to every session via
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`). Local callers can use
-  * the expressions' `register` helpers instead. */
+  * the expressions' `register` helpers instead, which read the same
+  * list. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_long_intersect_count"),
-      new ExpressionInfo(
-        classOf[SortedLongIntersectCount].getName,
-        null,
-        "sorted_long_intersect_count",
-        "sorted_long_intersect_count(a, b) - |A ∩ B| of two ascending sorted BIGINT arrays (merge scan, codegen).",
-        ""),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedLongIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("float_vector_dot"),
-      new ExpressionInfo(
-        classOf[FloatVectorDot].getName,
-        null,
-        "float_vector_dot",
-        "float_vector_dot(a, b) - fused dot product of two FLOAT arrays accumulated in DOUBLE (codegen).",
-        ""),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVectorDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_fingerprint"),
-      new ExpressionInfo(
-        classOf[RollingFingerprint].getName,
-        null,
-        "rolling_fingerprint",
-        "rolling_fingerprint(text[, k]) - struct(poly_hash, min_gram_hash, max_gram_hash, n_distinct_grams): Rabin-Karp fold + rolling k-gram sketch in one codegen'd scan.",
-        ""),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RollingFingerprint.build(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("token_window_hashes"),
-      new ExpressionInfo(
-        classOf[TokenWindowHashes].getName,
-        null,
-        "token_window_hashes",
-        "token_window_hashes(tokens[, k]) - array of polynomial hashes of every sliding k-token window (O(n) rolling scan, codegen).",
-        ""),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TokenWindowHashes.build(exprs)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Registration.natives.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name), f.info, f.build))
+    }
 }

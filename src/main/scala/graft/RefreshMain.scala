@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BucketedIndexMaintenance, DeltaDedupIndex,
+import graft.operators.{BucketedSnapshot, DeltaDedupIndex,
   DeltaSemDedupIndex, FuzzyVocabIndex, IndexCatalog, InvertedTextIndex,
   PerceptualDedupIndex, SelectionModelIndex, VideoClipIndex}
 
@@ -233,16 +233,16 @@ object RefreshMain {
     // retention pass: collapse the appended file generation back to
     // one file per bucket (the summary counts below read the
     // compacted tables — the swap must not change a row)
-    BucketedIndexMaintenance.compact(spark, "refresh_text_idx")
-    BucketedIndexMaintenance.compact(spark, "refresh_sem_idx")
-    BucketedIndexMaintenance.compact(spark, "refresh_search_idx")
-    BucketedIndexMaintenance.compact(spark, "refresh_search_idx_pos")
-    BucketedIndexMaintenance.compact(spark, "refresh_fuzzy_vocab")
-    BucketedIndexMaintenance.compact(spark, "refresh_fuzzy_keys")
-    BucketedIndexMaintenance.compact(spark, "refresh_phash_idx")
-    BucketedIndexMaintenance.compact(spark, "refresh_phash_idx_df")
-    BucketedIndexMaintenance.compact(spark, "refresh_vclip_idx")
-    BucketedIndexMaintenance.compact(spark, "refresh_vclip_idx_df")
+    BucketedSnapshot.compact(spark, "refresh_text_idx")
+    BucketedSnapshot.compact(spark, "refresh_sem_idx")
+    BucketedSnapshot.compact(spark, "refresh_search_idx")
+    BucketedSnapshot.compact(spark, "refresh_search_idx_pos")
+    BucketedSnapshot.compact(spark, "refresh_fuzzy_vocab")
+    BucketedSnapshot.compact(spark, "refresh_fuzzy_keys")
+    BucketedSnapshot.compact(spark, "refresh_phash_idx")
+    BucketedSnapshot.compact(spark, "refresh_phash_idx_df")
+    BucketedSnapshot.compact(spark, "refresh_vclip_idx")
+    BucketedSnapshot.compact(spark, "refresh_vclip_idx_df")
 
     val summary = Summary(
       textBatch = textBatch.count(),

@@ -66,6 +66,5 @@ case class FloatVectorDot(left: Expression, right: Expression)
 
 object FloatVectorDot {
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "float_vector_dot",
-      exprs => FloatVectorDot(exprs(0), exprs(1)))
+    Registration.once(spark, "float_vector_dot")
 }

@@ -192,7 +192,7 @@ object Md5PrefixLong {
   }
 
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "md5_prefix_long", build)
+    Registration.once(spark, "md5_prefix_long")
 }
 
 /** `md5_prefix_longs(arr, nHex)`: elementwise [[Md5PrefixLong]] over
@@ -233,7 +233,7 @@ object Md5PrefixLongs {
   }
 
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "md5_prefix_longs", build)
+    Registration.once(spark, "md5_prefix_longs")
 }
 
 /** `ngram_md5_longs(arr, n, nHex)`: md5-prefix hash of every size-`n`
@@ -279,7 +279,7 @@ object NgramMd5Longs {
   }
 
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "ngram_md5_longs", build)
+    Registration.once(spark, "ngram_md5_longs")
 }
 
 /** `minhash_sig(words)`: the 8 MinHash permutation minima over the
@@ -319,5 +319,5 @@ object MinHashSig {
   }
 
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "minhash_sig", build)
+    Registration.once(spark, "minhash_sig")
 }

@@ -47,7 +47,5 @@ case class OptimizerBarrier(child: Expression) extends UnaryExpression {
 object OptimizerBarrier {
   /** Register `opt_barrier(x)` for `expr(...)` use (idempotent). */
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "opt_barrier",
-      { case Seq(c) => OptimizerBarrier(c)
-        case _ => throw new IllegalArgumentException("opt_barrier(expr)") })
+    Registration.once(spark, "opt_barrier")
 }

@@ -2,9 +2,24 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-scoped, truly idempotent temp-function registration.
+/** One native SQL function: its name, implementing expression class,
+  * usage line, and builder over the call's argument expressions. */
+final case class NativeFunction(name: String, cls: Class[_ <: Expression],
+    usage: String, build: Seq[Expression] => Expression) {
+  def info: ExpressionInfo =
+    new ExpressionInfo(cls.getName, null, name, s"$name$usage", "")
+}
+
+/** The engine's native functions, and their session-scoped, truly
+  * idempotent temp-function registration.
+  *
+  * [[natives]] is the ONE list: `graft.GraftExtensions` injects every
+  * entry into sessions built with the extensions, and each
+  * expression's `register(spark)` helper registers its own entry by
+  * name — so an extensions-only cluster session and a locally
+  * registered one resolve the same functions.
   *
   * `createOrReplaceTempFunction` logs a "replaced a previously registered
   * function" WARN on every call after the first; queries register their
@@ -14,12 +29,52 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * in a session.
   */
 object Registration {
-  def once(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
+
+  val natives: Seq[NativeFunction] = Seq(
+    NativeFunction("sorted_long_intersect_count",
+      classOf[SortedLongIntersectCount],
+      "(a, b) - |A ∩ B| of two ascending sorted BIGINT arrays (merge scan, codegen).",
+      exprs => SortedLongIntersectCount(exprs(0), exprs(1))),
+    NativeFunction("float_vector_dot", classOf[FloatVectorDot],
+      "(a, b) - fused dot product of two FLOAT arrays accumulated in DOUBLE (codegen).",
+      exprs => FloatVectorDot(exprs(0), exprs(1))),
+    NativeFunction("rolling_fingerprint", classOf[RollingFingerprint],
+      "(text[, k]) - struct(poly_hash, min_gram_hash, max_gram_hash, n_distinct_grams): Rabin-Karp fold + rolling k-gram sketch in one codegen'd scan.",
+      RollingFingerprint.build),
+    NativeFunction("token_window_hashes", classOf[TokenWindowHashes],
+      "(tokens[, k]) - array of polynomial hashes of every sliding k-token window (O(n) rolling scan, codegen).",
+      TokenWindowHashes.build),
+    NativeFunction("opt_barrier", classOf[OptimizerBarrier],
+      "(expr) - expr, hidden from predicate pushdown (identity at run time).",
+      {
+        case Seq(c) => OptimizerBarrier(c)
+        case _ => throw new IllegalArgumentException("opt_barrier(expr)")
+      }),
+    NativeFunction("sign_lsh_sig", classOf[SignLshSig],
+      "(u) - 16-bit sign-LSH signature of a 64-dim micro-unit BIGINT vector (codegen).",
+      exprs => SignLshSig(exprs(0))),
+    NativeFunction("md5_prefix_long", classOf[Md5PrefixLong],
+      "(str, nHex) - the first nHex hex digits of md5(str) as a BIGINT (codegen).",
+      Md5PrefixLong.build),
+    NativeFunction("md5_prefix_longs", classOf[Md5PrefixLongs],
+      "(arr, nHex) - md5_prefix_long over each element of a string array.",
+      Md5PrefixLongs.build),
+    NativeFunction("ngram_md5_longs", classOf[NgramMd5Longs],
+      "(arr, n, nHex) - md5_prefix_long of every space-joined n-token window.",
+      NgramMd5Longs.build),
+    NativeFunction("minhash_sig", classOf[MinHashSig],
+      "(words) - the 8 MinHash permutation minima over the words' 32-bit md5-prefix hashes.",
+      MinHashSig.build))
+
+  private lazy val byName: Map[String, NativeFunction] =
+    natives.map(f => f.name -> f).toMap
+
+  /** Register the [[natives]] entry `name` in `spark`'s session, once. */
+  def once(spark: SparkSession, name: String): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!registry.functionExists(id)) {
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    if (!registry.functionExists(FunctionIdentifier(name))) {
+      registry.createOrReplaceTempFunction(name, byName(name).build,
+        "built-in")
     }
   }
 }

@@ -164,5 +164,5 @@ object RollingFingerprint {
   /** Register `rolling_fingerprint(text[, k])` for `expr(...)` use in
     * the current session (idempotent, no re-registration warning). */
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "rolling_fingerprint", build)
+    Registration.once(spark, "rolling_fingerprint")
 }

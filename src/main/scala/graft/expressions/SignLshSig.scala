@@ -97,6 +97,5 @@ object SignLshSig {
   private[expressions] val flatPlanes: Array[Int] = planeSign.flatten
 
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sign_lsh_sig",
-      exprs => SignLshSig(exprs(0)))
+    Registration.once(spark, "sign_lsh_sig")
 }

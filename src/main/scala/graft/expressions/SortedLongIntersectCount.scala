@@ -84,6 +84,5 @@ object SortedLongIntersectCount {
   /** Register `sorted_long_intersect_count(a, b)` for `expr(...)` use in
     * the current session (idempotent, no re-registration warning). */
   def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sorted_long_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)))
+    Registration.once(spark, "sorted_long_intersect_count")
 }

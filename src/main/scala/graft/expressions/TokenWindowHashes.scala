@@ -116,5 +116,5 @@ object TokenWindowHashes {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.once(spark, "token_window_hashes", build)
+    Registration.once(spark, "token_window_hashes")
 }

@@ -16,18 +16,6 @@ case class AudioChunk(
     durationMs: Long,
     isFinal: Boolean)
 
-/** A queued unit of work. Reference envelope shape:
-  * `src/grpc_server/server.py:99-108`, `src/queue/redis_queue.py:109-140`. */
-case class JobEnvelope(
-    jobType: String,
-    jobId: String,
-    sessionId: Option[String],
-    priority: Int, // 0=low 1=normal 2=high 3=realtime
-    enqueuedAtUs: Long,
-    deadlineUs: Long,
-    retryCount: Int,
-    payload: Array[Byte])
-
 /** Emitted transcript events: PARTIAL / FINAL / END_OF_UTTERANCE.
   * Reference: `protos/stream_process.proto:114-128`. */
 case class TranscriptEvent(
@@ -37,46 +25,3 @@ case class TranscriptEvent(
     confidence: Double,
     resultOffsetMs: Long,
     isPartial: Boolean)
-
-/** Flattened OCR block (reference nests Block→Line→Word;
-  * `protos/stream_process.proto:242-317`). */
-case class OcrBlock(
-    jobId: String,
-    blockIndex: Int,
-    text: String,
-    confidence: Double,
-    x: Double,
-    y: Double,
-    width: Double,
-    height: Double)
-
-/** Autoscaler metrics sample. Reference: `src/autoscaler/controller.py:39-53`. */
-case class WorkerMetrics(
-    workerType: String,
-    tsUs: Long,
-    queueDepth: Long,
-    arrivalRate: Double,
-    processingRate: Double,
-    utilization: Double,
-    lagMs: Double)
-
-/** Dead-letter record. Reference: `pkg/queue/redis_consumer.go:284-298`.
-  * The reference stores `failed_at` as epoch SECONDS (`time.Now().Unix()`,
-  * redis_consumer.go:296); we store microseconds — convert with
-  * `failedAtUs = unixSeconds * 1_000_000L` at the boundary. */
-case class DeadLetter(
-    jobId: String,
-    jobType: String,
-    finalError: String,
-    retryCount: Int,
-    failedAtUs: Long)
-
-/** State carried per session by the streaming sessionizer (W1-W8). */
-case class SessionBuffer(
-    samples: Vector[Double],
-    bufferedMs: Long,
-    emittedThroughMs: Long,
-    silenceMs: Long,
-    speechSeen: Boolean,
-    lastEmitUs: Long,
-    transcriptParts: Vector[String])

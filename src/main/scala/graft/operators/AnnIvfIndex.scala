@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,19 +37,6 @@ import graft.functions.VectorFunctions.norm
   * itself, executed once. */
 object AnnIvfIndex {
 
-  /** Corpus-table bucket sizing — [[DeltaSemDedupIndex.bucketsFor]]'s
-    * rule (one ~300 B row per vector, ≤ ~2²⁰ rows per bucket). */
-  private def bucketsFor(n: Long): Int = {
-    val target = (n + (1L << 20) - 1) >> 20
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
-
   private def centTable(table: String): String = table + "_cent"
 
   /** Micro-unit dim rows of (`idCol`, `embedding`) — q110's exact
@@ -86,12 +72,13 @@ object AnnIvfIndex {
     * probe. The assignment is the caller's coarse quantizer output —
     * labels (q33's contract) or a q125 Lloyd sweep. */
   def build(vecs: DataFrame, table: String, buckets: Int = 0): Unit = {
-    val nb = if (buckets > 0) buckets else bucketsFor(vecs.count())
-    vecs.select(col("vec_id"), col("cell"), col("embedding"),
-        norm(col("embedding")).as("nrm"))
-      .withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId))
-      .write.bucketBy(nb, "cell").sortBy("cell")
-      .mode("overwrite").saveAsTable(table)
+    // one ~300 B row per vector, ≤ ~2²⁰ rows per bucket
+    val nb = if (buckets > 0) buckets
+      else BucketedSnapshot.bucketsFor(vecs.count(), 1L << 20)
+    BucketedSnapshot.write(vecs.select(col("vec_id"), col("cell"),
+        col("embedding"), norm(col("embedding")).as("nrm"))
+      .withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId)),
+      table, nb, "cell")
     centroidsOf(vecs)
       .write.mode("overwrite").saveAsTable(centTable(table))
   }
@@ -134,7 +121,7 @@ object AnnIvfIndex {
     * restarts at the base generation). */
   def retrain(s: SparkSession, table: String,
       maxRounds: Int = 10, tolMoves: Long = 0L): Seq[Long] = {
-    val nb = bucketCountOf(s, table)
+    val nb = BucketedSnapshot.bucketCount(s, table)
     // embeddings + starting assignment, materialized OFF the table
     // (the rebuild below overwrites it — a lazy plan reading the same
     // table would race its own overwrite)
@@ -213,12 +200,10 @@ object AnnIvfIndex {
     if (skipExisting && InvertedTextIndex.hasBatch(s, table, batchId))
       return
     val assign = nearestCell(newVecs, s.table(centTable(table)))
-    newVecs.join(assign, "vec_id")
+    BucketedSnapshot.append(newVecs.join(assign, "vec_id")
       .select(col("vec_id"), col("cell"), col("embedding"),
         norm(col("embedding")).as("nrm"))
-      .withColumn("batch_id", lit(batchId))
-      .write.bucketBy(bucketCountOf(s, table), "cell").sortBy("cell")
-      .mode("append").saveAsTable(table)
+      .withColumn("batch_id", lit(batchId)), table, "cell")
   }
 
   /** Cell-balance audit — the IVF lifecycle trigger, completing the

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.queries.TextQueries
@@ -53,16 +52,8 @@ object DeltaDedupIndex {
     * bucket-pruned scan claim holds at snapshot scale — so target
     * ≤ ~2¹⁸ band rows (≈ 256 MB) per bucket, floor 8, rounded up to a
     * power of two (bucket joins only line up when counts divide). */
-  private[graft] def bucketsFor(snapshotDocs: Long): Int = {
-    val target = (2L * snapshotDocs + (1L << 18) - 1) >> 18
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
+  private[graft] def bucketsFor(snapshotDocs: Long): Int =
+    BucketedSnapshot.bucketsFor(2L * snapshotDocs, 1L << 18)
 
   /** Write the snapshot's band index as a bucketed+sorted table.
     * `docs` must have `doc_id` and `text`. `buckets` ≤ 0 (the default)
@@ -71,45 +62,26 @@ object DeltaDedupIndex {
     * corpus size (saves the sizing count job). */
   def build(docs: DataFrame, table: String, buckets: Int = 0): Unit = {
     val nb = if (buckets > 0) buckets else bucketsFor(docs.count())
-    bandRows(docs)
-      .write.bucketBy(nb, "bkey").sortBy("bkey")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(bandRows(docs), table, nb, "bkey")
   }
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedDocs`'
-    * (`doc_id`, `text`) band rows to the existing bucket layout. The
-    * bucket count is read from the catalog so the new files land in
-    * the same buckets the join prunes by; per-file sort order is
-    * preserved per appended file (the join's bucketed scan merges
-    * files per bucket). Callers append only docs that [[admit]]
-    * ADMITTED — appending a rejected near-dup would make the snapshot
-    * self-contradictory. */
+    * (`doc_id`, `text`) band rows to the existing bucket layout
+    * ([[BucketedSnapshot.append]]). Callers append only docs that
+    * [[admit]] ADMITTED — appending a rejected near-dup would make the
+    * snapshot self-contradictory. */
   def append(admittedDocs: DataFrame, table: String): Unit =
-    bandRows(admittedDocs)
-      .write.bucketBy(bucketCountOf(admittedDocs.sparkSession, table), "bkey")
-      .sortBy("bkey").mode("append").saveAsTable(table)
+    BucketedSnapshot.append(bandRows(admittedDocs), table, "bkey")
 
   /** Layout audit — the lifecycle counterpart of
     * [[DeltaSemDedupIndex.occupancy]] for the band index. Band dedup
     * has no occupancy drift (band keys spread as the corpus grows),
-    * but every [[append]] grows the same fixed bucket set, so
-    * rows-per-bucket walks away from the [[bucketsFor]] sizing target
-    * and the "bucket stays a few hundred MB" scan claim erodes. One
-    * count over the index: row count, deployed buckets, rows per
-    * bucket, and `rebucket_due` once rows-per-bucket exceeds 2× the
-    * target — the next snapshot cut then goes through [[build]]
-    * (which re-derives the bucket count) instead of another append.
-    * `targetRowsPerBucket` defaults to the [[bucketsFor]] constant. */
+    * so its one signal is [[BucketedSnapshot.layoutAudit]]'s
+    * rows-per-bucket growth against the [[bucketsFor]] constant. */
   def layoutAudit(s: SparkSession, table: String,
-      targetRowsPerBucket: Long = 1L << 18): DataFrame = {
-    val deployed = bucketCountOf(s, table)
-    s.table(table).agg(count(lit(1)).as("n_band_rows"))
-      .select(col("n_band_rows"), lit(deployed.toLong).as("buckets"),
-        expr(s"n_band_rows div ${deployed.toLong}L").as("rows_per_bucket"),
-        lit(targetRowsPerBucket).as("target_rows_per_bucket"),
-        (col("n_band_rows") > lit(2L * targetRowsPerBucket) * deployed)
-          .as("rebucket_due"))
-  }
+      targetRowsPerBucket: Long = 1L << 18): DataFrame =
+    BucketedSnapshot.layoutAudit(s, table, "n_band_rows",
+      targetRowsPerBucket)
 
   /** Admit an incoming batch (`doc_id`, `source`, `text`) against the
     * prebuilt index: q173's per-doc verdict frame (match count, first

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.queries.VectorQueries
@@ -41,16 +40,8 @@ object DeltaSemDedupIndex {
   /** Bucket sizing rule: one index row per vector (~300 B: 64-float
     * embedding + norm + cell), so target ≤ ~2²⁰ rows (≈ 300 MB) per
     * bucket, floor 8, rounded up to a power of two. */
-  private[graft] def bucketsFor(snapshotVecs: Long): Int = {
-    val target = (snapshotVecs + (1L << 20) - 1) >> 20
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private[operators] def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
+  private[graft] def bucketsFor(snapshotVecs: Long): Int =
+    BucketedSnapshot.bucketsFor(snapshotVecs, 1L << 20)
 
   /** The deployed grid, recovered from the index itself: a 1-row
     * (n_cells_cap, nbits) frame (broadcast at use sites). Stored
@@ -82,11 +73,9 @@ object DeltaSemDedupIndex {
     val s = vecs.sparkSession
     val n = if (gridN > 0) gridN else vecs.count()
     val nb = if (buckets > 0) buckets else bucketsFor(n)
-    cellRows(vecs, VectorQueries.gridCapRowFor(s, n))
+    BucketedSnapshot.write(cellRows(vecs, VectorQueries.gridCapRowFor(s, n))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("nbits"))
-      .write.bucketBy(nb, "cell").sortBy("cell")
-      .mode("overwrite").saveAsTable(table)
+        col("nbits")), table, nb, "cell")
   }
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedVecs`'
@@ -96,11 +85,9 @@ object DeltaSemDedupIndex {
     * only vectors [[admit]] ADMITTED. */
   def append(admittedVecs: DataFrame, table: String): Unit = {
     val s = admittedVecs.sparkSession
-    cellRows(admittedVecs, deployedGrid(s, table))
+    BucketedSnapshot.append(cellRows(admittedVecs, deployedGrid(s, table))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
-        col("nbits"))
-      .write.bucketBy(bucketCountOf(s, table), "cell").sortBy("cell")
-      .mode("append").saveAsTable(table)
+        col("nbits")), table, "cell")
   }
 
   /** Occupancy audit under the DEPLOYED grid — the operator form of

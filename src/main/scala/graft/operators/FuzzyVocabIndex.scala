@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,22 +44,16 @@ import graft.queries.RetrievalQueries
   * and the short-probe guard. */
 object FuzzyVocabIndex {
 
+  import BucketedSnapshot.withBucketedScan
+
   private def vocabTable(table: String): String = table + "_vocab"
 
   private def keysTable(table: String): String = table + "_keys"
 
   /** Deletion-key rows stay small (two short strings); reuse the
     * ≤ ~2²⁰-rows-per-bucket sizing rule on the key count Σ(len(w)+1). */
-  private def bucketsFor(nRows: Long): Int = {
-    val target = (nRows + (1L << 20) - 1) >> 20
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
+  private def bucketsFor(nRows: Long): Int =
+    BucketedSnapshot.bucketsFor(nRows, 1L << 20)
 
   /** (w, df): the slice's word → containing-doc count. */
   private def vocabRows(docs: DataFrame): DataFrame =
@@ -93,13 +86,13 @@ object FuzzyVocabIndex {
       if (buckets > 0) buckets else bucketsFor(sizes.getAs[Long]("n_vocab"))
     val kb =
       if (buckets > 0) buckets else bucketsFor(sizes.getAs[Long]("n_keys"))
-    vocab.withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId))
-      .write.bucketBy(vb, "w").sortBy("w")
-      .mode("overwrite").saveAsTable(vocabTable(table))
-    keyRows(s.table(vocabTable(table)).select(col("w")))
-      .withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId))
-      .write.bucketBy(kb, "k").sortBy("k")
-      .mode("overwrite").saveAsTable(keysTable(table))
+    BucketedSnapshot.write(
+      vocab.withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId)),
+      vocabTable(table), vb, "w")
+    BucketedSnapshot.write(
+      keyRows(s.table(vocabTable(table)).select(col("w")))
+        .withColumn("batch_id", lit(InvertedTextIndex.BaseBatchId)),
+      keysTable(table), kb, "k")
   }
 
   /** Advance the dictionary WITHOUT a rebuild: the slice's (w, df)
@@ -135,53 +128,21 @@ object FuzzyVocabIndex {
       val newWords = vocab.join(
         s.table(vocabTable(table)).select(col("w")).distinct(),
         Seq("w"), "left_anti")
-      keyRows(newWords)
-        .withColumn("batch_id", lit(batchId))
-        .write.bucketBy(bucketCountOf(s, keysTable(table)), "k")
-        .sortBy("k").mode("append").saveAsTable(keysTable(table))
+      BucketedSnapshot.append(
+        keyRows(newWords).withColumn("batch_id", lit(batchId)),
+        keysTable(table), "k")
     }
     if (need(vocabTable(table)))
-      vocab.withColumn("batch_id", lit(batchId))
-        .write.bucketBy(bucketCountOf(s, vocabTable(table)), "w")
-        .sortBy("w").mode("append").saveAsTable(vocabTable(table))
+      BucketedSnapshot.append(vocab.withColumn("batch_id", lit(batchId)),
+        vocabTable(table), "w")
   }
 
-  /** Layout audit — rows-per-bucket vs the sizing target on the key
-    * table (the one that grows a deletion neighborhood per new word),
-    * `rebucket_due` at 2× — the lifecycle trigger every graft index
-    * carries. */
+  /** Layout audit — [[BucketedSnapshot.layoutAudit]] on the key table
+    * (the one that grows a deletion neighborhood per new word). */
   def layoutAudit(s: SparkSession, table: String,
-      targetRowsPerBucket: Long = 1L << 20): DataFrame = {
-    val deployed = bucketCountOf(s, keysTable(table))
-    s.table(keysTable(table)).agg(count(lit(1)).as("n_keys"))
-      .select(col("n_keys"), lit(deployed.toLong).as("buckets"),
-        expr(s"n_keys div ${deployed.toLong}L").as("rows_per_bucket"),
-        lit(targetRowsPerBucket).as("target_rows_per_bucket"),
-        (col("n_keys") > lit(2L * targetRowsPerBucket) * deployed)
-          .as("rebucket_due"))
-  }
-
-  /** Pin bucketed scans ON for an eagerly-executed lookup stage:
-    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading for
-    * a filter-only subplan (nothing downstream wants the
-    * partitioning), which silently forfeits the BUCKET PRUNING the key
-    * layout exists for — the In-filter would fall back to opening
-    * every bucket file's footer. Scoped and restored, never leaked —
-    * but the toggle is SESSION-scoped (runtime SQLConf), so a query
-    * running CONCURRENTLY on the same SparkSession inside this window
-    * would see bucketed scans pinned on too (behavior, not results: the
-    * flag never changes answers). Serving fronts that multiplex one
-    * session across threads should issue lookups from a
-    * `spark.newSession()` clone, which snapshots its own conf. */
-  private def withBucketedScan[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      targetRowsPerBucket: Long = 1L << 20): DataFrame =
+    BucketedSnapshot.layoutAudit(s, keysTable(table), "n_keys",
+      targetRowsPerBucket)
 
   /** Fuzzy-match a probe batch (`q_doc`, `probe`) against the
     * dictionary — q188's frame (q_doc, probe, n_matches, best_word,

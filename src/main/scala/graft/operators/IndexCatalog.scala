@@ -19,7 +19,7 @@ import graft.streaming.StreamingIndexFreshness
   * `files_per_bucket_x100` is the RETENTION signal every bucketed
   * index shares: appends accumulate one file generation per batch, so
   * a growing files/bucket ratio is the "run
-  * [[BucketedIndexMaintenance.compact]]" trigger, read from the
+  * [[BucketedSnapshot.compact]]" trigger, read from the
   * table's file listing (driver-side metadata, not a scan).
   *
   * Kinds and their mapped audits:
@@ -51,11 +51,6 @@ object IndexCatalog {
   private def fileCount(s: SparkSession, table: String): Long =
     try s.table(table).inputFiles.length.toLong
     catch { case _: Throwable => -1L }
-
-  private def bucketCount(s: SparkSession, table: String): Long =
-    s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets.toLong).getOrElse(0L)
 
   /** One normalized audit row for `e` (see object doc). */
   private def rowFor(s: SparkSession, e: Entry): DataFrame = {
@@ -123,7 +118,8 @@ object IndexCatalog {
       case other =>
         throw new IllegalArgumentException(s"unknown index kind: $other")
     }
-    val buckets = bucketCount(s, physical)
+    val buckets =
+      BucketedSnapshot.bucketCountOption(s, physical).getOrElse(0).toLong
     val files = fileCount(s, physical)
     audited.select(
       lit(e.table).as("index"), lit(e.kind).as("kind"),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,6 +38,8 @@ import graft.queries.RetrievalQueries
   */
 object InvertedTextIndex {
 
+  import BucketedSnapshot.withBucketedScan
+
   private def metaTable(table: String): String = table + "_meta"
 
   private def posTable(table: String): String = table + "_pos"
@@ -51,16 +52,8 @@ object InvertedTextIndex {
     * line up when counts divide). Sized from the corpus' summed doc
     * length — an upper bound on distinct (doc, token) pairs that the
     * caller's meta aggregate already computed. */
-  private[graft] def bucketsFor(sumTokens: Long): Int = {
-    val target = (sumTokens + (1L << 20) - 1) >> 20
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
+  private[graft] def bucketsFor(sumTokens: Long): Int =
+    BucketedSnapshot.bucketsFor(sumTokens, 1L << 20)
 
   /** One meta row for a corpus slice: (n_docs, sum_dl). */
   private def metaRow(docs: DataFrame): DataFrame =
@@ -135,22 +128,17 @@ object InvertedTextIndex {
     val nb =
       if (buckets > 0) buckets
       else bucketsFor(metaVal.getAs[Long]("sum_dl"))
-    RetrievalQueries.postingRows(docs)
-      .withColumn("batch_id", lit(BaseBatchId))
-      .write.bucketBy(nb, "wh").sortBy("wh")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(RetrievalQueries.postingRows(docs)
+      .withColumn("batch_id", lit(BaseBatchId)), table, nb, "wh")
     docs.sparkSession.createDataFrame(Seq(metaVal).asJava, metaPlan.schema)
       .write.mode("overwrite").saveAsTable(metaTable(table))
     if (positional)
-      RetrievalQueries.positionRows(docs)
-        .withColumn("batch_id", lit(BaseBatchId))
-        .write.bucketBy(nb, "wh").sortBy("wh")
-        .mode("overwrite").saveAsTable(posTable(table))
+      BucketedSnapshot.write(RetrievalQueries.positionRows(docs)
+        .withColumn("batch_id", lit(BaseBatchId)), posTable(table), nb, "wh")
     if (forward)
-      forwardRows(docs)
-        .withColumn("batch_id", lit(BaseBatchId))
-        .write.bucketBy(nb, "doc_id").sortBy("doc_id")
-        .mode("overwrite").saveAsTable(fwdTable(table))
+      BucketedSnapshot.write(forwardRows(docs)
+        .withColumn("batch_id", lit(BaseBatchId)), fwdTable(table), nb,
+        "doc_id")
   }
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedDocs`'
@@ -173,50 +161,39 @@ object InvertedTextIndex {
     def need(t: String): Boolean =
       !skipExisting || !hasBatch(s, t, batchId)
     if (need(table))
-      RetrievalQueries.postingRows(admittedDocs)
-        .withColumn("batch_id", lit(batchId))
-        .write.bucketBy(bucketCountOf(s, table), "wh")
-        .sortBy("wh").mode("append").saveAsTable(table)
+      BucketedSnapshot.append(RetrievalQueries.postingRows(admittedDocs)
+        .withColumn("batch_id", lit(batchId)), table, "wh")
     // positional/forward companions, when deployed, advance in the
     // same cut; the meta row goes LAST so a crash mid-family always
     // leaves meta ≤ data (reconcile()'s drift signal stays one-sided)
     if (s.catalog.tableExists(posTable(table)) && need(posTable(table)))
-      RetrievalQueries.positionRows(admittedDocs)
-        .withColumn("batch_id", lit(batchId))
-        .write.bucketBy(bucketCountOf(s, posTable(table)), "wh")
-        .sortBy("wh").mode("append").saveAsTable(posTable(table))
+      BucketedSnapshot.append(RetrievalQueries.positionRows(admittedDocs)
+        .withColumn("batch_id", lit(batchId)), posTable(table), "wh")
     if (s.catalog.tableExists(fwdTable(table)) && need(fwdTable(table)))
-      forwardRows(admittedDocs)
-        .withColumn("batch_id", lit(batchId))
-        .write.bucketBy(bucketCountOf(s, fwdTable(table)), "doc_id")
-        .sortBy("doc_id").mode("append").saveAsTable(fwdTable(table))
+      BucketedSnapshot.append(forwardRows(admittedDocs)
+        .withColumn("batch_id", lit(batchId)), fwdTable(table), "doc_id")
     if (need(metaTable(table)))
       metaRow(admittedDocs).withColumn("batch_id", lit(batchId))
         .write.mode("append").saveAsTable(metaTable(table))
   }
 
-  /** Layout audit — rows-per-bucket vs the [[bucketsFor]] sizing
-    * target, `rebucket_due` at 2×, plus the retrieval-specific drift
-    * signal: `hot_df_bp`, the hottest posting list's document share in
-    * basis points. A token drifting toward stopword df makes its
-    * bucket's pruned-scan claim erode first — the next snapshot cut
-    * then rebuilds (and the caller's stop-token list grows). */
+  /** Layout audit — [[BucketedSnapshot.layoutAudit]]'s rows-per-bucket
+    * vs the [[bucketsFor]] sizing target, plus the retrieval-specific
+    * drift signal: `hot_df_bp`, the hottest posting list's document
+    * share in basis points. A token drifting toward stopword df makes
+    * its bucket's pruned-scan claim erode first — the next snapshot
+    * cut then rebuilds (and the caller's stop-token list grows). */
   def layoutAudit(s: SparkSession, table: String,
       targetRowsPerBucket: Long = 1L << 20): DataFrame = {
-    val deployed = bucketCountOf(s, table)
     val hot = s.table(table).groupBy(col("wh"))
       .agg(count(lit(1)).as("df"))
       .agg(max(col("df")).as("max_df"))
-    s.table(table).agg(count(lit(1)).as("n_postings"))
+    BucketedSnapshot.layoutAudit(s, table, "n_postings", targetRowsPerBucket)
       .crossJoin(broadcast(hot))
       .crossJoin(broadcast(
         s.table(metaTable(table)).agg(sum(col("n_docs")).as("n_docs"))))
-      .select(col("n_postings"), lit(deployed.toLong).as("buckets"),
-        expr(s"n_postings div ${deployed.toLong}L").as("rows_per_bucket"),
-        lit(targetRowsPerBucket).as("target_rows_per_bucket"),
-        (col("n_postings") > lit(2L * targetRowsPerBucket) * deployed)
-          .as("rebucket_due"),
-        expr("(10000L * max_df) div n_docs").as("hot_df_bp"))
+      .withColumn("hot_df_bp", expr("(10000L * max_df) div n_docs"))
+      .drop("max_df", "n_docs")
   }
 
   /** Ceiling on the literal IN-list the workload's distinct token
@@ -242,26 +219,6 @@ object InvertedTextIndex {
     if (keys.size <= maxInList) idx.filter(col(keyCol).isin(keys: _*))
     else idx.join(broadcast(keyFrame.select(col(keyCol)).distinct()),
       Seq(keyCol), "left_semi")
-
-  /** Pin bucketed scans ON for an eagerly-executed serving stage:
-    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading
-    * when no downstream operator wants the partitioning — which
-    * forfeits the BUCKET PRUNING these lookups exist for (notably the
-    * `_fwd` fetches, whose subplans are filter-only). Scoped and
-    * restored, never leaked — but SESSION-scoped (runtime SQLConf): a
-    * concurrent query on the same SparkSession sees bucketed scans
-    * pinned on during the window (behavior only — results never
-    * change). Multi-threaded serving fronts should run lookups on a
-    * `spark.newSession()` clone, which snapshots its own conf. */
-  private def withBucketedScan[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** Top-k keyword search against the prebuilt index. `queries` must
     * have `q_doc` and `text`; output is q180's frame (q_doc, rk,

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** MATERIALIZED perceptual-fingerprint snapshot index — the
@@ -122,16 +121,9 @@ object PerceptualDedupIndex {
 
   /** Sizing rule: blocks+1 rows per fingerprint, ≤ ~2^18 rows per
     * bucket (the DeltaDedupIndex constant), floor 8, power of two. */
-  private[graft] def bucketsFor(lo: Layout, fingerprints: Long): Int = {
-    val target = ((lo.blocks + 1).toLong * fingerprints + (1L << 18) - 1) >> 18
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
-
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
+  private[graft] def bucketsFor(lo: Layout, fingerprints: Long): Int =
+    BucketedSnapshot.bucketsFor((lo.blocks + 1).toLong * fingerprints,
+      1L << 18)
 
   /** Write the snapshot's fingerprint index (+ df sidecar) as bucketed
     * tables. `sig` must have `id` and lane columns `l0..l3` (audio
@@ -141,13 +133,11 @@ object PerceptualDedupIndex {
     val nb = if (buckets > 0) buckets
       else bucketsFor(lo, sig.select(laneCols: _*).distinct().count())
     val rows = indexRows(lo, sig)
-    rows.write.bucketBy(nb, "bkey").sortBy("bkey")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(rows, table, nb, "bkey")
     // counts re-read from the WRITTEN table (one bucket-local pass) so
     // the sidecar can never drift from what actually landed
-    dfRows(rows.sparkSession.table(table))
-      .write.bucketBy(nb, "bkey").sortBy("bkey")
-      .mode("overwrite").saveAsTable(table + "_df")
+    BucketedSnapshot.write(dfRows(rows.sparkSession.table(table)),
+      table + "_df", nb, "bkey")
   }
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedSig`'s
@@ -155,7 +145,7 @@ object PerceptualDedupIndex {
     * layout. */
   def append(lo: Layout, admittedSig: DataFrame, table: String): Unit = {
     val s = admittedSig.sparkSession
-    val nb = bucketCountOf(s, table)
+    val nb = BucketedSnapshot.bucketCount(s, table)
     // The index rows and their sidecar generation must come from the
     // SAME execution (ADVICE r16 #3): build() guarantees that by
     // re-reading the written table, but an append cannot isolate its
@@ -165,10 +155,8 @@ object PerceptualDedupIndex {
     // writes can then never land a sidecar that disagrees with the
     // rows. Batch-sized (blocks+1 rows per admitted fingerprint).
     val rows = indexRows(lo, admittedSig).localCheckpoint()
-    rows.write.bucketBy(nb, "bkey").sortBy("bkey")
-      .mode("append").saveAsTable(table)
-    dfRows(rows).write.bucketBy(nb, "bkey").sortBy("bkey")
-      .mode("append").saveAsTable(table + "_df")
+    BucketedSnapshot.write(rows, table, nb, "bkey", "append")
+    BucketedSnapshot.write(dfRows(rows), table + "_df", nb, "bkey", "append")
   }
 
   /** Admit a batch (`id`, `l0..l3`) against the snapshot: one verdict
@@ -226,18 +214,9 @@ object PerceptualDedupIndex {
         (coalesce(col("n_matches"), lit(0L)) === 0).as("admitted"))
   }
 
-  /** Layout audit — the band-index lifecycle shape: appends grow the
-    * fixed bucket set, so rows/bucket walking past 2× the sizing
-    * target flags the next snapshot cut for a re-bucketing [[build]].
-    * Joins [[IndexCatalog]] as kind `phash`. */
+  /** Layout audit — [[BucketedSnapshot.layoutAudit]] over the block
+    * rows. Joins [[IndexCatalog]] as kind `phash`. */
   def layoutAudit(s: SparkSession, table: String,
-      targetRowsPerBucket: Long = 1L << 18): DataFrame = {
-    val deployed = bucketCountOf(s, table)
-    s.table(table).agg(count(lit(1)).as("n_fp_rows"))
-      .select(col("n_fp_rows"), lit(deployed.toLong).as("buckets"),
-        expr(s"n_fp_rows div ${deployed.toLong}L").as("rows_per_bucket"),
-        lit(targetRowsPerBucket).as("target_rows_per_bucket"),
-        (col("n_fp_rows") > lit(2L * targetRowsPerBucket) * deployed)
-          .as("rebucket_due"))
-  }
+      targetRowsPerBucket: Long = 1L << 18): DataFrame =
+    BucketedSnapshot.layoutAudit(s, table, "n_fp_rows", targetRowsPerBucket)
 }

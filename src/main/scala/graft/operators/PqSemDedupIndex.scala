@@ -39,11 +39,9 @@ import graft.queries.VectorQueries
 object PqSemDedupIndex {
 
   /** PQ rows are ~40 B (vs ~300 B full-precision), so ~2²³ rows
-    * (~320 MB) per bucket, floor 8, power of two. */
-  private[graft] def bucketsFor(snapshotVecs: Long): Int = {
-    val target = (snapshotVecs + (1L << 23) - 1) >> 23
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
+    * (~320 MB) per bucket. */
+  private[graft] def bucketsFor(snapshotVecs: Long): Int =
+    BucketedSnapshot.bucketsFor(snapshotVecs, 1L << 23)
 
   private def cbTable(table: String): String = table + "_cb"
 
@@ -91,9 +89,8 @@ object PqSemDedupIndex {
     val cells = DeltaSemDedupIndex
       .cellRows(vecs, VectorQueries.gridCapRowFor(s, n))
       .select(col("vec_id"), col("nrm"), col("cell"), col("nbits"))
-    cells.join(encode(dims, cw, rmeta), "vec_id")
-      .write.bucketBy(nb, "cell").sortBy("cell")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(cells.join(encode(dims, cw, rmeta), "vec_id"),
+      table, nb, "cell")
   }
 
   /** Advance the snapshot without a rebuild: encode `admittedVecs`
@@ -106,10 +103,9 @@ object PqSemDedupIndex {
     val cells = DeltaSemDedupIndex
       .cellRows(admittedVecs, DeltaSemDedupIndex.deployedGrid(s, table))
       .select(col("vec_id"), col("nrm"), col("cell"), col("nbits"))
-    cells.join(encode(VectorQueries.pqDims(admittedVecs), cw, rmeta),
-        "vec_id")
-      .write.bucketBy(DeltaSemDedupIndex.bucketCountOf(s, table), "cell")
-      .sortBy("cell").mode("append").saveAsTable(table)
+    BucketedSnapshot.append(
+      cells.join(encode(VectorQueries.pqDims(admittedVecs), cw, rmeta),
+        "vec_id"), table, "cell")
   }
 
   /** Admit an incoming batch (`vec_id`, `label`, `embedding`) against

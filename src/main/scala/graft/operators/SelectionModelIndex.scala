@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingSelection
@@ -55,12 +54,6 @@ import graft.streaming.StreamingSelection
   */
 object SelectionModelIndex {
 
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
-
   private def nextSeq(s: SparkSession, metaTable: String): Long =
     if (!s.catalog.tableExists(metaTable)) 1L
     else s.table(metaTable)
@@ -78,8 +71,7 @@ object SelectionModelIndex {
     val m = StreamingSelection.trainModel(
       labeled.filter(col("is_train"))
         .select(col("doc_id"), col("text"), col("label")))
-    m.grams.write.bucketBy(buckets, "h").sortBy("h")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(m.grams, table, buckets, "h")
     val dsir = labeled
       .withColumn("w", expr("split(text, ' ')"))
       .filter(size(col("w")) >= 2)
@@ -87,8 +79,7 @@ object SelectionModelIndex {
         explode(expr("ngram_md5_longs(w, 2, 15)")).as("h"))
       .groupBy((col("h") % 1024L).as("b"))
       .agg(count(lit(1)).as("c_r"), sum(col("label").cast("long")).as("c_t"))
-    dsir.write.bucketBy(8, "b").sortBy("b")
-      .mode("overwrite").saveAsTable(table + "_dsir")
+    BucketedSnapshot.write(dsir, table + "_dsir", 8, "b")
     val dtot = s.table(table + "_dsir")
       .agg(coalesce(sum(col("c_r")), lit(0L)),
         coalesce(sum(col("c_t")), lit(0L))).head()
@@ -203,7 +194,7 @@ object SelectionModelIndex {
     * audit yet → drift 0, not due). */
   def layoutAudit(s: SparkSession, table: String,
       driftBp: Long = 500L): DataFrame = {
-    val deployed = bucketCountOf(s, table)
+    val deployed = BucketedSnapshot.bucketCount(s, table)
     val meta = s.table(table + "_meta")
     val trainRow = meta.filter(col("kind") === "train")
       .orderBy(col("seq").desc).select(col("seq"), col("agree_bp")).head()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 /** MATERIALIZED video clip-match snapshot index (VERDICT r16 #5): the
@@ -60,18 +59,10 @@ object VideoClipIndex {
     * at one consistent offset (q214). */
   val MinMatch = 4
 
-  private def bucketCountOf(s: SparkSession, table: String): Int =
-    s.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed index table"))
-
   /** Sizing rule: ≤ ~2^18 frame rows per bucket (the DeltaDedupIndex
-    * constant), floor 8, power of two. */
-  private[graft] def bucketsFor(frameRows: Long): Int = {
-    val target = (frameRows + (1L << 18) - 1) >> 18
-    math.max(8, Integer.highestOneBit(math.max(1, target - 1).toInt) * 2)
-  }
+    * constant). */
+  private[graft] def bucketsFor(frameRows: Long): Int =
+    BucketedSnapshot.bucketsFor(frameRows, 1L << 18)
 
   /** Sidecar generation: (fhash, df) — distinct vids per hash in THIS
     * build/append's rows. */
@@ -83,13 +74,11 @@ object VideoClipIndex {
   def build(frames: DataFrame, table: String, buckets: Int = 0): Unit = {
     val rows = frames.select(col("fhash"), col("vid"), col("pos"))
     val nb = if (buckets > 0) buckets else bucketsFor(rows.count())
-    rows.write.bucketBy(nb, "fhash").sortBy("fhash")
-      .mode("overwrite").saveAsTable(table)
+    BucketedSnapshot.write(rows, table, nb, "fhash")
     // sidecar re-derived from the WRITTEN table (one bucket-local
     // aggregation) so it can never drift from what actually landed
-    dfRows(rows.sparkSession.table(table))
-      .write.bucketBy(nb, "fhash").sortBy("fhash")
-      .mode("overwrite").saveAsTable(table + "_df")
+    BucketedSnapshot.write(dfRows(rows.sparkSession.table(table)),
+      table + "_df", nb, "fhash")
   }
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedFrames`'
@@ -100,13 +89,11 @@ object VideoClipIndex {
     * from the SAME execution. */
   def append(admittedFrames: DataFrame, table: String): Unit = {
     val s = admittedFrames.sparkSession
-    val nb = bucketCountOf(s, table)
+    val nb = BucketedSnapshot.bucketCount(s, table)
     val rows = admittedFrames.select(col("fhash"), col("vid"), col("pos"))
       .localCheckpoint()
-    rows.write.bucketBy(nb, "fhash").sortBy("fhash")
-      .mode("append").saveAsTable(table)
-    dfRows(rows).write.bucketBy(nb, "fhash").sortBy("fhash")
-      .mode("append").saveAsTable(table + "_df")
+    BucketedSnapshot.write(rows, table, nb, "fhash", "append")
+    BucketedSnapshot.write(dfRows(rows), table + "_df", nb, "fhash", "append")
   }
 
   /** The alignment relation of a batch (`vid`, `pos`, `fhash`) against
@@ -160,18 +147,10 @@ object VideoClipIndex {
         (coalesce(col("n_matches"), lit(0L)) === 0).as("admitted"))
   }
 
-  /** Layout audit — the band-index lifecycle shape: appends grow the
-    * fixed bucket set, so rows/bucket walking past 2× the sizing
-    * target flags the next snapshot cut for a re-bucketing [[build]].
-    * Joins [[IndexCatalog]] as kind `vclip`. */
+  /** Layout audit — [[BucketedSnapshot.layoutAudit]] over the frame
+    * rows. Joins [[IndexCatalog]] as kind `vclip`. */
   def layoutAudit(s: SparkSession, table: String,
-      targetRowsPerBucket: Long = 1L << 18): DataFrame = {
-    val deployed = bucketCountOf(s, table)
-    s.table(table).agg(count(lit(1)).as("n_frame_rows"))
-      .select(col("n_frame_rows"), lit(deployed.toLong).as("buckets"),
-        expr(s"n_frame_rows div ${deployed.toLong}L").as("rows_per_bucket"),
-        lit(targetRowsPerBucket).as("target_rows_per_bucket"),
-        (col("n_frame_rows") > lit(2L * targetRowsPerBucket) * deployed)
-          .as("rebucket_due"))
-  }
+      targetRowsPerBucket: Long = 1L << 18): DataFrame =
+    BucketedSnapshot.layoutAudit(s, table, "n_frame_rows",
+      targetRowsPerBucket)
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BucketedIndexMaintenance, DeltaDedupIndex}
+import graft.operators.{BucketedSnapshot, DeltaDedupIndex}
 
 /** Compaction must be a pure FILE-LAYOUT change: after several appends
   * a bucket holds one file per append; compact collapses the table to
@@ -55,7 +55,7 @@ class BucketedIndexMaintenanceSpec extends SparkSpec {
           org.apache.spark.sql.catalyst.TableIdentifier("cmp_idx"))
         .bucketSpec.get
 
-      BucketedIndexMaintenance.compact(spark, "cmp_idx")
+      BucketedSnapshot.compact(spark, "cmp_idx")
 
       val specAfter = spark.sessionState.catalog
         .getTableMetadata(
