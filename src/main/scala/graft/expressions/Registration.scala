@@ -53,6 +53,9 @@ object Registration {
     NativeFunction("sign_lsh_sig", classOf[SignLshSig],
       "(u) - 16-bit sign-LSH signature of a 64-dim micro-unit BIGINT vector (codegen).",
       exprs => SignLshSig(exprs(0))),
+    NativeFunction("nearest_centroid", classOf[NearestCentroid],
+      "(u, cells, cbarq, cnormsq) - the IVF cell of a micro-unit BIGINT vector under a foldable centroid matrix: max dot/sqrt(greatest(cnormsq, 1)), ties to the lower cell (codegen).",
+      NearestCentroid.build),
     NativeFunction("md5_prefix_long", classOf[Md5PrefixLong],
       "(str, nHex) - the first nHex hex digits of md5(str) as a BIGINT (codegen).",
       Md5PrefixLong.build),

@@ -22,6 +22,11 @@ object VectorFunctions {
     s"list_dot_product(list_transform($a, x -> CAST(x AS DOUBLE)), " +
       s"list_transform($b, x -> CAST(x AS DOUBLE)))"
 
+  /** A float vector in exact-integer micro-units (round(v·10⁶) as
+    * BIGINT per element) — the IVF/PQ quantization. */
+  def microUnits(a: Column): Column =
+    transform(a, v => round(v.cast("double") * 1e6).cast("long"))
+
   /** L2 norm in double. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.norm
+import graft.expressions.NearestCentroid
+import graft.functions.VectorFunctions.{microUnits, norm}
 
 /** The PRODUCTION shape of the IVF search family (q33/q110/q130/q148):
   * the corpus is a MATERIALIZED index — vectors bucketed by their IVF
@@ -108,13 +109,13 @@ object AnnIvfIndex {
     * BOUNDED maintenance job — the budget knobs are the contract, and
     * the trace is the evidence the budget sufficed.
     *
-    * Scale shape: each round is one broadcast-join assignment pass
-    * (k·dims centroid rows broadcast; one (vec, cell) partial-agg
-    * shuffle) plus a k·dims-row centroid recompute — Lloyd's cost, no
-    * step quadratic in corpus size. Round state is (vec_id, cell) — 16
-    * bytes per vector, held via localCheckpoint so per-round lineage
-    * stays O(1); a multi-TB deployment would persist it to a scratch
-    * table instead, same plan shape. The final rebuild rewrites the
+    * Scale shape: each round is one narrow kernel pass counting the
+    * moves plus a k·dims-row centroid recompute, collected (k·dims
+    * rows — the quantizer artifact) — Lloyd's cost, no step quadratic
+    * in corpus size. Round state is the collected centroid matrix
+    * alone: each round's assignment is a kernel column over the
+    * checkpointed base, so per-round lineage stays O(1) without
+    * materializing any membership. The final rebuild rewrites the
     * corpus once — retrain is the EXPENSIVE lifecycle event by design;
     * [[append]] exists so it runs at cadence, not per batch. Like
     * [[build]], the rebuild resets append provenance (batch_id
@@ -128,47 +129,39 @@ object AnnIvfIndex {
     val base = s.table(table)
       .select(col("vec_id"), col("cell"), col("embedding"))
       .localCheckpoint()
-    val vecs = base.select(col("vec_id"), col("embedding"))
-    var assign = base.select(col("vec_id"), col("cell"))
-    var cent = s.table(centTable(table))
-      .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq"))
-      .localCheckpoint()
+    // the current assignment as a column of `base`: the deployed cells,
+    // then each round's kernel column over the collected centroids
+    var assign = col("cell")
+    var cent = NearestCentroid.collect(s.table(centTable(table)))
     val moved = scala.collection.mutable.ArrayBuffer.empty[Long]
     var round = 0
     while (round < maxRounds && !moved.lastOption.exists(_ <= tolMoves)) {
-      val next = nearestCell(vecs, cent).localCheckpoint()
-      moved += next
-        .join(assign.withColumnRenamed("cell", "prev_cell"), "vec_id")
-        .filter(col("cell") =!= col("prev_cell")).count()
+      val next = nearestCell(s, cent)
+      moved += base.filter(next =!= assign).count()
       assign = next
-      cent = centroidsOf(vecs.join(assign, "vec_id"))
-        .select(col("cell"), col("dim"), col("cbarq"), col("cnormsq"))
-        .localCheckpoint()
+      cent = NearestCentroid.collect(centroidsOf(assigned(base, assign)))
       round += 1
     }
-    build(vecs.join(assign, "vec_id")
-      .select(col("vec_id"), col("cell"), col("embedding")), table, nb)
+    build(assigned(base, assign), table, nb)
     moved.toSeq
   }
 
-  /** Nearest-centroid assignment of (`vec_id`, `embedding`) rows under
-    * a centroid frame shaped like the `_cent` table: max [[probeScore]],
-    * ties to the LOWER cell id — the ONE assignment rule [[append]]
-    * admits with and [[retrain]] iterates with (one rule, or the two
-    * paths drift apart). The centroid side broadcasts (k·dims integer
-    * rows); cost is one (vec, cell)-keyed partial-aggregated shuffle. */
-  private def nearestCell(newVecs: DataFrame, cent: DataFrame): DataFrame =
-    dimRows(newVecs, "vec_id")
-      .join(broadcast(cent.select(col("cell"), col("dim"), col("cbarq"))),
-        "dim")
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(sum(col("u") * col("cbarq")).as("dotnum"))
-      .join(broadcast(cent.select(col("cell"), col("cnormsq")).distinct()),
-        "cell")
-      .groupBy(col("vec_id"))
-      .agg(max(struct(probeScore.as("score"),
-        (-col("cell")).as("negCell"))).as("best"))
-      .select(col("vec_id"), (-col("best.negCell")).as("cell"))
+  /** (`vec_id`, `cell`, `embedding`) rows of `vecs` under the cell
+    * column `cell`; a vector without a cell is dropped. */
+  private def assigned(vecs: DataFrame, cell: Column): DataFrame =
+    vecs.select(col("vec_id"), cell.as("cell"), col("embedding"))
+      .filter(col("cell").isNotNull)
+
+  /** Nearest-centroid cell of each row's `embedding` under the
+    * collected centroid matrix `cent` — the ONE assignment rule
+    * [[append]] admits with and [[retrain]] iterates with (one rule, or
+    * the two paths drift apart), and the kernel q197 runs its Lloyd
+    * rounds on: max [[probeScore]], ties to the LOWER cell id. A null
+    * or empty embedding has no cell (null). One narrow pass: k·dims
+    * multiply-adds per vector, no shuffle. */
+  private def nearestCell(s: SparkSession,
+      cent: NearestCentroid.Centroids): Column =
+    NearestCentroid.assign(s, microUnits(col("embedding")), cent)
 
   /** Centroid frame (cell, dim, csum, n, cbarq, cnormsq) from an
     * ASSIGNED corpus — [[build]]'s exact integer math, shared with
@@ -199,10 +192,9 @@ object AnnIvfIndex {
     val s = newVecs.sparkSession
     if (skipExisting && InvertedTextIndex.hasBatch(s, table, batchId))
       return
-    val assign = nearestCell(newVecs, s.table(centTable(table)))
-    BucketedSnapshot.append(newVecs.join(assign, "vec_id")
-      .select(col("vec_id"), col("cell"), col("embedding"),
-        norm(col("embedding")).as("nrm"))
+    val cent = NearestCentroid.collect(s.table(centTable(table)))
+    BucketedSnapshot.append(assigned(newVecs, nearestCell(s, cent))
+      .withColumn("nrm", norm(col("embedding")))
       .withColumn("batch_id", lit(batchId)), table, "cell")
   }
 

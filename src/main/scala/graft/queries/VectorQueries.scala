@@ -1708,18 +1708,10 @@ object VectorQueries {
     *
     * Retrain = two UNROLLED Lloyd rounds from the deployed centroids
     * (reassign to nearest centroid — the same max-cosine rule append
-    * admits with — then recompute exact-integer centroids), the
-    * identical CTE chain on the oracle (the q162 discipline). The
-    * BOUNDED frames are collected once and re-enter as local
-    * relations (the q189/q190 serving-seam discipline): the per-round
-    * centroid frames (k·dims rows — the quantizer artifact
-    * AnnIvfIndex broadcasts at any corpus size) and the ground-truth/
-    * probe frames (≤3·|Q| / ≤|Q| rows). Fully-lazy chains compounded
-    * 13+ serial exchanges per reference and the union referenced them
-    * repeatedly — measured 28.7 s → 5.4 s at sf0.1, stage latency,
-    * not data; the corpus-sized membership frames stay plans. Round
-    * 2's move count rides along as
-    * the retrained row's `n_changed` — the measured residual
+    * admits with, the [[graft.expressions.NearestCentroid]] kernel —
+    * then recompute exact-integer centroids), the identical CTE chain
+    * on the oracle (the q162 discipline). Round 2's move count rides
+    * along as the retrained row's `n_changed` — the measured residual
     * (convergence-to-maxRounds is the OPERATOR's job; the query pins a
     * fixed-2-round retrain so both engines compute the identical
     * state).
@@ -1731,179 +1723,120 @@ object VectorQueries {
     * workload (the first 50 vec_ids — FIXED, the q175 sampling
     * contract: the all-pairs ground truth exists only inside a
     * size-capped sample, so its nested loop is bounded at any corpus
-    * size), plus n_changed (drifted: injected
-    * wrong-cell count; retrained: residual round-2 moves). On this
-    * corpus the labels carry almost no cosine structure (in-label mean
-    * cosine ≈ cross-label — near-random 64-dim vectors), so the
-    * label-cell baseline is weak to begin with; the three rows still
-    * read degrade-then-recover (measured sf0.01: 1400 bp undrifted →
-    * 800 drifted → 2800 retrained — the retrain additionally EXCEEDS
-    * the baseline because Lloyd builds cosine-coherent cells where the
+    * size), plus n_changed (drifted: injected wrong-cell count;
+    * retrained: residual round-2 moves). On this corpus the labels
+    * carry almost no cosine structure (in-label mean cosine ≈
+    * cross-label — near-random 64-dim vectors), so the label-cell
+    * baseline is weak to begin with; the three rows still read
+    * degrade-then-recover (measured sf0.01: 1400 bp undrifted → 800
+    * drifted → 2800 retrained — the retrain additionally EXCEEDS the
+    * baseline because Lloyd builds cosine-coherent cells where the
     * labels never were). Either way the retrained row must dominate
     * the drifted row, which is the lifecycle claim under test.
     *
     * All centroid/score math is q110/q125's exact-integer micro-unit
     * form; `cbarq = csum div n` is [[graft.operators.AnnIvfIndex]]'s
     * occupancy-bounded mean (truncation toward zero on both engines),
-    * so probe products stay ≤ dims·10¹² at any cell size. Scale shape:
-    * each Lloyd round is one broadcast of k·dims centroid rows onto
-    * the dim table + a (vec, cell) partial-agg shuffle — Lloyd's cost,
+    * so probe products stay ≤ dims·10¹² at any cell size.
+    *
+    * BOUNDED frames: only the three centroid frames c0/c1/c2 (k·dims
+    * rows each — the quantizer artifact AnnIvfIndex keeps at any
+    * corpus size) are collected, and they re-enter as the kernel's
+    * literal matrix. Every membership (a0, a1, a2) and both probe
+    * cells are kernel COLUMNS of one base frame (one row per vector),
+    * so construction is three (cell, dim) aggregations and nothing
+    * else; recall, the query count and both move counts are one
+    * aggregate in one execution pass.
+    *
+    * Scale shape: each Lloyd round is one narrow kernel pass over the
+    * corpus (k·dims multiply-adds per vector) plus one (cell, dim)
+    * partial-aggregated shuffle of k·dims groups — Lloyd's cost,
     * nothing quadratic; the ground-truth brute force is |Q|·n pairs
     * with |Q| fixed at 50 (the q80/q175 measurement pattern: the
     * RECALL PROBE pays brute force so serving never has to). */
   private def q197(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
+    import graft.expressions.NearestCentroid
     val emb = Tables.embeddings(s, d)
-    // The Lloyd working set: referenced by every centroid recompute,
-    // both reassignment rounds and the query-dim slice (6 subtree
-    // evaluations measured) — materialized once per invocation, the
-    // textbook persist-the-points k-means shape (guide §5: reused AND
-    // expensive to recompute; at 100 TB this is the cached dim table
-    // every distributed Lloyd implementation holds between rounds).
-    val dims = emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .withColumn("u", round(col("v").cast("double") * 1e6).cast("long"))
-      .select(col("vec_id"), col("dim"), col("u"))
-      .localCheckpoint()
-    val nlab = emb.agg((max(col("label")).cast("long") + 1L).as("k"))
-    val atrue = emb.select(col("vec_id"),
-      col("label").cast("long").as("cell"))
-    val a0 = emb.crossJoin(broadcast(nlab))
-      .select(col("vec_id"),
-        when(col("vec_id") % 2 === 0,
-          (col("label").cast("long") + 1L) % col("k"))
-          .otherwise(col("label").cast("long")).as("cell"))
+    // one row per vector: the true cell and the micro-unit vector
+    val base = emb.select(col("vec_id"), col("embedding"),
+      col("label").cast("long").as("tcell"),
+      microUnits(col("embedding")).as("u"))
 
-    // Centroid frame (cell, dim, cbarq, cnormsq) from an assignment,
-    // COLLECTED: k·dims rows — the quantizer artifact, the exact frame
-    // AnnIvfIndex broadcasts at any corpus size (bounded by k and
-    // dims, never by the corpus; retrain() checkpoints its per-round
-    // twin for the same reason). Collecting it cuts every downstream
-    // Lloyd reference to ≤2 exchanges — the naive fully-lazy chains
-    // compounded 13+ serial exchanges per reference (measured 28.7 s
-    // at sf0.1, stage latency not data). ONE aggregation: each vector
-    // contributes exactly one row per dim, so count(1) per (cell,dim)
-    // IS cell occupancy and no separate per-cell count shuffle is
-    // needed; cnormsq folds locally over the collected rows.
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dim",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("cbarq",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cnormsq",
-        org.apache.spark.sql.types.LongType)))
-    def centOf(assign: DataFrame): DataFrame = {
-      val cb = dims.join(assign, "vec_id")
+    // Centroid matrix of the assignment `cell`, COLLECTED: one
+    // aggregation, k·dims rows. Each vector contributes exactly one row
+    // per dim, so count(1) per (cell, dim) IS the cell occupancy; cnormsq
+    // folds on the driver over the collected rows.
+    def centOf(cell: Column): NearestCentroid.Centroids =
+      NearestCentroid.collect(base
+        .select(cell.as("cell"), posexplode(col("u")).as(Seq("dim", "u")))
         .groupBy(col("cell"), col("dim"))
         .agg(sum(col("u")).as("csum"), count(lit(1)).as("n"))
-        .select(col("cell"), col("dim"),
-          expr("csum div n").as("cbarq"))
-        .collect().toSeq
-      val normsq = cb.groupBy(_.getLong(0)).map { case (c, rs) =>
-        c -> rs.map { r => val b = r.getLong(2); b * b }.sum
-      }
-      import scala.jdk.CollectionConverters._
-      s.createDataFrame(cb.map(r => org.apache.spark.sql.Row(
-        r.getLong(0), r.getInt(1), r.getLong(2),
-        normsq(r.getLong(0)))).asJava, centSchema)
-    }
-    // nearest-centroid assignment of `ds` (a dims subset) under `cent`
-    def assignTo(ds: DataFrame, cent: DataFrame): DataFrame = ds
-      .join(broadcast(cent.select(col("cell"), col("dim"), col("cbarq"))),
-        "dim")
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(sum(col("u") * col("cbarq")).as("dotnum"))
-      .join(broadcast(cent.select(col("cell"), col("cnormsq")).distinct()),
-        "cell")
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        (col("dotnum").cast("double") /
-          sqrt(greatest(col("cnormsq"), lit(1L)).cast("double")))
-          .as("score"),
-        (-col("cell")).as("negCell"))).as("best"))
-      .select(col("vec_id"), (-col("best.negCell")).as("cell"))
+        .select(col("cell"), col("dim"), expr("csum div n").as("cbarq")))
+    def nearest(c: NearestCentroid.Centroids): Column =
+      NearestCentroid.assign(s, col("u"), c)
 
-    val c0 = centOf(atrue) // deployed quantizer: true cluster means
-    // a1/a2 are referenced 2-3× each (next round's centroids, the
-    // round-2 move count, the retrained membership) and each reference
-    // re-ran the whole reassignment aggregation — materialized once:
-    // one doc-level row per vector, the per-round membership a
-    // distributed Lloyd persists anyway
-    val a1 = assignTo(dims, c0).localCheckpoint() // Lloyd round 1
+    val c0 = centOf(col("tcell")) // deployed quantizer: true cluster means
+    val k = c0.cells.max + 1L
+    val a0 = when(col("vec_id") % 2 === 0, (col("tcell") + 1L) % k)
+      .otherwise(col("tcell")) // the drifted membership
+    val a1 = nearest(c0) // Lloyd round 1
     val c1 = centOf(a1)
-    val a2 = assignTo(dims, c1).localCheckpoint() // round 2 (expected: zero moves)
+    val a2 = nearest(c1) // round 2 (expected: few moves)
     val c2 = centOf(a2)
 
-    val withNrm = emb.withColumn("nrm", norm(col("embedding")))
+    // Recall identity: with (cos_sim desc, c_id asc) a strict order, an
+    // nprobe=1 IVF's top 3 ∩ the brute-force top 3 is EXACTLY the set of
+    // brute-force top-3 neighbours whose cell under that state equals
+    // the query's probe cell — a neighbour ranked ≤ 3 over all
+    // candidates has at most 2 candidates ahead of it in any subset.
+    // So all three states' hits are flag counts over the ground truth.
+    val withNrm = base.withColumn("nrm", norm(col("embedding")))
     val queries = withNrm.filter(col("vec_id") < 50)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
+        col("nrm").as("q_nrm"), a1.as("p_deployed"),
+        nearest(c2).as("p_retrained"))
     val cands = withNrm.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val gt = cands.crossJoin(broadcast(queries))
+      col("embedding").as("c_emb"), col("nrm").as("c_nrm"),
+      col("tcell").as("m_undrifted"), a0.as("m_drifted"),
+      a2.as("m_retrained"))
+    val top3 = cands.crossJoin(broadcast(queries))
       .filter(col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"),
         round(expr("float_vector_dot(q_emb, c_emb)") /
-          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
+          (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"),
+        (col("m_undrifted") === col("p_deployed")).as("in_undrifted"),
+        (col("m_drifted") === col("p_deployed")).as("in_drifted"),
+        (col("m_retrained") === col("p_retrained")).as("in_retrained"))
       .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("cos_sim").desc, col("c_id").asc)))
       .filter(col("rk") <= 3)
-      .select(col("q_id"), col("c_id"))
-
-    val qdims = dims.join(
-      broadcast(queries.select(col("q_id").as("vec_id"))), "vec_id")
-    // The ground truth and both probe frames are WORKLOAD-BOUNDED
-    // (≤3·|Q| and ≤|Q| rows at any corpus size — |Q| is the fixed
-    // 50-query sample), but their SUBTREES are corpus passes (the
-    // brute force, the Lloyd chains). The naive three-branch union
-    // referenced them ~6× and Spark executes each reference (measured
-    // 28.7 s at sf0.1), so they are collected ONCE and re-enter as
-    // local relations — the q189/q190 serving-seam collect discipline
-    // (NoEagerActionSpec exemption documented there). The corpus-sized
-    // membership frames (a0/a2) stay plans.
-    import scala.jdk.CollectionConverters._
-    def localized(df: DataFrame): DataFrame =
-      s.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    val gtL = localized(gt)
-    val gtRows = gtL.count()
-    val nQ = lit(gtL.select(col("q_id")).distinct().count())
-      .as("n_queries")
-    def probesOf(cent: DataFrame): DataFrame = localized(
-      assignTo(qdims, cent).select(col("vec_id").as("q_id"), col("cell")))
-    // one recall row: nprobe=1 probes under `cent`, membership `assign`
-    def recallOf(state: String, probes: DataFrame, assign: DataFrame,
-        changed: DataFrame): DataFrame = {
-      val ivf = assign.join(broadcast(probes.join(queries, "q_id")), "cell")
-        .withColumnRenamed("vec_id", "c_id")
-        .filter(col("c_id") =!= col("q_id"))
-        .join(cands, "c_id")
-        .select(col("q_id"), col("c_id"),
-          round(expr("float_vector_dot(q_emb, c_emb)") /
-            (col("q_nrm") * col("c_nrm")), 6).as("cos_sim"))
-        .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("c_id").asc)))
-        .filter(col("rk") <= 3)
-        .select(col("q_id"), col("c_id"))
-      val hits = ivf.join(broadcast(gtL), Seq("q_id", "c_id"))
-        .agg(count(lit(1)).as("n_hits"))
-      hits
-        .crossJoin(broadcast(changed.agg(count(lit(1)).as("n_changed"))))
-        .select(lit(state).as("state"), nQ,
-          col("n_hits"),
-          expr(s"(10000L * n_hits) div ${gtRows}L").as("recall_bp"),
-          col("n_changed"))
-    }
-    val driftChanged = a0.join(atrue.withColumnRenamed("cell", "tcell"),
-      "vec_id").filter(col("cell") =!= col("tcell"))
-    val round2Moves = a2.join(a1.withColumnRenamed("cell", "pcell"),
-      "vec_id").filter(col("cell") =!= col("pcell"))
-    val pd = probesOf(c0) // probe cells under the deployed centroids
-    val pr = probesOf(c2) // probe cells under the retrained centroids
-    recallOf("undrifted", pd, atrue, atrue.filter(lit(false)))
-      .unionAll(recallOf("drifted", pd, a0, driftChanged))
-      .unionAll(recallOf("retrained", pr, a2, round2Moves))
+    // ONE aggregate counts every figure: the ground-truth rows carry the
+    // hit flags (rk = 1 once per query), the base rows the move flags
+    val flags = top3
+      .select((col("rk") === 1).as("is_query"), lit(true).as("is_gt"),
+        col("in_undrifted"), col("in_drifted"), col("in_retrained"))
+      .unionByName(base.select((a0 =!= col("tcell")).as("mv_drifted"),
+        (a2 =!= a1).as("mv_retrained")), allowMissingColumns = true)
+    def state(name: String, changed: Column): Column =
+      struct(lit(name).as("state"), col(s"h_$name").as("n_hits"),
+        changed.as("n_changed"))
+    flags
+      .agg(count_if(col("is_query")).as("n_queries"),
+        count_if(col("is_gt")).as("n_gt"),
+        count_if(col("in_undrifted")).as("h_undrifted"),
+        count_if(col("in_drifted")).as("h_drifted"),
+        count_if(col("in_retrained")).as("h_retrained"),
+        count_if(col("mv_drifted")).as("chg_drifted"),
+        count_if(col("mv_retrained")).as("chg_retrained"))
+      .select(col("n_queries"), col("n_gt"), explode(array(
+        state("undrifted", lit(0L)),
+        state("drifted", col("chg_drifted")),
+        state("retrained", col("chg_retrained")))).as("r"))
+      .select(col("r.state").as("state"), col("n_queries"),
+        col("r.n_hits").as("n_hits"),
+        expr("(10000L * r.n_hits) div n_gt").as("recall_bp"),
+        col("r.n_changed").as("n_changed"))
   }
 
   /** SQL twins of q197's centroid / assignment stages — generated from

@@ -51,8 +51,9 @@ class NoEagerActionSpec extends SparkSpec {
       // q199 composes the q157 funnel (same CC fixpoint) behind the
       // q198 line gate
       "q199_line_gated_corpus",
-      // q197 collects its workload-bounded ground-truth/probe frames
-      // once (≤3·|Q| rows; the corpus-sized memberships stay plans)
+      // q197 collects its three Lloyd-round centroid frames (k·dims
+      // rows each; memberships and probe cells are kernel columns over
+      // them) — ConstructionJobsSpec bounds the jobs that launches
       "q197_ann_retrain_recall",
       // q208 composes the same CC fixpoint over image near-dup edges
       "q208_image_dup_clusters", "q212_multimodal_dedup_funnel",
