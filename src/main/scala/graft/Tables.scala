@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
+import org.apache.hadoop.fs.Path
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -12,8 +14,44 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * at 100 TB each query wants its own pruned scan, not a shared cache).
   */
 object Tables {
-  def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's driver-side listing (file names, lengths, modification
+    * times) plus the session's parquet settings: what its inferred
+    * schema depends on. The settings can change within a session
+    * ([[SparkEntry.entry]] sets `nanosAsLong` on the caller's). */
+  private type Signature = (Seq[(String, Long, Long)], Map[String, String])
+
+  /** Inferred schemas per session, per qualified path, each with the
+    * signature it was inferred under. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, (Signature, StructType)]]())
+
+  /** Scan `name` with its schema passed in, inferred from the parquet
+    * footers only when the path, its listing or the session's parquet
+    * settings changed since the last read. Inference is a Spark job;
+    * the listing is a driver-side file-system call. */
+  def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    val path = new Path(file)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(path)
+    val files = fs.listFiles(qualified, true)
+    val sig: Signature = (
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq
+        .sortBy(_._1),
+      spark.conf.getAll.filter(_._1.contains("parquet")))
+    val cache = schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap())
+    val schema = Option(cache.get(qualified.toString)) match {
+      case Some((`sig`, known)) => known
+      case _ =>
+        val inferred = spark.read.parquet(file).schema
+        cache.put(qualified.toString, (sig, inferred))
+        inferred
+    }
+    spark.read.schema(schema).parquet(file)
+  }
 
   /** Normalize `events.ts` to the engine's internal convention — epoch
     * NANOS as LONG — regardless of how the parquet writer stored it.

@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, col, typedLit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
+import graft.Materialize
+
 /** Nearest-centroid cell of a micro-unit vector (array of longs) under
   * a FIXED centroid matrix — the IVF coarse-quantizer assignment rule
   * that [[graft.operators.AnnIvfIndex]] admits and retrains with and
@@ -196,13 +198,20 @@ object NearestCentroid {
   def register(spark: SparkSession): Unit =
     Registration.once(spark, "nearest_centroid")
 
+  /** Largest cell count and vector width a centroid matrix may have:
+    * the matrix rides generated code by reference, so k·dims stays a
+    * few MB (the testdata's is 10 × 64). */
+  val MaxCells = 1024
+  val MaxDims = 1024
+
   /** Collect a centroid frame (`cell`, `dim`, `cbarq`) — k·dims rows,
-    * the quantizer artifact, bounded by k and dims and never by the
-    * corpus — into a matrix. `cnormsq` = Σ cbarq² folds on the driver
-    * over the collected rows; a dim a cell lacks reads 0. */
+    * the quantizer artifact, bounded by [[MaxCells]]·[[MaxDims]] and
+    * never by the corpus — into a matrix. `cnormsq` = Σ cbarq² folds on
+    * the driver over the collected rows; a dim a cell lacks reads 0. */
   def collect(cent: DataFrame): Centroids = {
-    val rows = cent.select(col("cell").cast("long"), col("dim").cast("int"),
-      col("cbarq").cast("long")).collect()
+    val rows = Materialize.rows(cent.select(col("cell").cast("long"),
+      col("dim").cast("int"), col("cbarq").cast("long")),
+      "centroids", MaxCells * MaxDims)
     val byCell = rows.groupBy(_.getLong(0)).toArray.sortBy(_._1)
     val cbarq = byCell.map { case (_, rs) =>
       val v = new Array[Long](rs.map(_.getInt(1)).max + 1)

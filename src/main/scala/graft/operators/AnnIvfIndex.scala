@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.expressions.NearestCentroid
 import graft.functions.VectorFunctions.{microUnits, norm}
 
@@ -32,7 +33,8 @@ import graft.functions.VectorFunctions.{microUnits, norm}
   * any practical k), the corpus never re-shuffles at query time, and
   * search cost per query batch is probe-scoring (rows: |queries|·k)
   * plus the probed buckets' bytes. The `search` API collects the
-  * probe result (≤ |queries|·nprobe (q_id, cell) pairs) to drive
+  * probe result (≤ [[InvertedTextIndex.MaxQueries]]·nprobe (q_id,
+  * cell) pairs, enforced by the `ann.probes` collect) to drive
   * bucket pruning AND re-inject the probes as a local relation — the
   * one deliberate driver-side step, the same size as the probe plan
   * itself, executed once. */
@@ -126,9 +128,8 @@ object AnnIvfIndex {
     // embeddings + starting assignment, materialized OFF the table
     // (the rebuild below overwrites it — a lazy plan reading the same
     // table would race its own overwrite)
-    val base = s.table(table)
-      .select(col("vec_id"), col("cell"), col("embedding"))
-      .localCheckpoint()
+    val base = Materialize.once(s.table(table)
+      .select(col("vec_id"), col("cell"), col("embedding")), "ann.retrain_base")
     // the current assignment as a column of `base`: the deployed cells,
     // then each round's kernel column over the collected centroids
     var assign = col("cell")
@@ -251,16 +252,14 @@ object AnnIvfIndex {
       .filter(col("pk") <= nprobe)
       .select(col("q_id"), col("cell"))
     // the ONE driver-side step: the probe plan runs ONCE, its collected
-    // rows (≤ |queries|·nprobe (q_id, cell) pairs) feed BOTH the
+    // rows (≤ MaxQueries·nprobe (q_id, cell) pairs) feed BOTH the
     // literal In-filter that bucket-prunes the corpus scan AND — as a
     // local relation — the candidate join's probe side, so the
     // latency-sensitive serving path never re-executes the probe
-    // scoring subplan. collect() here is the probe plan itself, not
-    // corpus data.
-    import scala.jdk.CollectionConverters._
-    val probeRows = probes.collect().toSeq
+    // scoring subplan
+    val Materialize.Local(probeRows, probesLocal) = Materialize.local(
+      probes, "ann.probes", InvertedTextIndex.MaxQueries * nprobe)
     val probedCells = probeRows.map(_.getLong(1)).distinct
-    val probesLocal = s.createDataFrame(probeRows.asJava, probes.schema)
     val qPayload = queries
       .select(col("q_id"), col("embedding").as("q_emb"),
         norm(col("embedding")).as("q_nrm"))

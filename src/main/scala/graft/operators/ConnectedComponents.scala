@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed connected components by accelerated min-label
   * propagation — the step after LSH banding in a dedup pipeline
   * (cluster transitively-linked duplicates), usable over any symmetric
@@ -60,17 +62,15 @@ object ConnectedComponents {
     * solved distributively (measured r18: q151 spent 127 build jobs /
     * ~6 s on a subgraph whose union-find solves in microseconds),
     * while one above the cutoff genuinely needs the shuffle rounds.
-    * Session-tunable via `spark.graft.cc.localEdgeCutoff` (0 disables
-    * the local path); the default 4M edges ≈ 64 MB collected — the
-    * same order as a broadcast-join build side. The labels themselves
-    * are identical either way (min node id per component; the spec
-    * pins local ≡ distributed on randomized graphs), so the cutover
-    * changes execution strategy only, never results. */
-  val DefaultLocalEdgeCutoff = 4000000L
-
-  private def localEdgeCutoff(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.cc.localEdgeCutoff")
-      .map(_.toLong).getOrElse(DefaultLocalEdgeCutoff)
+    * 4M edges are 64 MB of (src, dst) longs — the same order as a
+    * broadcast-join build side; it is also the bound of the
+    * `cc.edges` collect. The path is chosen from a one-row count of the
+    * pinned edges, so a larger graph never reaches the driver. The
+    * labels themselves are identical either way (min node id per
+    * component; ConnectedComponentsSpec pins local ≡ distributed on
+    * randomized graphs), so the cutover changes execution strategy
+    * only, never results. */
+  val LocalEdgeCutoff = 4000000
 
   /** Driver union-find (path-halving) over collected symmetric edges;
     * returns every endpoint labeled with its component's min node. */
@@ -108,33 +108,32 @@ object ConnectedComponents {
     * every node that appears in `edges`, labeled with its component's
     * min node id. Nodes with no edges never enter the subgraph —
     * seeding from edge endpoints keeps every round's join sized by the
-    * DUP population, not the corpus. Subgraphs at or under
-    * [[localEdgeCutoff]] edges solve on the driver (rounds = 0); the
-    * distributed fixpoint below is the at-scale path. */
+    * DUP population, not the corpus. The edges are pinned once; a
+    * subgraph of at most [[LocalEdgeCutoff]] edges solves on the driver
+    * (rounds = 0), a larger one runs the distributed [[fixpoint]], the
+    * at-scale path. */
   def minLabel(edges: DataFrame): (DataFrame, Int) = {
-    val s = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).localCheckpoint()
-    val cutoff = localEdgeCutoff(s)
-    if (cutoff > 0L && e.count() <= cutoff) {
-      val collected = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labeled = unionFind(collected)
-      import scala.jdk.CollectionConverters._
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rowsL = labeled.toSeq.map { case (n, l) =>
-        org.apache.spark.sql.Row(n, l)
-      }
-      return (s.createDataFrame(rowsL.asJava, schema), 0)
-    }
+    val e = Materialize.once(edges.select(col("src"), col("dst")), "cc.edges")
+    val n = Materialize.rows(e.agg(count(lit(1))), "cc.edge_count", 1).head.getLong(0)
+    if (n <= LocalEdgeCutoff) {
+      val s = e.sparkSession
+      import s.implicits._
+      val rows = Materialize.rows(e, "cc.edges", LocalEdgeCutoff)
+      val labeled = unionFind(rows.map(r => (r.getLong(0), r.getLong(1))).toArray)
+      (labeled.toSeq.toDF("node", "label"), 0)
+    } else fixpoint(e)
+  }
+
+  /** The distributed fixpoint over the symmetric edge list `e` (long
+    * columns `src`, `dst`), read once per round; [[minLabel]] passes
+    * the pinned edges. */
+  private[graft] def fixpoint(e: DataFrame): (DataFrame, Int) = {
+    val s = e.sparkSession
     // Smart init = hop 1 for free: under identity labels the neighbor
     // minimum is min(dst) per src — one aggregation, no join/distinct.
-    var labels = e.select(col("src").as("node"), col("dst"))
+    var labels = Materialize.once(e.select(col("src").as("node"), col("dst"))
       .groupBy(col("node"))
-      .agg(least(col("node"), min(col("dst"))).as("label"))
-      .localCheckpoint()
+      .agg(least(col("node"), min(col("dst"))).as("label")), "cc.labels")
     val changedAcc = s.sparkContext.longAccumulator("cc_label_improvements")
     val markImproved = udf { (newLabel: Long, oldLabel: Long) =>
       if (newLabel < oldLabel) changedAcc.add(1L)
@@ -161,10 +160,10 @@ object ConnectedComponents {
             .as("new_label"),
           col("old"))
       changedAcc.reset()
-      labels = jumped
+      labels = Materialize.once(jumped
         .select(col("node"),
-          markImproved(col("new_label"), col("old")).as("label"))
-        .localCheckpoint()
+          markImproved(col("new_label"), col("old")).as("label")),
+        "cc.labels")
       rounds += 1
       converged = changedAcc.value == 0L
     }

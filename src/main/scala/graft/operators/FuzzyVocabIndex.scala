@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.queries.RetrievalQueries
 
 /** The PRODUCTION shape of q188's fuzzy "did you mean" matching: the
@@ -35,7 +36,7 @@ import graft.queries.RetrievalQueries
   * probe can never fan into a vocabulary-sized candidate set.
   *
   * At 100 TB both tables are VOCABULARY-sized (Heaps-law sublinear in
-  * the corpus), the probes collect once (workload-bounded, the
+  * the corpus), the probes collect once (≤ [[MaxKeyRows]] keys, the
   * InvertedTextIndex serving-seam contract) to drive key-bucket
   * pruning, and the one corpus-sized job is [[build]]/[[append]]'s
   * word-df aggregation — one token shuffle with map-side combine.
@@ -54,6 +55,14 @@ object FuzzyVocabIndex {
     * ≤ ~2²⁰-rows-per-bucket sizing rule on the key count Σ(len(w)+1). */
   private def bucketsFor(nRows: Long): Int =
     BucketedSnapshot.bucketsFor(nRows, 1L << 20)
+
+  /** Bounds of a search's two driver-side frames: the probes' deletion
+    * keys (a d = 2 probe of length L has 1 + L + L·(L−1)/2 of them, so
+    * 2¹⁸ keys cover [[InvertedTextIndex.MaxQueries]] probes of
+    * length ≤ 21), and the key-join survivors (each key matches the
+    * few vocabulary words that share it). */
+  private[graft] val MaxKeyRows = 1 << 18
+  private[graft] val MaxCandidateRows = 1 << 18
 
   /** (w, df): the slice's word → containing-doc count. */
   private def vocabRows(docs: DataFrame): DataFrame =
@@ -81,7 +90,7 @@ object FuzzyVocabIndex {
             expr("cast(length(w) as bigint) * " +
               "(cast(length(w) as bigint) - 1L) div 2L")).otherwise(0L))
           .as("n_keys"))
-      .collect().head
+      .head()
     val vb =
       if (buckets > 0) buckets else bucketsFor(sizes.getAs[Long]("n_vocab"))
     val kb =
@@ -167,16 +176,14 @@ object FuzzyVocabIndex {
     * (q188's one-probe-per-doc workload is the special case). */
   def search(probes: DataFrame, table: String, maxDist: Int = 1,
       maxInList: Int = 4096): DataFrame = {
-    import scala.jdk.CollectionConverters._
     require(maxDist >= 1 && maxDist <= 2,
       s"maxDist must be 1 or 2, got $maxDist")
     val s = probes.sparkSession
     val keysExpr = if (maxDist >= 2) RetrievalQueries.delKeys2Expr("probe")
       else RetrievalQueries.delKeysExpr("probe")
-    val pkPlan = probes.select(col("q_doc"), col("probe"),
-      explode(expr(keysExpr)).as("k"))
-    val pkRows = withBucketedScan(s)(pkPlan.collect()).toSeq
-    val pkLocal = s.createDataFrame(pkRows.asJava, pkPlan.schema)
+    val Materialize.Local(pkRows, pkLocal) = withBucketedScan(s)(
+      Materialize.local(probes.select(col("q_doc"), col("probe"),
+        explode(expr(keysExpr)).as("k")), "fuzzy.probe_keys", MaxKeyRows))
     val keyList = pkRows.map(_.getAs[String]("k")).distinct
     val matchedKeys =
       if (keyList.size <= maxInList)
@@ -184,10 +191,10 @@ object FuzzyVocabIndex {
       else s.table(keysTable(table))
         .join(broadcast(pkLocal.select(col("k")).distinct()), Seq("k"),
           "left_semi")
-    val candPlan = matchedKeys.join(broadcast(pkLocal), "k")
-      .select(col("q_doc"), col("probe"), col("w")).distinct()
-    val candRows = withBucketedScan(s)(candPlan.collect()).toSeq
-    val candLocal = s.createDataFrame(candRows.asJava, candPlan.schema)
+    val Materialize.Local(candRows, candLocal) = withBucketedScan(s)(
+      Materialize.local(matchedKeys.join(broadcast(pkLocal), "k")
+        .select(col("q_doc"), col("probe"), col("w")).distinct(),
+        "fuzzy.candidates", MaxCandidateRows))
     val candWords = candRows.map(_.getAs[String]("w")).distinct
     val prunedVocab =
       if (candWords.size <= maxInList)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.streaming.StreamingIndexFreshness
 
 /** UNIFIED index-catalog audit (VERDICT r14 #6): the seven
@@ -134,10 +135,10 @@ object IndexCatalog {
   def audit(s: SparkSession, entries: Seq[Entry]): DataFrame =
     entries.map(rowFor(s, _)).reduce(_ unionAll _)
 
-  /** JSON rendering for the mains' summary lines (1-row-per-index
-    * collect — catalog-sized, the serving-seam pattern). */
+  /** JSON rendering for the mains' summary lines (one collected row
+    * per entry). */
   def auditJson(s: SparkSession, entries: Seq[Entry]): String =
-    audit(s, entries).collect().toSeq.map { r =>
+    Materialize.rows(audit(s, entries), "catalog.audit", entries.size).map { r =>
       s"""{"index":"${r.getAs[String]("index")}",""" +
         s""""kind":"${r.getAs[String]("kind")}",""" +
         s""""n_rows":${r.getAs[Long]("n_rows")},""" +

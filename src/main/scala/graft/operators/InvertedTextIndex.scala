@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.queries.RetrievalQueries
 
 /** The PRODUCTION shape of q180's keyword search: the corpus postings
@@ -117,21 +118,20 @@ object InvertedTextIndex {
 
   def build(docs: DataFrame, table: String, buckets: Int = 0,
       positional: Boolean = false, forward: Boolean = false): Unit = {
-    import scala.jdk.CollectionConverters._
     val metaPlan = metaRow(docs)
       .withColumn("batch_id", lit(BaseBatchId))
     // ONE corpus tokenization pass serves both bucket sizing and the
     // meta write: the collected row is re-injected as a local relation
     // (re-evaluating metaRow would cost a second full scan — and two
     // independent evaluations of a possibly nondeterministic input)
-    val metaVal = metaPlan.collect().head
+    val meta = Materialize.local(metaPlan, "inverted.meta", 1)
+    val metaVal = meta.rows.head
     val nb =
       if (buckets > 0) buckets
       else bucketsFor(metaVal.getAs[Long]("sum_dl"))
     BucketedSnapshot.write(RetrievalQueries.postingRows(docs)
       .withColumn("batch_id", lit(BaseBatchId)), table, nb, "wh")
-    docs.sparkSession.createDataFrame(Seq(metaVal).asJava, metaPlan.schema)
-      .write.mode("overwrite").saveAsTable(metaTable(table))
+    meta.df.write.mode("overwrite").saveAsTable(metaTable(table))
     if (positional)
       BucketedSnapshot.write(RetrievalQueries.positionRows(docs)
         .withColumn("batch_id", lit(BaseBatchId)), posTable(table), nb, "wh")
@@ -207,6 +207,17 @@ object InvertedTextIndex {
     * result-invariant (InvertedTextIndexSpec pins both sides). */
   private[graft] val MaxInList = 4096
 
+  /** Bounds of the query-side frames a serving call brings to the
+    * driver (the serving indexes' requests are batches of query docs,
+    * 16 in the serve benchmark and ≤ one per source in the retrieval
+    * queries): at most [[MaxQueries]] query docs per call, each
+    * contributing at most [[MaxDocTokens]] distinct token hashes (the
+    * testdata's documents have ≤ 100 tokens). A larger batch fails
+    * with a named [[Materialize.BoundExceeded]] instead of filling the
+    * driver; split it. */
+  private[graft] val MaxQueries = 1024
+  private[graft] val MaxDocTokens = 256
+
   /** Prune an index-table scan to the workload's token hashes:
     * literal In-filter under [[MaxInList]], broadcast semi-join on the
     * (already driver-local) term frame above it. */
@@ -226,9 +237,9 @@ object InvertedTextIndex {
     * are q180's query docs, proven by InvertedTextIndexSpec.
     *
     * The ONE driver-side step is collecting the query docs' distinct
-    * (q_doc, token-hash) rows — bounded by the query workload
-    * (|queries| × tokens/query), never the corpus. The collected rows
-    * serve three masters at once: the scan's IN-list (what lets the
+    * (q_doc, token-hash) rows — at most [[MaxQueries]]·[[MaxDocTokens]],
+    * never the corpus. The collected rows serve three masters at
+    * once: the scan's IN-list (what lets the
     * bucketed+sorted layout prune buckets and row groups instead of
     * streaming every posting — the ResultStore precedent: a bounded,
     * documented collect at the serving seam), the [[MaxInList]] guard
@@ -249,15 +260,12 @@ object InvertedTextIndex {
   private def searchPlan(queries: DataFrame, table: String,
       termsPerQuery: Int, k: Int, maxInList: Int)
       : (DataFrame, DataFrame, DataFrame => DataFrame) = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     RetrievalQueries.registerKernels(s)
-    val qtokPlan = queries
+    val Materialize.Local(qtokRows, qtok) = Materialize.local(queries
       .select(col("q_doc"),
         explode(expr(RetrievalQueries.whArrayExpr)).as("wh"))
-      .distinct()
-    val qtokRows = qtokPlan.collect().toSeq
-    val qtok = s.createDataFrame(qtokRows.asJava, qtokPlan.schema)
+      .distinct(), "inverted.query_terms", MaxQueries * MaxDocTokens)
     val whList = qtokRows.map(_.getAs[Long]("wh")).distinct
     def pruned(idx: DataFrame): DataFrame =
       pruneByWh(idx, whList, qtok, maxInList)
@@ -330,17 +338,17 @@ object InvertedTextIndex {
     * one combine shuffles on (q_doc, doc_id, base). */
   def phraseSearch(phrases: DataFrame, table: String,
       maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = phrases.sparkSession
     RetrievalQueries.registerKernels(s)
-    // the phrase tokenization collects once (workload-bounded, like
-    // searchPlan) and feeds the IN-list/semi-join guard, the broadcast
-    // candidate side, and the per-phrase length — never re-executed
-    val ptermsPlan = phrases.select(col("q_doc"),
+    // the phrase tokenization collects once (≤ MaxQueries·MaxDocTokens
+    // rows, like searchPlan) and feeds the IN-list/semi-join guard, the
+    // broadcast candidate side, and the per-phrase length — never
+    // re-executed
+    val Materialize.Local(ptermRows, pterms) = Materialize.local(
+      phrases.select(col("q_doc"),
         posexplode(expr(RetrievalQueries.whArrayExprFor("phrase")))
-          .as(Seq("off", "wh")))
-    val ptermRows = ptermsPlan.collect().toSeq
-    val pterms = s.createDataFrame(ptermRows.asJava, ptermsPlan.schema)
+          .as(Seq("off", "wh"))),
+      "inverted.phrase_terms", MaxQueries * MaxDocTokens)
     val whList = ptermRows.map(_.getAs[Long]("wh")).distinct
     val plen = pterms.groupBy(col("q_doc"))
       .agg(countDistinct(col("off")).as("plen"))
@@ -368,19 +376,18 @@ object InvertedTextIndex {
     * the re-score off pruned postings scans again. Row-for-row q185's
     * output on q185's workload (InvertedTextIndexSpec).
     *
-    * Driver-side steps, all query-workload-bounded and all feeding
-    * IN-list pruning (each guarded by [[MaxInList]]): the initial terms
-    * (≤|queries|·termsPerQuery), the pseudo-relevant hits
-    * (≤|queries|·prfDocs), the harvested expansion candidates
-    * (≤|queries|·prfDocs·doc-length hashes), and the adopted expansions
-    * (≤|queries|·expTerms). Serving cost = the touched posting lists +
-    * the prfDocs forward rows per query; the corpus never shuffles. */
+    * Driver-side steps, each bounded over [[MaxQueries]] and each
+    * feeding IN-list pruning (guarded by [[MaxInList]]): the initial
+    * terms (·termsPerQuery), the pseudo-relevant hits (·prfDocs), the
+    * harvested expansion candidates (·prfDocs·[[MaxDocTokens]]), and
+    * the adopted expansions (·expTerms). Serving cost = the touched
+    * posting lists + the prfDocs forward rows per query; the corpus
+    * never shuffles. */
   def prfSearch(queries: DataFrame, table: String,
       prfDocs: Int = RetrievalQueries.PrfDocs,
       expTerms: Int = RetrievalQueries.ExpTermsPerQuery,
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       k: Int = 5, maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     // collect the selected terms FIRST and build the first-stage
     // ranking from the LOCAL rows — using searchPlan's own ranked
@@ -388,16 +395,16 @@ object InvertedTextIndex {
     // second time when the pseudo-relevant hits are collected below
     val (_, terms, pruned) =
       searchPlan(queries, table, termsPerQuery, prfDocs, maxInList)
-    val termRows = withBucketedScan(s)(terms.collect()).toSeq
-    val termsLocal = s.createDataFrame(termRows.asJava, terms.schema)
+    val Materialize.Local(termRows, termsLocal) = withBucketedScan(s)(
+      Materialize.local(terms, "prf.terms", MaxQueries * termsPerQuery))
     val prRanked = RetrievalQueries.rankTop(
       RetrievalQueries.scoreCandidates(
         pruned(s.table(table)).join(broadcast(termsLocal), "wh")
           .crossJoin(broadcast(stats(s, table)))),
       "rk", prfDocs)
-    val prPlan = prRanked.select(col("q_doc"), col("doc_id"))
-    val prRows = withBucketedScan(s)(prPlan.collect()).toSeq
-    val prLocal = s.createDataFrame(prRows.asJava, prPlan.schema)
+    val Materialize.Local(prRows, prLocal) = withBucketedScan(s)(
+      Materialize.local(prRanked.select(col("q_doc"), col("doc_id")),
+        "prf.hits", MaxQueries * prfDocs))
     val prIds = prRows.map(_.getAs[Long]("doc_id")).distinct
     // harvest: expansion candidates with their pseudo-relevant support
     val fwdPruned = pruneByKey(s.table(fwdTable(table)), "doc_id", prIds,
@@ -409,8 +416,9 @@ object InvertedTextIndex {
       .agg(count(lit(1)).as("nd"))
       .join(termsLocal.select(col("q_doc"), col("wh")), Seq("q_doc", "wh"),
         "left_anti")
-    val candRows = withBucketedScan(s)(expCand.collect()).toSeq
-    val candLocal = s.createDataFrame(candRows.asJava, expCand.schema)
+    val Materialize.Local(candRows, candLocal) = withBucketedScan(s)(
+      Materialize.local(expCand, "prf.candidates",
+        MaxQueries * prfDocs * MaxDocTokens))
     val candWhs = candRows.map(_.getAs[Long]("wh")).distinct
     // candidate df over the pruned postings scan = the TRUE corpus df
     // (all of a term's postings survive the wh filter)
@@ -422,8 +430,8 @@ object InvertedTextIndex {
       .withColumn("ern", row_number().over(ew))
       .filter(col("ern") <= expTerms)
       .select(col("q_doc"), col("wh"), col("df"))
-    val expRows = withBucketedScan(s)(exps.collect()).toSeq
-    val expsLocal = s.createDataFrame(expRows.asJava, exps.schema)
+    val Materialize.Local(expRows, expsLocal) = withBucketedScan(s)(
+      Materialize.local(exps, "prf.expansions", MaxQueries * expTerms))
     // re-score with the widened term set — q185's second round
     val allTerms = termsLocal.unionByName(expsLocal)
     val allWhs =
@@ -447,7 +455,7 @@ object InvertedTextIndex {
     * Row-for-row q186's output on q186's workload
     * (InvertedTextIndexSpec).
     *
-    * The candidate frame is collected once (≤|queries|·fuseDepth rows —
+    * The candidate frame is collected once (≤ [[MaxQueries]]·fuseDepth rows —
     * the MMR fold collapses per-query state to single rows anyway) and
     * re-injected: it prunes the `_fwd` scan and feeds the fold without
     * re-executing the retrieval subtree. */
@@ -456,18 +464,17 @@ object InvertedTextIndex {
       k: Int = RetrievalQueries.TopK,
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       maxInList: Int = MaxInList): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = queries.sparkSession
     val (ranked, _, _) =
       searchPlan(queries, table, termsPerQuery, fuseDepth, maxInList)
     val mw = Window.partitionBy(col("q_doc"))
-    val candsPlan = ranked
-      .withColumn("maxs", max(col("score")).over(mw))
-      .withColumn("rel_bp",
-        expr("score div greatest(1L, maxs div 10000L)"))
-      .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp"))
-    val candRows = withBucketedScan(s)(candsPlan.collect()).toSeq
-    val candsLocal = s.createDataFrame(candRows.asJava, candsPlan.schema)
+    val Materialize.Local(candRows, candsLocal) = withBucketedScan(s)(
+      Materialize.local(ranked
+        .withColumn("maxs", max(col("score")).over(mw))
+        .withColumn("rel_bp",
+          expr("score div greatest(1L, maxs div 10000L)"))
+        .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")),
+        "mmr.candidates", MaxQueries * fuseDepth))
     val candIds = candRows.map(_.getAs[Long]("doc_id")).distinct
     val tsets = pruneByKey(s.table(fwdTable(table)), "doc_id", candIds,
         candsLocal, maxInList)

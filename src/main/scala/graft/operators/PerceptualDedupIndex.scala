@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** MATERIALIZED perceptual-fingerprint snapshot index — the
   * [[DeltaDedupIndex]] treatment for the multimodal dedup family
   * (VERDICT r15 #2): round 15 shipped image/audio near-dup as one-shot
@@ -150,11 +152,11 @@ object PerceptualDedupIndex {
     // SAME execution (ADVICE r16 #3): build() guarantees that by
     // re-reading the written table, but an append cannot isolate its
     // own generation from the table afterwards — so the batch's rows
-    // are pinned with an eager localCheckpoint BEFORE either write. A
+    // are pinned with Materialize.once BEFORE either write. A
     // retried non-deterministic upstream re-executing between the two
     // writes can then never land a sidecar that disagrees with the
     // rows. Batch-sized (blocks+1 rows per admitted fingerprint).
-    val rows = indexRows(lo, admittedSig).localCheckpoint()
+    val rows = Materialize.once(indexRows(lo, admittedSig), "phash.append")
     BucketedSnapshot.write(rows, table, nb, "bkey", "append")
     BucketedSnapshot.write(dfRows(rows), table + "_df", nb, "bkey", "append")
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** MATERIALIZED video clip-match snapshot index (VERDICT r16 #5): the
   * [[PerceptualDedupIndex]] treatment for q214's inverted frame-hash
   * relation. Round 16's clip matching re-derived and re-banded the
@@ -83,15 +85,15 @@ object VideoClipIndex {
 
   /** Advance the snapshot WITHOUT a rebuild: append `admittedFrames`'
     * rows and a new sidecar df generation in the existing bucket
-    * layout. The rows are pinned with an eager localCheckpoint before
+    * layout. The rows are pinned with Materialize.once before
     * either write (the ADVICE r16 rule from [[PerceptualDedupIndex
     * .append]]): index rows and their sidecar generation must come
     * from the SAME execution. */
   def append(admittedFrames: DataFrame, table: String): Unit = {
     val s = admittedFrames.sparkSession
     val nb = BucketedSnapshot.bucketCount(s, table)
-    val rows = admittedFrames.select(col("fhash"), col("vid"), col("pos"))
-      .localCheckpoint()
+    val rows = Materialize.once(
+      admittedFrames.select(col("fhash"), col("vid"), col("pos")), "video.append")
     BucketedSnapshot.write(rows, table, nb, "fhash", "append")
     BucketedSnapshot.write(dfRows(rows), table + "_df", nb, "fhash", "append")
   }

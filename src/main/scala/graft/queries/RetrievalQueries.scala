@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
+import graft.expressions.NearestCentroid
 
 /** Retrieval layer over the documents/embeddings corpus (driver north
   * star; beyond the reference's own surface): inverted-index keyword
@@ -98,17 +99,16 @@ object RetrievalQueries {
     * feedback rounds — and Spark re-executes each reference's whole
     * scan+hash+explode+aggregate subtree (their projections differ, so
     * ReuseExchange cannot unify them; measured 10-15 parquet scans per
-    * query plan). An executor-local `localCheckpoint` evaluates the
+    * query plan). An executor-local [[Materialize.once]] evaluates the
     * frame once per invocation — always from the parquet inputs inside
     * the timed region, never across runs — and truncates the plan every
     * consumer compiles. At 100 TB this materialization IS the
     * production design: [[graft.operators.InvertedTextIndex]] serves
     * from exactly this frame persisted bucketed by wh; the in-plan
-    * derivation exists so DuckDB can replay it. Consumers are
-    * exempt-listed in NoEagerActionSpec (construction runs the
-    * checkpoint's jobs). */
+    * derivation exists so DuckDB can replay it. Construction runs the
+    * checkpoint's labelled jobs. */
   private def postingsM(s: SparkSession, d: String): DataFrame =
-    postings(s, d).localCheckpoint()
+    Materialize.once(postings(s, d), "retrieval.postings")
 
   /** (doc_id, pos, wh): POSITIONAL postings — every token occurrence
     * with its 0-based position. The phrase-search kernel (q183 derives
@@ -142,6 +142,17 @@ object RetrievalQueries {
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id").as("q_doc"))
   }
+
+  /** Bound of [[queryDocs]]: one doc per source, and a corpus's sources
+    * are a small fixed set (20 at every testdata scale). Every
+    * query-side frame this family collects is bounded over it. */
+  private[graft] val MaxQueryDocs = 256
+
+  /** [[queryDocs]] collected once and re-entered as a local relation,
+    * for the queries that feed it to several legs (the window chain
+    * over documents then runs once, not per leg). */
+  private def localQueryDocs(s: SparkSession, d: String): DataFrame =
+    Materialize.local(queryDocs(s, d), "retrieval.query_docs", MaxQueryDocs).df
 
   /** ≤[[TermsPerQuery]] rarest terms per query doc: (q_doc, wh, df),
     * ranked (df asc, wh asc). Rarest-first is both the relevance choice
@@ -271,10 +282,7 @@ object RetrievalQueries {
     * [[FuseDepth]])-row frames — negligible at any corpus size. */
   private def q181(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
-    // qdocs is ≤|sources| rows and referenced by both legs — collect
-    // once (the q189/q190 serving-seam discipline) so the window chain
-    // over documents runs once, not per leg
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val kw = rankTop(scored(s, d, postingsM(s, d), qdocs), "rk_kw", FuseDepth)
       .select(col("q_doc"), col("doc_id"), col("rk_kw"))
     val emb = Tables.embeddings(s, d)
@@ -402,7 +410,7 @@ object RetrievalQueries {
   private def q182(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)
 
     val kw = rankTop(
@@ -550,7 +558,8 @@ object RetrievalQueries {
     // referenced by both the phrase extraction and the candidate join —
     // materialized once per invocation (the postingsM rule; the
     // production path reads the InvertedTextIndex `_pos` companion)
-    val th2 = positionRows(Tables.documents(s, d)).localCheckpoint()
+    val th2 = Materialize.once(positionRows(Tables.documents(s, d)),
+      "q183.positions")
     val phrase = th2
       .join(broadcast(queryDocs(s, d)), col("doc_id") === col("q_doc"))
       .filter(col("pos").between(2, 4)) // 0-based ⇔ 1-based positions 3-5
@@ -613,11 +622,13 @@ object RetrievalQueries {
   private def q184(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
-    // the ranked hits are ≤|queries|×TopK rows and referenced twice
-    // (position probe + text fetch) — collected once, the q189 pattern
-    val ranked = localized(rankTop(scored(s, d, post, qdocs), "rk", TopK)
-      .select(col("q_doc"), col("rk"), col("doc_id")))
+    val qdocs = localQueryDocs(s, d)
+    // the ranked hits are referenced twice (position probe + text
+    // fetch) — collected once
+    val ranked = Materialize.local(
+      rankTop(scored(s, d, post, qdocs), "rk", TopK)
+        .select(col("q_doc"), col("rk"), col("doc_id")),
+      "q184.ranked", MaxQueryDocs * TopK).df
     val firstHit = positionRows(docs)
       .join(broadcast(
         queryTerms(s, d, post, qdocs).select(col("q_doc"), col("wh"))),
@@ -688,13 +699,13 @@ object RetrievalQueries {
     * The corpus shuffles exactly as often as q180: never. */
   private def q185(s: SparkSession, d: String): DataFrame = {
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
-    // terms is ≤|queries|×TermsPerQuery rows and referenced twice (the
-    // anti-join and the widened term set) — collected once; the first
-    // scoring round it feeds (prdocs) is likewise ≤|queries|×PrfDocs
-    // and feeds the expansion aggregation once
-    val terms = localized(queryTerms(s, d, post, qdocs))
-    val st = localized(stats(s, d))
+    val qdocs = localQueryDocs(s, d)
+    // terms is referenced twice (the anti-join and the widened term
+    // set) — collected once; the first scoring round it feeds (prdocs)
+    // feeds the expansion aggregation once
+    val terms = Materialize.local(queryTerms(s, d, post, qdocs),
+      "q185.terms", MaxQueryDocs * TermsPerQuery).df
+    val st = Materialize.local(stats(s, d), "q185.stats", 1).df
     val prdocs = rankTop(scoreCandidates(
         post.join(broadcast(terms), "wh").crossJoin(broadcast(st))),
         "rk", PrfDocs)
@@ -792,15 +803,16 @@ object RetrievalQueries {
     // possible under extreme doc-length skew (all-zero tfsat contribs),
     // and Spark's div-by-zero returns NULL while DuckDB's // raises —
     // the guard is applied identically on both engines
-    // ≤|queries|×FuseDepth rows, referenced twice (token-set broadcast
-    // + the MMR fold input) — collected once, the q189 pattern
-    val cands = localized(
+    // referenced twice (token-set broadcast + the MMR fold input) —
+    // collected once
+    val cands = Materialize.local(
       rankTop(scored(s, d, postingsM(s, d), queryDocs(s, d)),
         "rk", FuseDepth)
       .withColumn("maxs", max(col("score")).over(mw))
       .withColumn("rel_bp",
         expr("score div greatest(1L, maxs div 10000L)"))
-      .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")))
+      .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")),
+      "q186.candidates", MaxQueryDocs * FuseDepth).df
     registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).distinct()), "doc_id")
@@ -1270,7 +1282,6 @@ object RetrievalQueries {
     * payloads; per-query feature math is workload-bounded. The corpus
     * scales only the one token shuffle. */
   private def q189(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     graft.expressions.FloatVectorDot.register(s)
     // retrieved ∪ known-positive: the target doc always joins the pool
     // (rk_kw = 0 marks "scored but not retrieved" — it shares its own
@@ -1283,15 +1294,13 @@ object RetrievalQueries {
         when(col("rk") <= FuseDepth, col("rk")).otherwise(lit(0))
           .as("rk_kw"),
         col("doc_id"), col("n_hit"), col("score"))
-    // the pool is WORKLOAD-bounded (≤|queries|·21 rows at any corpus
-    // size) and referenced three times below (two id-pruning branches
-    // + the feature join) — a Spark subtree referenced thrice executes
-    // thrice, so the first-stage scoring pass runs ONCE and the
-    // collected rows re-inject as a local relation (the serving-seam
-    // pattern; q189 and its dependants are exempt-listed in
-    // NoEagerActionSpec for exactly this)
-    val candRows = candsPlan.collect().toSeq
-    val cands = s.createDataFrame(candRows.asJava, candsPlan.schema)
+    // the pool (≤ FuseDepth + 1 rows per query doc) is referenced three
+    // times below (two id-pruning branches + the feature join) — a
+    // Spark subtree referenced thrice executes thrice, so the
+    // first-stage scoring pass runs ONCE and the collected rows
+    // re-enter as a local relation
+    val cands = Materialize.local(candsPlan, "q189.pool",
+      MaxQueryDocs * (FuseDepth + 1)).df
     registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).unionByName(
@@ -1426,28 +1435,21 @@ object RetrievalQueries {
     * the broadcast centroid table, the candidate join keys on the cell
     * — against the materialized index it is the pruned-bucket scan);
     * the fusion and recall bookkeeping are ≤3×|queries| rows. */
-  /** Collect a workload-bounded leg (≤|queries|·FuseDepth rows at any
-    * corpus size) and re-inject it as a local relation — q190 consumes
-    * each retrieval leg twice (fusion + its own recall row), and a
-    * subtree referenced twice executes twice (the round-14
-    * repeated-subtree sweep; exemption recorded in NoEagerActionSpec). */
-  private def localized(df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
-
   private def q190(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)
 
-    // keyword leg — InvertedTextIndex.search's formula
-    val kw = localized(rankTop(
+    // keyword leg — InvertedTextIndex.search's formula. Each leg is
+    // consumed twice (fusion + its own recall row), so the legs are
+    // collected once and re-entered
+    val kw = Materialize.local(rankTop(
       scoreCandidates(post.join(broadcast(terms), "wh")
         .crossJoin(broadcast(stats(s, d)))),
       "rk_kw", FuseDepth)
-      .select(col("q_doc"), col("doc_id"), col("rk_kw")))
+      .select(col("q_doc"), col("doc_id"), col("rk_kw")),
+      "q190.kw", MaxQueryDocs * FuseDepth).df
 
     // semantic leg — AnnIvfIndex.search's math over the label cells
     val emb = Tables.embeddings(s, d)
@@ -1473,16 +1475,17 @@ object RetrievalQueries {
         col("cbarq"))), "dim")
       .groupBy(col("q_doc"), col("c_label"))
       .agg(sum(col("u") * col("cbarq")).as("dotnum"))
-    // collected once (≤|queries|·cells rows): BOTH probe budgets below
-    // slice this frame, and the centroid pipeline above it must run
-    // once, not once per budget
-    val probeRk = localized(qdots
+    // collected once (a row per query doc and cell): BOTH probe
+    // budgets below slice this frame, and the centroid pipeline above
+    // it must run once, not once per budget
+    val probeRk = Materialize.local(qdots
       .join(broadcast(cmeta.withColumnRenamed("label", "c_label")),
         "c_label")
       .withColumn("score", col("dotnum").cast("double") /
         sqrt(greatest(col("cnormsq"), lit(1L)).cast("double")))
       .withColumn("pk", row_number().over(Window.partitionBy(col("q_doc"))
-        .orderBy(col("score").desc, col("c_label").asc))))
+        .orderBy(col("score").desc, col("c_label").asc))),
+      "q190.probes", MaxQueryDocs * NearestCentroid.MaxCells).df
     val qembs = emb.join(broadcast(qdocs), col("vec_id") === col("q_doc"))
       .select(col("q_doc"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"))
@@ -1504,7 +1507,8 @@ object RetrievalQueries {
         .filter(col("rk_sem") <= FuseDepth)
         .select(col("q_doc"), col("doc_id"), col("rk_sem"))
     }
-    val sem = localized(semAt(IvfNprobe))
+    val sem = Materialize.local(semAt(IvfNprobe), "q190.sem",
+      MaxQueryDocs * FuseDepth).df
     val sem4 = semAt(2 * IvfNprobe)
 
     // hybrid — HybridRetrieval's RRF over the two production legs
@@ -1661,7 +1665,7 @@ object RetrievalQueries {
         Window.partitionBy(col("q_doc"))
           .orderBy(col("model_score").desc, col("doc_id").asc)))
     // ≤|sources| rows, referenced by both recall rows — collected once
-    val qdocs = localized(queryDocs(s, d))
+    val qdocs = localQueryDocs(s, d)
     val first = qdocs.join(
         scored.filter(col("label") && col("rk_kw") > 0)
           .select(col("q_doc"), col("rk_kw").cast("long").as("self_rk")),
@@ -1756,7 +1760,6 @@ object RetrievalQueries {
     * aggregable, which is why it suits a 100 TB training table where
     * an iterative fit would pay a pass per epoch. */
   private def q193(s: SparkSession, d: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val fxPlan = q189(s, d)
       .select(col("q_doc"), col("doc_id"), col("label"), col("rk_kw"),
         expr("cast(round(cos_sim * 1000000.0) as bigint)").as("f1"),
@@ -1766,14 +1769,12 @@ object RetrievalQueries {
       .withColumn("split", when(
         substring(md5(col("q_doc").cast("string").cast("binary")), 1, 2)
           <= "7f", "train").otherwise("holdout"))
-    // the feature set is WORKLOAD-bounded (|queries| × ≤21 rows at any
-    // corpus size) and three consumers need it (train aggregate,
-    // holdout scoring, holdout query list) — a Spark subtree referenced
-    // three times executes three times, so collect once and re-inject
-    // as a local relation (the InvertedTextIndex serving-seam pattern;
-    // q193 is exempt-listed in NoEagerActionSpec for exactly this)
-    val fxRows = fxPlan.collect().toSeq
-    val fx = s.createDataFrame(fxRows.asJava, fxPlan.schema)
+    // the feature set (q189's pool: ≤ FuseDepth + 1 rows per query doc)
+    // has three consumers (train aggregate, holdout scoring, holdout
+    // query list) — a Spark subtree referenced three times executes
+    // three times, so collect once and re-enter as a local relation
+    val fx = Materialize.local(fxPlan, "q193.features",
+      MaxQueryDocs * (FuseDepth + 1)).df
     val nm = fx.filter(col("split") === "train").agg(
         (sum(col("f1") * col("f1")) + 1L).as("a11"),
         sum(col("f1") * col("f2")).as("a12"),

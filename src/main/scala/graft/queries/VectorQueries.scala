@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
+import graft.expressions.NearestCentroid
 import graft.functions.VectorFunctions._
 
 /** Similarity search over the embedding column (driver north star):
@@ -414,17 +415,18 @@ object VectorQueries {
         posexplode(col("embedding")).as(Seq("dim", "v")))
       .withColumn("u", round(col("v").cast("double") * 1e6).cast("long"))
       .withColumn("subsp", expr("dim div 16"))
-    // The codebook frames are k·dims (cs) and k·m (cmeta) rows — the
-    // bounded quantizer artifact (never corpus-sized), exactly what
+    // The codebook frames are k·dims (cs) and k·m ≤ k·dims (cmeta)
+    // rows — the quantizer artifact (never corpus-sized), exactly what
     // AnnIvfIndex broadcasts and q197 collects. Collected ONCE and
-    // re-injected as local relations (r18): fully-lazy, every PQ query
+    // re-entered as local relations (r18): fully-lazy, every PQ query
     // re-executed the two aggregation chains per reference (codes, the
     // ADC query table, Lloyd's dots — 16-32 AQE-materialized exchange
     // jobs per query at 300-500 ms of driver latency each); as local
-    // rows each reference is a trivial broadcast. NoEagerActionSpec
-    // exempts the family for exactly this documented collect.
-    val csL = localized(s, cs(dims))
-    val cmetaL = localized(s, cmeta(emb, csL))
+    // rows each reference is a trivial broadcast.
+    val matrix = NearestCentroid.MaxCells * NearestCentroid.MaxDims
+    val csL = Materialize.local(cs(dims), "pq.codebook", matrix).df
+    val cmetaL = Materialize.local(cmeta(emb, csL), "pq.codebook_meta",
+      matrix).df
     val xstat = dims.groupBy(col("vec_id"), col("subsp"))
       .agg(sum(col("u") * col("u")).as("xsumsq"))
     val codes = dims
@@ -450,13 +452,6 @@ object VectorQueries {
       .agg(sum(col("csum") * col("csum")).as("csumsq"))
       .join(emb.groupBy(col("label")).agg(count(lit(1)).as("n")), "label")
       .withColumnRenamed("label", "c_label")
-
-  /** Collect a bounded frame once and re-enter it as a local relation
-    * (the q189/q190/q197 serving-seam discipline). */
-  private def localized(s: SparkSession, df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(df.collect().toSeq.asJava, df.schema)
-  }
 
   /** Shared oracle-SQL prefix for the PQ family (q126/q127/q130): the
     * DuckDB mirror of [[pq]]. One definition per engine — a change to
@@ -565,12 +560,13 @@ object VectorQueries {
   /** Per-query ADC distance table (q127/q130): for every (query,
     * subspace, codeword), the exact distance part
     * ‖q_sub‖² + ‖c‖² − 2q·c (10¹²-scaled), plus the raw sub-dot for
-    * full-vector probe ranking. Queries × k × m rows — always tiny. */
+    * full-vector probe ranking. [[PqQueries]] × k × m rows — always
+    * tiny. */
   private def pqQueryTable(p: Pq): DataFrame = {
-    val qstat = p.xstat.filter(col("vec_id") < 8)
+    val qstat = p.xstat.filter(col("vec_id") < PqQueries)
       .select(col("vec_id").as("q_id"), col("subsp"),
         col("xsumsq").as("qsumsq"))
-    val tbl = p.dims.filter(col("vec_id") < 8)
+    val tbl = p.dims.filter(col("vec_id") < PqQueries)
       .join(broadcast(p.cs.select(col("label").as("c_label"), col("dim"),
         col("csum"))), "dim")
       .groupBy(col("vec_id").as("q_id"), col("subsp"), col("c_label"))
@@ -580,11 +576,14 @@ object VectorQueries {
       .join(broadcast(qstat), Seq("q_id", "subsp"))
       .select(col("q_id"), col("subsp"), col("c_label"), col("dotnum"),
         (col("qsumsq").cast("double") + col("score")).as("part"))
-    // queries × k × m rows — workload-bounded at any corpus size;
     // collected once so q130's three references (probes, the cand
     // broadcast, the full-dot reuse) don't re-run the dim chain.
-    localized(p.dims.sparkSession, tbl)
+    Materialize.local(tbl, "pq.query_table",
+      PqQueries * NearestCentroid.MaxCells * NearestCentroid.MaxDims).df
   }
+
+  /** The PQ queries' vectors: `vec_id` < 8. */
+  private val PqQueries = 8
 
   /** Fixed-order pivot sum of the 4 per-subspace ADC parts + per-query
     * top-k (rounded-distance rank, c_id tiebreak — the q110 rule). */
@@ -1756,7 +1755,6 @@ object VectorQueries {
     * RECALL PROBE pays brute force so serving never has to). */
   private def q197(s: SparkSession, d: String): DataFrame = {
     graft.expressions.FloatVectorDot.register(s)
-    import graft.expressions.NearestCentroid
     val emb = Tables.embeddings(s, d)
     // one row per vector: the true cell and the micro-unit vector
     val base = emb.select(col("vec_id"), col("embedding"),

@@ -7,9 +7,9 @@ import graft.operators.ConnectedComponents
   * on random graphs, and the ROUND BOUND on the adversarial deep-chain
   * shape — the pointer jump must converge in ~⌈log₂ diameter⌉ rounds
   * where plain propagation pays one round per hop (VERDICT r7 #5).
-  * These cases pin the DISTRIBUTED fixpoint, so the r18 small-graph
-  * driver cutover is disabled for them via the session conf; the last
-  * case pins local ≡ distributed on randomized graphs. */
+  * These cases pin the DISTRIBUTED fixpoint, so they call it directly,
+  * past the r18 small-graph driver cutover; the last case pins
+  * local ≡ distributed on randomized graphs. */
 class ConnectedComponentsSpec extends SparkSpec {
 
   private def sym(pairs: Seq[(Long, Long)]) = {
@@ -17,19 +17,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
   }
 
-  /** Run `body` with the driver-union-find cutover disabled (forces
-    * the distributed fixpoint the round-bound cases pin). */
-  private def distributedOnly[T](body: => T): T = {
-    spark.conf.set("spark.graft.cc.localEdgeCutoff", "0")
-    try body
-    finally spark.conf.unset("spark.graft.cc.localEdgeCutoff")
-  }
-
   test("deep chain: all nodes label 0, rounds ~ log2(diameter) not diameter") {
     val n = 64
     val chain = (0L until (n - 1).toLong).map(i => (i, i + 1))
-    val (labels, rounds) =
-      distributedOnly(ConnectedComponents.minLabel(sym(chain)))
+    val (labels, rounds) = ConnectedComponents.fixpoint(sym(chain))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n)
     assert(got.values.forall(_ == 0L), s"non-zero labels: ${got.filter(_._2 != 0)}")
@@ -58,8 +49,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       val root = seen.min
       seen.foreach(v => expected(v) = root)
     }
-    val (labels, rounds) =
-      distributedOnly(ConnectedComponents.minLabel(sym(pairs)))
+    val (labels, rounds) = ConnectedComponents.fixpoint(sym(pairs))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected.toMap, "labels differ from BFS oracle")
     assert(rounds >= 1 && rounds <= 8)
@@ -68,8 +58,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("degenerate inputs: empty edge list and self-loops are total") {
     import spark.implicits._
     // empty graph → empty labels, terminates
-    val (empty, emptyRounds) = distributedOnly(ConnectedComponents.minLabel(
-      Seq.empty[(Long, Long)].toDF("src", "dst")))
+    val (empty, emptyRounds) = ConnectedComponents.fixpoint(
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
     assert(empty.count() == 0 && emptyRounds >= 1)
     // self-loops only: every node is its own singleton component
     // (the default small-graph path — exercises the cutover's
@@ -82,8 +72,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("isolated pairs converge in the minimum rounds (1 improve + 1 confirm)") {
     val pairs = Seq.tabulate(10)(i => (2L * i, 2L * i + 1))
-    val (labels, rounds) =
-      distributedOnly(ConnectedComponents.minLabel(sym(pairs)))
+    val (labels, rounds) = ConnectedComponents.fixpoint(sym(pairs))
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(pairs.forall { case (a, b) => got(a) == a && got(b) == a })
     assert(rounds <= 2, s"pairs took $rounds rounds")
@@ -97,7 +86,7 @@ class ConnectedComponentsSpec extends SparkSpec {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).filter(p => p._1 != p._2)
       val (loc, locRounds) = ConnectedComponents.minLabel(sym(pairs))
       assert(locRounds == 0, "small graph must take the driver path")
-      val (dist, _) = distributedOnly(ConnectedComponents.minLabel(sym(pairs)))
+      val (dist, _) = ConnectedComponents.fixpoint(sym(pairs))
       val a = loc.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       val b = dist.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
       assert(a.sameElements(b), s"trial $trial: local != distributed")
