@@ -56,6 +56,9 @@ object Registration {
     NativeFunction("nearest_centroid", classOf[NearestCentroid],
       "(u, cells, cbarq, cnormsq) - the IVF cell of a micro-unit BIGINT vector under a foldable centroid matrix: max dot/sqrt(greatest(cnormsq, 1)), ties to the lower cell (codegen).",
       NearestCentroid.build),
+    NativeFunction("mmr_select", classOf[MmrSelect],
+      "(cs, topK, lambdaMilli) - the MMR picks of one query's rank-sorted candidates array<struct<…, doc_id, rel_bp, tset>>: max λ·rel_bp − (1000−λ)·maxJaccardBp, ties to the lower doc_id.",
+      MmrSelect.build),
     NativeFunction("md5_prefix_long", classOf[Md5PrefixLong],
       "(str, nHex) - the first nHex hex digits of md5(str) as a BIGINT (codegen).",
       Md5PrefixLong.build),

@@ -450,8 +450,8 @@ object InvertedTextIndex {
     * scan, their token sets off the doc_id-PRUNED `_fwd` forward
     * companion (q186 re-derives them from a corpus scan; the index
     * reads exactly the ≤|queries|·fuseDepth touched rows), and the
-    * greedy rounds are the SAME barriered array-fold
-    * ([[RetrievalQueries.mmrFold]] — fold-for-fold the oracle's).
+    * greedy rounds are the SAME `mmr_select` kernel
+    * ([[RetrievalQueries.mmrFold]] — pick-for-pick the oracle's).
     * Row-for-row q186's output on q186's workload
     * (InvertedTextIndexSpec).
     *

@@ -785,11 +785,10 @@ object RetrievalQueries {
     * `10000·score`, which overflows BIGINT at corpus scale, the q174
     * checksum lesson), similarity is token-set Jaccard in bp, and the
     * MMR objective is a milli-weighted difference of the two.
-    * The [[TopK]] − 1 greedy rounds are UNROLLED as scalar array-HOF
-    * folds over ONE collected row per query (the sequential greedy is
-    * the definition of MMR; the fold keeps it one declarative plan,
-    * not a driver loop of actions), each round pinned behind
-    * opt_barrier so the state evaluates once per round.
+    * The [[TopK]] − 1 greedy rounds run in [[mmrFold]]'s native
+    * `mmr_select` kernel over ONE collected row per query (the
+    * sequential greedy is the definition of MMR; the kernel keeps it
+    * one declarative plan, not a driver loop of actions).
     *
     * Scale shape: everything after q180's scoring is query-workload-
     * bounded — each query collapses to one row of ≤[[FuseDepth]]
@@ -824,66 +823,26 @@ object RetrievalQueries {
     * rel_bp, tset) → the diversified picks (q_doc, pick, doc_id,
     * rel_bp, div_bp). Shared by q186 and
     * [[graft.operators.InvertedTextIndex.mmrSearch]] so the index-
-    * served form is fold-for-fold the oracle's.
+    * served form is pick-for-pick the oracle's.
     *
-    * The `topK` − 1 greedy rounds run INSIDE one collected row per
-    * query, as scalar array-HOF folds (the q170 fold-chain style): a
-    * per-round DataFrame recurrence re-embeds — and re-EXECUTES — the
-    * scoring subtree once per reference (measured 245 file scans / 410
-    * exchanges, no ReuseExchange under AQE), while here the upstream
-    * work runs exactly once and the ≤FuseDepth-element greedy is
-    * per-row arithmetic. `transform(array(x), b -> …)[0]` is the
-    * let-binding idiom — it evaluates the bound expression once. */
+    * Each query's candidates collapse to ONE row (their rank-sorted
+    * `collect_list`), and the `topK` − 1 greedy rounds run inside that
+    * row as the native [[graft.expressions.MmrSelect]] kernel: each
+    * token set is sorted once, and each round merge-intersects only
+    * the newest pick against the remaining candidates. A per-round
+    * DataFrame recurrence would re-embed — and re-EXECUTE — the scoring
+    * subtree once per reference (measured 245 file scans / 410
+    * exchanges, no ReuseExchange under AQE); here the upstream work
+    * runs exactly once. */
   private[graft] def mmrFold(candsWithTsets: DataFrame, topK: Int)
       : DataFrame = {
-    val s = candsWithTsets.sparkSession
-    val lam = MmrLambdaMilli
-    val lam1 = 1000L - MmrLambdaMilli
-    def jacSql(c: String, s: String): String =
-      s"(10000L * cast(size(array_intersect($c.tset, $s.tset)) as bigint)) div " +
-        s"(cast(size($c.tset) as bigint) + cast(size($s.tset) as bigint) - " +
-        s"cast(size(array_intersect($c.tset, $s.tset)) as bigint))"
-    // each remaining candidate scored against the current picks:
-    // struct(v = λ·rel − (1−λ)·maxsim, d = maxsim, c = candidate)
-    val scoredSql =
-      "transform(st.rem, c -> transform(array(" +
-        s"array_max(transform(st.sel, s -> ${jacSql("c", "s")}))), " +
-        s"m -> named_struct('v', ${lam}L * c.rel_bp - ${lam1}L * m, " +
-        "'d', m, 'c', c))[0])"
-    val bestSql =
-      s"transform(array($scoredSql), ss -> " +
-        "aggregate(slice(ss, 2, size(ss) - 1), element_at(ss, 1), " +
-        "(acc, x) -> IF(x.v > acc.v OR (x.v = acc.v AND " +
-        "x.c.doc_id < acc.c.doc_id), x, acc)))[0]"
-    def roundSql(t: Int): String =
-      "CASE WHEN size(st.rem) = 0 THEN st ELSE " +
-        s"transform(array($bestSql), b -> named_struct(" +
-        "'sel', concat(st.sel, array(named_struct(" +
-        s"'pick', ${t}L, 'doc_id', b.c.doc_id, 'rel_bp', b.c.rel_bp, " +
-        "'div_bp', b.d, 'tset', b.c.tset))), " +
-        "'rem', filter(st.rem, c -> c.doc_id != b.c.doc_id)))[0] END"
-    var grouped = candsWithTsets
+    graft.expressions.MmrSelect.register(candsWithTsets.sparkSession)
+    candsWithTsets
       .groupBy(col("q_doc"))
       .agg(sort_array(collect_list(struct(col("rk"), col("doc_id"),
         col("rel_bp"), col("tset")))).as("cs"))
-      .withColumn("st", expr(
-        "named_struct(" +
-          "'sel', array(named_struct('pick', 1L, " +
-          "'doc_id', element_at(cs, 1).doc_id, " +
-          "'rel_bp', element_at(cs, 1).rel_bp, 'div_bp', 0L, " +
-          "'tset', element_at(cs, 1).tset)), " +
-          "'rem', transform(slice(cs, 2, size(cs) - 1), " +
-          "c -> named_struct('doc_id', c.doc_id, 'rel_bp', c.rel_bp, " +
-          "'tset', c.tset)))"))
-    // opt_barrier pins each round as its own Project: roundSql
-    // references `st` ~6 times, so letting CollapseProject inline the
-    // rounds into one expression is a 6^t blowup (measured 3× slower
-    // than even the DataFrame recurrence); behind the barrier each
-    // round evaluates the previous state ONCE per row
-    graft.expressions.OptimizerBarrier.register(s)
-    for (t <- 2 to topK)
-      grouped = grouped.withColumn("st", expr(s"opt_barrier(${roundSql(t)})"))
-    grouped.select(col("q_doc"), explode(col("st.sel")).as("s"))
+      .select(col("q_doc"), explode(call_function("mmr_select", col("cs"),
+        lit(topK), lit(MmrLambdaMilli))).as("s"))
       .select(col("q_doc"), col("s.pick").as("pick"),
         col("s.doc_id").as("doc_id"), col("s.rel_bp").as("rel_bp"),
         col("s.div_bp").as("div_bp"))

@@ -43,7 +43,7 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(names.toSet == Set("sorted_long_intersect_count",
       "float_vector_dot", "rolling_fingerprint", "token_window_hashes",
       "opt_barrier", "sign_lsh_sig", "md5_prefix_long", "md5_prefix_longs",
-      "ngram_md5_longs", "minhash_sig", "nearest_centroid"))
+      "ngram_md5_longs", "minhash_sig", "nearest_centroid", "mmr_select"))
     assert(names.distinct.size == names.size)
     withExtensionsSession { s2 =>
       val missing = names.filterNot(n =>

@@ -14,7 +14,10 @@
 # The summary gives, per declared end-to-end metric, both sides'
 # median and quartiles, the median gap, whether it exceeds the
 # parent's IQR, and in how many pairs the change won (by the metric's
-# `better` field in BENCHMARK.json; a tie is not a win). The clone is
+# `better` field in BENCHMARK.json; a tie is not a win). Under each
+# metric a second line gives both sides' median and quartiles over only
+# the runs whose host_steal_share is below 5%, with how many runs that
+# is; it is printed in addition to the full figures. The clone is
 # removed at exit. Nothing under perfbench/ or BENCHMARK.json is
 # written.
 set -euo pipefail
@@ -79,6 +82,8 @@ pairs = [s for s in seeds if ("parent", s) in by and ("change", s) in by]
 bad = [r for r in rows if not r["correct"] or r["failed"]]
 print("== %d pairs; %d run(s) not correct or with failures" % (len(pairs), len(bad)))
 
+STEAL_CAP = 0.05
+
 def quart(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -101,4 +106,18 @@ for m in declared:
              100.0 * gap / pmed if pmed else 0.0,
              ">" if abs(gap) > pq3 - pq1 else "<=", pq3 - pq1,
              wins, len(pairs), m["better"]))
+    # the same figures over the runs on a quiet host only, printed next
+    # to the full ones (wins above stay counted over all pairs)
+    parts = []
+    for side in ("parent", "change"):
+        xs = [by[(side, s)]["metrics"][name] for s in pairs
+              if (by[(side, s)]["host_steal_share"] is not None
+                  and by[(side, s)]["host_steal_share"] < STEAL_CAP)]
+        if xs:
+            q1, med, q3 = quart(xs)
+            parts.append("%s %.4g (%.4g-%.4g) over %d run(s)"
+                         % (side, med, q1, q3, len(xs)))
+        else:
+            parts.append("%s: no run" % side)
+    print("%-18s steal<%g%%: %s" % ("", 100 * STEAL_CAP, "  ".join(parts)))
 EOF

@@ -12,7 +12,16 @@ sorts rows, compares exactly. Dev tool only — never a library dep.
 its third argument: only those queries are checked, and each of them
 must still have its output dir. An unknown name is an error. Without
 it, every query in oracle_sql.json is checked.
+
+Each query's canonical oracle answer (its column names and `rows_key`
+rows) is cached under .oracle_cache/ at the repository root (ignored by
+git), keyed on the scale directory, a SHA-256 of the oracle SQL and the
+path, size and mtime of every input table file. A miss, or any change
+to the SQL or the tables, recomputes the answer in DuckDB; an oracle
+error is never cached. Delete the directory to drop the cache.
 """
+import gzip
+import hashlib
 import json
 import math
 import sys
@@ -45,6 +54,40 @@ def rows_key(cols, rows):
     return sorted("|".join(canon(r[i]) for i in order) for r in rows)
 
 
+CACHE_DIR = Path(__file__).resolve().parent.parent / ".oracle_cache"
+
+
+def tables_signature(sf_dir):
+    """(path, size, mtime_ns) of each input table file."""
+    sig = []
+    for t in TABLES:
+        p = Path(sf_dir).resolve() / f"{t}.parquet"
+        if p.exists():
+            st = p.stat()
+            sig.append([str(p), st.st_size, st.st_mtime_ns])
+    return sig
+
+
+def oracle_answer(con, sf_dir, tables_sig, sql):
+    """(cols, rows_key rows) of `sql`, from the cache or from DuckDB."""
+    key = hashlib.sha256(json.dumps({
+        "scale": str(Path(sf_dir).resolve()),
+        "sql_sha256": hashlib.sha256(sql.encode()).hexdigest(),
+        "tables": tables_sig}).encode()).hexdigest()
+    path = CACHE_DIR / f"{key}.json.gz"
+    if path.exists():
+        hit = json.loads(gzip.decompress(path.read_bytes()))
+        return hit["cols"], hit["rows"]
+    d = con.sql(sql)
+    dcols, drows = [c.lower() for c in d.columns], d.fetchall()
+    dk = rows_key(dcols, drows)
+    CACHE_DIR.mkdir(exist_ok=True)
+    tmp = path.with_suffix(".tmp")
+    tmp.write_bytes(gzip.compress(json.dumps({"cols": dcols, "rows": dk}).encode()))
+    tmp.replace(path)
+    return dcols, dk
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
@@ -60,6 +103,7 @@ def main():
             sys.exit("unknown query name(s) in filter: "
                      + ", ".join(sorted(unknown)))
         oracle = {k: v for k, v in oracle.items() if k in only}
+    tables_sig = tables_signature(sf_dir)
     n_pass = n_fail = 0
     for name in sorted(oracle):
         qdir = Path(out_dir) / name
@@ -70,8 +114,7 @@ def main():
         try:
             s = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
             scols, srows = [c.lower() for c in s.columns], s.fetchall()
-            d = con.sql(oracle[name])
-            dcols, drows = [c.lower() for c in d.columns], d.fetchall()
+            dcols, dk = oracle_answer(con, sf_dir, tables_sig, oracle[name])
         except Exception as e:
             print(f"FAIL {name}: {str(e)[:200]}")
             n_fail += 1
@@ -80,7 +123,7 @@ def main():
             print(f"FAIL {name}: cols spark={sorted(scols)} duck={sorted(dcols)}")
             n_fail += 1
             continue
-        sk, dk = rows_key(scols, srows), rows_key(dcols, drows)
+        sk = rows_key(scols, srows)
         if len(sk) != len(dk):
             print(f"FAIL {name}: rows spark={len(sk)} duck={len(dk)}")
             n_fail += 1
