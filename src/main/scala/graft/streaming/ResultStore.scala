@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Keyed result table with TTL — the engine analog of the reference's
   * `SETEX result:{job_id} 3600` store (K1 `redis_queue.py:305-314`,
   * retrieval K2 `:316-344`, retention K5 `:382-397`).
@@ -41,11 +43,10 @@ object ResultStore {
     * to `nowUs` is expired (reference returns nothing after SETEX TTL). */
   def get(spark: SparkSession, path: String, jobId: String, nowUs: Long,
       ttlUs: Long = 3600L * 1000000L): Option[org.apache.spark.sql.Row] = {
-    val rows = latest(spark, path)
+    // `latest` keeps one row per job_id
+    Materialize.rows(latest(spark, path)
       .filter(col("job_id") === jobId &&
-        col("stored_at_us") > nowUs - ttlUs)
-      .collect()
-    rows.headOption
+        col("stored_at_us") > nowUs - ttlUs), "results.get", 1).headOption
   }
 
   /** K2 poll-wait: block until the result appears or the timeout lapses

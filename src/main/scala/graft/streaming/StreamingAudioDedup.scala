@@ -3,7 +3,6 @@ package graft.streaming
 import scala.util.Try
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{AudioDsp, WavCodec}
 import graft.operators.PerceptualDedupIndex
@@ -25,16 +24,13 @@ import graft.operators.PerceptualDedupIndex
   * 16 bits ≥ 63 bits − 3 flips), so banded state sees every pair the
   * batch verify would.
   *
-  * State design (the [[StreamingImageDedup]] rules): keyed by
-  * (block-idx, block-value) — the key the snapshot index buckets
-  * on — so it shards with the shuffle. Each key retains at most
-  * `maxPerBand` (clipId, fp) entries (16 bytes each), newest-first;
-  * `stateTtlMs` drops idle keys wholesale. Total state is O(active
-  * blocks · maxPerBand) regardless of stream length. The audio
-  * fingerprint is high-entropy (measured min cross-doc hd = 12 at
-  * sf0.01), so unlike the image gate the per-band bound is a backstop
-  * — the analog of AudioLayout's never-firing 4096 df cap — not a
-  * load-bearing hot-bucket defense.
+  * State is keyed by (block-idx, block-value) — the key the snapshot
+  * index buckets on — and each key keeps at most `maxPerBand`
+  * (clipId, fp) entries (16 bytes each) under [[BandedGate]]'s state
+  * rules. The audio fingerprint is high-entropy (measured min
+  * cross-doc hd = 12 at sf0.01), so unlike the image gate the per-band
+  * bound is a backstop — the analog of AudioLayout's never-firing 4096
+  * df cap — not a load-bearing hot-bucket defense.
   *
   * Emission semantics: AT-LEAST-ONCE, at every band where the earlier
   * clip is still in that band's state (≤ 4 per pair) — the ADVICE r15
@@ -87,36 +83,14 @@ object StreamingAudioDedup {
   def attach(clips: Dataset[Clip], maxPerBand: Int = 64,
       stateTtlMs: Long = 0L): Dataset[DupPair] = {
     import clips.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    clips
-      .flatMap(c => fingerprint(c.bytes).toSeq.flatMap(bands(c.clipId, _)))
-      .groupByKey(_.band)
-      .flatMapGroupsWithState[List[(Long, Long)], DupPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[(Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[DupPair]
-            in.toSeq.sortBy(_.clipId).foreach { bc =>
-              seen.foreach { case (id, fp) =>
-                if (id != bc.clipId) {
-                  val d = java.lang.Long.bitCount(fp ^ bc.fp)
-                  if (d <= L.hdMax) out += DupPair(bc.clipId, id, d)
-                }
-              }
-              // one slot per clipId (the StreamingNearDup replay rule)
-              seen = ((bc.clipId, bc.fp) ::
-                seen.filterNot(_._1 == bc.clipId)).take(maxPerBand)
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    BandedGate.attach[BandedClip, (Long, Long), DupPair](
+      clips.flatMap(c => fingerprint(c.bytes).toSeq.flatMap(bands(c.clipId, _))),
+      _.band,
+      BandedGate.Rule(_.clipId, _._1, bc => Some((bc.clipId, bc.fp)),
+        { case (bc, (id, fp)) =>
+          val d = java.lang.Long.bitCount(fp ^ bc.fp)
+          Option.when(d <= L.hdMax)(DupPair(bc.clipId, id, d))
+        }),
+      maxPerBand, stateTtlMs)
   }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.expressions.Md5Hashes
 import graft.queries.TextQueries
 
 /** Streaming CONTAINMENT gate — the last member of the streaming dedup
@@ -42,12 +43,10 @@ import graft.queries.TextQueries
   * per-band precedent) — downstream dedup is one
   * `dropDuplicatesWithinWatermark` on the pair key.
   *
-  * State design (the 100 TB story): keyed by trigram hash, it shards
-  * with the same shuffle key the batch inverted index joins on;
-  * per-key membership ≤ `maxPerShingle` entries of ~80 B, and
-  * `stateTtlMs` drops idle shingle keys wholesale (the
-  * [[StreamingDedup]] horizon rule), so state is O(active shingles ·
-  * df-cap), not corpus-shaped.
+  * State is keyed by trigram hash — the shuffle key the batch inverted
+  * index joins on — under [[BandedGate]]'s state rules: per-key
+  * membership ≤ `maxPerShingle` entries of ~80 B. Every shingle row
+  * stores; only the argmin rows probe.
   */
 object StreamingContainment {
 
@@ -67,16 +66,10 @@ object StreamingContainment {
     * 8-perm word minhash). */
   private type Entry = (Long, Long, Array[Long])
 
-  private def md5Hex(s: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
-
   /** The repo-wide 32-bit token hash (first 8 md5 hex chars as a long)
     * — bit-identical to CoreFunctions.hash32 / the batch oracles. */
   private[graft] def hash32(s: String): Long =
-    java.lang.Long.parseLong(md5Hex(s).substring(0, 8), 16)
+    Md5Hashes.prefixLong(UTF8String.fromString(s), 8)
 
   /** Distinct 32-bit trigram hashes — q168's shingle universe. */
   private[graft] def triHashes(words: Array[String]): Array[Long] =
@@ -132,54 +125,30 @@ object StreamingContainment {
       maxPerShingle: Int = 16, stateTtlMs: Long = 0L)
       : Dataset[ContainPair] = {
     import docs.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs
-      .flatMap { d =>
-        val words = d.text.split(' ')
-        val tri = triHashes(words)
-        if (tri.isEmpty) Iterator.empty
-        else {
-          val sig = wordSig(words.distinct.map(hash32))
-          val nw = words.distinct.length.toLong
-          // argmin trigrams are elements of tri, so every probe key is
-          // also an index key — the flag marks which rows also query
-          val probes = argminProbes(tri).toSet
-          tri.iterator.map(th =>
-            ShingleRow(th, probes.contains(th), d.docId, nw, sig))
-        }
+    val shingles = docs.flatMap { d =>
+      val words = d.text.split(' ')
+      val tri = triHashes(words)
+      if (tri.isEmpty) Iterator.empty
+      else {
+        val sig = wordSig(words.distinct.map(hash32))
+        val nw = words.distinct.length.toLong
+        // argmin trigrams are elements of tri, so every probe key is
+        // also an index key — the flag marks which rows also query
+        val probes = argminProbes(tri).toSet
+        tri.iterator.map(th =>
+          ShingleRow(th, probes.contains(th), d.docId, nw, sig))
       }
-      .groupByKey(_.th)
-      .flatMapGroupsWithState[List[Entry], ContainPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[Entry]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[ContainPair]
-            in.toSeq.sortBy(_.docId).foreach { r =>
-              if (r.probe) {
-                seen.foreach { case (id, nw2, sig2) =>
-                  if (id != r.docId) {
-                    val c = estContainment(r.sig, r.nw, sig2, nw2)
-                    if (c >= minEst) out += ContainPair(r.docId, id, c)
-                  }
-                }
-              }
-              // every arriving doc indexes under its own trigram keys
-              // (one slot per docId; df-capped newest-first — the
-              // stop-shingle rule: a key at cap is common, not
-              // evidence)
-              seen = ((r.docId, r.nw, r.sig) ::
-                seen.filterNot(_._1 == r.docId)).take(maxPerShingle)
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    }
+    // every row indexes under its own trigram key, df-capped
+    // newest-first — the stop-shingle rule: a key at cap is common, not
+    // evidence
+    BandedGate.attach[ShingleRow, Entry, ContainPair](shingles, _.th,
+      BandedGate.Rule(_.docId, _._1, r => Some((r.docId, r.nw, r.sig)),
+        { case (r, (id, nw2, sig2)) =>
+          val c = estContainment(r.sig, r.nw, sig2, nw2)
+          Option.when(c >= minEst)(ContainPair(r.docId, id, c))
+        },
+        _.probe),
+      maxPerShingle, stateTtlMs)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.{ImageCodec, ImageOps}
 import graft.operators.WidePhash
@@ -20,17 +19,12 @@ import graft.operators.WidePhash
   * `src/workers/ocr_worker.py:118-190`; this is the curation front it
   * lacks).
   *
-  * State design (the 100 TB story, the [[StreamingNearDup]] rules):
-  * state is keyed by (block-idx, block-value) — the same key the
-  * batch join buckets on — so it shards with the shuffle and a hot
-  * block never concentrates more than its own bucket. Each key
-  * retains at most `maxPerBand` (imgId, 4-lane hash) entries (40
-  * bytes each), newest-first, and `stateTtlMs` drops idle keys
-  * wholesale, so total state is O(active blocks · maxPerBand)
-  * regardless of stream length. The bounded per-band state is the
-  * streaming analog of the batch side's df cap: a degenerate-hot
-  * block bucket holds its newest `maxPerBand` entries instead of
-  * growing with the stream.
+  * State is keyed by (block-idx, block-value) — the same key the batch
+  * join buckets on — and each key keeps at most `maxPerBand` (imgId,
+  * 4-lane hash) entries (40 bytes each) under [[BandedGate]]'s state
+  * rules. The bounded per-band state is the streaming analog of the
+  * batch side's df cap: a degenerate-hot block bucket holds its newest
+  * `maxPerBand` entries instead of growing with the stream.
   *
   * Emission semantics: AT-LEAST-ONCE, at every band where the earlier
   * image is still in that band's state — up to 12 emissions per pair,
@@ -84,37 +78,16 @@ object StreamingImageDedup {
   def attach(imgs: Dataset[Img], maxPerBand: Int = 64,
       stateTtlMs: Long = 0L): Dataset[DupPair] = {
     import imgs.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    imgs
-      .flatMap(im => hash(im.bytes).toSeq.flatMap(h => bands(im.imgId, h)))
-      .groupByKey(_.band)
-      .flatMapGroupsWithState[List[(Long, Long, Long, Long, Long)], DupPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[(Long, Long, Long, Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[DupPair]
-            in.toSeq.sortBy(_.imgId).foreach { bi =>
-              val h = Array(bi.l0, bi.l1, bi.l2, bi.l3)
-              seen.foreach { case (id, s0, s1, s2, s3) =>
-                if (id != bi.imgId) {
-                  val d = WidePhash.hd(h, Array(s0, s1, s2, s3))
-                  if (d <= WidePhash.HdMax) out += DupPair(bi.imgId, id, d)
-                }
-              }
-              // one slot per imgId (the StreamingNearDup replay rule)
-              seen = ((bi.imgId, bi.l0, bi.l1, bi.l2, bi.l3) ::
-                seen.filterNot(_._1 == bi.imgId)).take(maxPerBand)
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    BandedGate.attach[BandedImg, (Long, Long, Long, Long, Long), DupPair](
+      imgs.flatMap(im => hash(im.bytes).toSeq.flatMap(h => bands(im.imgId, h))),
+      _.band,
+      BandedGate.Rule(_.imgId, _._1,
+        bi => Some((bi.imgId, bi.l0, bi.l1, bi.l2, bi.l3)),
+        { case (bi, (id, s0, s1, s2, s3)) =>
+          val d = WidePhash.hd(Array(bi.l0, bi.l1, bi.l2, bi.l3),
+            Array(s0, s1, s2, s3))
+          Option.when(d <= WidePhash.HdMax)(DupPair(bi.imgId, id, d))
+        }),
+      maxPerBand, stateTtlMs)
   }
 }

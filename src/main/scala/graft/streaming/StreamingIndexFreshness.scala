@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Materialize
 import graft.operators.{AnnIvfIndex, FuzzyVocabIndex, InvertedTextIndex}
 
 /** Ingest → serve, CLOSED: a `foreachBatch` gate that routes each
@@ -95,8 +96,8 @@ object StreamingIndexFreshness {
       textTable: String): Option[Long] = {
     val st = stagedTable(textTable)
     if (!s.catalog.tableExists(st)) None
-    else s.table(st).select(col("batch_id")).limit(1).collect()
-      .headOption.map(_.getLong(0))
+    else Materialize.rows(s.table(st).select(col("batch_id")).limit(1),
+      "freshness.staged_batch", 1).headOption.map(_.getLong(0))
   }
 
   /** Stage the in-flight batch (one batch-sized overwrite) so both a
@@ -187,7 +188,8 @@ object StreamingIndexFreshness {
     stagedBatchId(s, textTable) match {
       case Some(id) if !isLedgered(s, textTable, id) =>
         val raw = s.table(stagedTable(textTable))
-        val sealCount = raw.select(col("batch_rows")).limit(1).collect()
+        val sealCount = Materialize.rows(
+          raw.select(col("batch_rows")).limit(1), "freshness.seal", 1)
           .headOption.map(_.getLong(0)).getOrElse(-1L)
         if (raw.count() != sealCount) false // broken seal → wait for replay
         else {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.util.hashing.MurmurHash3
 
 /** Streaming NEAR-duplicate detection — the stateful front of the batch
@@ -12,22 +11,13 @@ import scala.util.hashing.MurmurHash3
   * processing, where the batch pass (q29) only finds the dup after the
   * fact.
   *
-  * State design (the 100 TB story): state is keyed by LSH BAND — the
-  * same key the batch join buckets on — so it shards with the shuffle
-  * and a hot band never concentrates more than its own bucket. Each
-  * band retains at most `maxPerBand` (docId, signature) entries,
-  * newest-first (the same bounded-candidates rule q29 gets from
-  * banding), so per-key state is O(maxPerBand · k) ints regardless of
-  * stream length, and `stateTtlMs` drops idle band KEYS wholesale so
-  * the key count is bounded too (the [[StreamingDedup]] horizon rule).
-  * Pairs are emitted per matching band;
-  * a doc pair sharing BOTH bands emits twice — downstream dedup is one
-  * `dropDuplicatesWithinWatermark` on the pair key (kept out of this
-  * operator so the spec can observe raw emissions).
-  *
-  * Within a batch, docs process in docId order (the SessionProcessor
-  * sort-by-offset rule) so emissions are arrival-order deterministic
-  * under MemoryStream replay.
+  * State is keyed by LSH BAND — the key the batch join buckets on —
+  * and each band keeps at most `maxPerBand` (docId, signature)
+  * entries under [[BandedGate]]'s state rules. Pairs are emitted per
+  * matching band; a doc pair sharing BOTH bands emits twice —
+  * downstream dedup is one `dropDuplicatesWithinWatermark` on the pair
+  * key (kept out of this operator so the spec can observe raw
+  * emissions).
   */
 object StreamingNearDup {
 
@@ -72,48 +62,19 @@ object StreamingNearDup {
     m.toDouble / K
   }
 
-  /** Matching pairs, emitted as each duplicate arrives. `stateTtlMs > 0`
-    * bounds TOTAL state like [[StreamingDedup]]'s horizon: a band key
-    * idle longer than the TTL is dropped wholesale (processing-time
-    * timeout), so state is O(active bands · maxPerBand) instead of
-    * growing with every distinct document ever seen — without it, a
-    * mostly-unique stream grows two band keys per document forever. */
+  /** Matching pairs, emitted as each duplicate arrives. Without
+    * `stateTtlMs`, a mostly-unique stream grows two band keys per
+    * document forever. */
   def attach(docs: Dataset[Doc], threshold: Double = 0.5,
       maxPerBand: Int = 64, stateTtlMs: Long = 0L): Dataset[DupPair] = {
     import docs.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs
-      .flatMap(d => bands(d.docId, signature(d.text)))
-      .groupByKey(_.band)
-      .flatMapGroupsWithState[List[(Long, Array[Int])], DupPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[(Long, Array[Int])]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[DupPair]
-            in.toSeq.sortBy(_.docId).foreach { bd =>
-              seen.foreach { case (id, sig) =>
-                if (id != bd.docId) {
-                  val j = estJaccard(sig, bd.sig)
-                  if (j >= threshold) out += DupPair(bd.docId, id, j)
-                }
-              }
-              // one slot per docId: a redelivered/replayed doc must not
-              // occupy multiple maxPerBand slots (evicting genuinely
-              // distinct candidates early) nor emit duplicate pairs
-              // against its own stale copy (ADVICE r7)
-              seen = ((bd.docId, bd.sig) :: seen.filterNot(_._1 == bd.docId))
-                .take(maxPerBand)
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    BandedGate.attach[BandedDoc, (Long, Array[Int]), DupPair](
+      docs.flatMap(d => bands(d.docId, signature(d.text))), _.band,
+      BandedGate.Rule(_.docId, _._1, bd => Some((bd.docId, bd.sig)),
+        { case (bd, (id, sig)) =>
+          val j = estJaccard(sig, bd.sig)
+          Option.when(j >= threshold)(DupPair(bd.docId, id, j))
+        }),
+      maxPerBand, stateTtlMs)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.queries.VectorQueries
 
@@ -24,24 +23,18 @@ import graft.queries.VectorQueries
   * occupancy rule, [[deployedBits]]), fixed at attach time the way
   * the snapshot index fixes it at build time.
   *
-  * State design (the 100 TB story): state is keyed by CELL — the same
-  * key the batch join shuffles on — so it shards with the shuffle.
-  * Only a vector's HOME cell stores it; the probe rows (1-bit and
-  * 2-bit flips, 1 + b + C(b,2) per arrival) QUERY ONLY, so state is
-  * one row per active cell at ≤ `maxPerCell` members each regardless
-  * of the probe fan-out, and `stateTtlMs` drops idle cell keys
-  * wholesale (the [[StreamingDedup]] horizon rule). Each matching
-  * pair is emitted EXACTLY once: the newer vector's probe whose flip
-  * mask equals the signatures' differing-bit set is unique, and only
+  * State is keyed by CELL — the key the batch join shuffles on — under
+  * [[BandedGate]]'s state rules, at most `maxPerCell` members a cell.
+  * Only a vector's HOME cell stores it; the probe rows (1-bit and 2-bit
+  * flips, 1 + b + C(b,2) per arrival) QUERY ONLY, so state is one row
+  * per active cell regardless of the probe fan-out. Each matching pair
+  * is emitted EXACTLY once: the newer vector's probe whose flip mask
+  * equals the signatures' differing-bit set is unique, and only
   * arrivals probe (members never re-probe), so there is no
   * double-emission to dedup downstream — one better than the text
-  * gate's per-band emissions.
-  *
-  * Within a batch, vectors process in vecId order per cell (the
-  * SessionProcessor sort-by-offset rule): a later-id vector finds an
-  * earlier-id same-batch member through any group where the earlier
-  * one's HOME insert sorts first, so emissions are arrival-order
-  * deterministic under MemoryStream replay.
+  * gate's per-band emissions. Within a batch, a later-id vector finds
+  * an earlier-id same-batch member through any probe group where the
+  * earlier one's HOME insert sorts first (the core's id order).
   */
 object StreamingSemDedup {
 
@@ -124,54 +117,27 @@ object StreamingSemDedup {
     math.sqrt(acc)
   }
 
-  /** Matching pairs, emitted as each duplicate arrives. `stateTtlMs >
-    * 0` bounds TOTAL state like [[StreamingNearDup]]: a cell key idle
-    * longer than the TTL is dropped wholesale, so state is O(active
-    * cells · maxPerCell) instead of one row per vector ever seen. */
+  /** Matching pairs, emitted as each duplicate arrives. */
   def attach(vecs: Dataset[Vec], nbits: Int, cosThreshold: Double = 0.8,
       maxPerCell: Int = 64, stateTtlMs: Long = 0L): Dataset[SemDupPair] = {
     require(nbits >= 0 && nbits <= 16, s"nbits must be in [0,16]: $nbits")
     import vecs.sparkSession.implicits._
     val masks = probeMasks(nbits)
     val cellMask = (1L << nbits) - 1
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    vecs
-      .flatMap { v =>
-        val cell = signature(v.embedding) & cellMask
-        val nrm = norm(v.embedding)
-        masks.map(m => Probe(cell ^ m, m == 0L, v.vecId, v.embedding, nrm))
-          .toIndexedSeq
-      }
-      .groupByKey(_.pcell)
-      .flatMapGroupsWithState[List[(Long, Array[Float], Double)], SemDupPair](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[(Long, Array[Float], Double)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[SemDupPair]
-            in.toSeq.sortBy(_.vecId).foreach { p =>
-              seen.foreach { case (id, e, n2) =>
-                if (id != p.vecId) {
-                  val c = cosine(p.emb, p.nrm, e, n2)
-                  if (c >= cosThreshold) out += SemDupPair(p.vecId, id, c)
-                }
-              }
-              if (p.home) {
-                // one slot per vecId (the StreamingNearDup redelivery
-                // rule), newest-first eviction at maxPerCell
-                seen = ((p.vecId, p.emb, p.nrm) ::
-                  seen.filterNot(_._1 == p.vecId)).take(maxPerCell)
-              }
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    val probes = vecs.flatMap { v =>
+      val cell = signature(v.embedding) & cellMask
+      val nrm = norm(v.embedding)
+      masks.map(m => Probe(cell ^ m, m == 0L, v.vecId, v.embedding, nrm))
+        .toIndexedSeq
+    }
+    BandedGate.attach[Probe, (Long, Array[Float], Double), SemDupPair](
+      probes, _.pcell,
+      BandedGate.Rule(_.vecId, _._1,
+        p => Option.when(p.home)((p.vecId, p.emb, p.nrm)),
+        { case (p, (id, e, n2)) =>
+          val c = cosine(p.emb, p.nrm, e, n2)
+          Option.when(c >= cosThreshold)(SemDupPair(p.vecId, id, c))
+        }),
+      maxPerCell, stateTtlMs)
   }
 }

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.Materialize
 
 /** [[StreamingSemDedup]] with PQ-COMPRESSED state — the streaming face
   * of [[graft.operators.PqSemDedupIndex]]. The full-precision gate
@@ -140,12 +141,13 @@ object StreamingSemDedupPq {
   object Codebook {
 
     /** Deploy the codebook a [[graft.operators.PqSemDedupIndex.build]]
-      * persisted (`<table>_cb`): one driver-side collect of ≤256·4·16
-      * rows — the codebook IS driver-sized by construction. */
+      * persisted (`<table>_cb`): one driver-side collect of ≤ 4
+      * subspaces × 256 codewords × 16 dims rows — the codebook IS
+      * driver-sized by construction. */
     def fromIndex(spark: SparkSession, table: String): Codebook = {
-      val rows = spark.table(table + "_cb")
-        .select("seed", "subsp", "dim", "csum", "n")
-        .collect()
+      val rows = Materialize.rows(spark.table(table + "_cb")
+        .select("seed", "subsp", "dim", "csum", "n"), "pq.codebook",
+        4 * 256 * 16)
         .map(r => (r.getLong(1), r.getLong(0), r.getInt(2) % 16,
           r.getLong(3), r.getLong(4)))
       fromTuples(rows.toIndexedSeq)
@@ -214,45 +216,22 @@ object StreamingSemDedupPq {
     val masks = StreamingSemDedup.probeMasks(nbits)
     val cellMask = (1L << nbits) - 1
     val floor = cosThreshold - adcMargin
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    vecs
-      .flatMap { v =>
-        val cell = StreamingSemDedup.signature(v.embedding) & cellMask
-        val u = StreamingSemDedup.microUnits(v.embedding)
-        val codes = codebook.encode(u)
-        val rd = codebook.rdenom(codes)
-        val nrm = StreamingSemDedup.norm(v.embedding)
-        masks.map(m => Probe(cell ^ m, m == 0L, v.vecId, u, nrm, codes, rd))
-          .toIndexedSeq
-      }
-      .groupByKey(_.pcell)
-      .flatMapGroupsWithState[List[Member], SemDupCand](
-        OutputMode.Append(), timeoutConf) {
-        (_, in, state: GroupState[List[Member]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Nil)
-            val out = Seq.newBuilder[SemDupCand]
-            in.toSeq.sortBy(_.vecId).foreach { p =>
-              seen.foreach { m =>
-                if (m.vecId != p.vecId) {
-                  val c = codebook.adcCos(p.u, p.nrm, m)
-                  if (c >= floor) out += SemDupCand(p.vecId, m.vecId, c)
-                }
-              }
-              if (p.home) {
-                seen = (Member(p.vecId, p.codes, p.rdenom) ::
-                  seen.filterNot(_.vecId == p.vecId)).take(maxPerCell)
-              }
-            }
-            state.update(seen)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            out.result().iterator
-          }
-      }
+    val probes = vecs.flatMap { v =>
+      val cell = StreamingSemDedup.signature(v.embedding) & cellMask
+      val u = StreamingSemDedup.microUnits(v.embedding)
+      val codes = codebook.encode(u)
+      val rd = codebook.rdenom(codes)
+      val nrm = StreamingSemDedup.norm(v.embedding)
+      masks.map(m => Probe(cell ^ m, m == 0L, v.vecId, u, nrm, codes, rd))
+        .toIndexedSeq
+    }
+    BandedGate.attach[Probe, Member, SemDupCand](probes, _.pcell,
+      BandedGate.Rule(_.vecId, _.vecId,
+        p => Option.when(p.home)(Member(p.vecId, p.codes, p.rdenom)),
+        (p, m) => {
+          val c = codebook.adcCos(p.u, p.nrm, m)
+          Option.when(c >= floor)(SemDupCand(p.vecId, m.vecId, c))
+        }),
+      maxPerCell, stateTtlMs)
   }
 }

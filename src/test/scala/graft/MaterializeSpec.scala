@@ -84,7 +84,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("no query, operator or expression source pins or collects a frame itself") {
     val root = Paths.get("src/main/scala/graft")
-    val dirs = Seq("queries", "operators", "expressions").map(root.resolve)
+    val dirs = Seq("queries", "operators", "expressions", "streaming").map(root.resolve)
     assert(dirs.forall(Files.isDirectory(_)), s"sources not found under $root")
     val offenders = for {
       dir <- dirs
