@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Fixed membership of the compact stdout line's "queries" map: the
     * flagship, every fixpoint/capstone, the banded-LSH family, and the
@@ -61,13 +60,9 @@ object Bench {
       : Option[(Double, Double)] = {
     val ratios = run.toSeq.flatMap { case (k, v) =>
       ref.get(k).filter(r => r > floorSec && v > floorSec).map(v / _)
-    }.sorted
+    }.sorted.toIndexedSeq
     if (ratios.size < minCommon) None
-    else {
-      def pct(q: Double): Double =
-        ratios(math.min(ratios.size - 1, (q * ratios.size).toInt))
-      Some((pct(0.25), pct(0.75)))
-    }
+    else Some((StreamBench.pct(ratios, 0.25), StreamBench.pct(ratios, 0.75)))
   }
 
   /** Per-query (min, lowerMedian) over however many timing passes the
@@ -109,22 +104,14 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - benchT0) / 1e9
     val deadlineNs = benchT0 + budgetS * 1000000000L
-    // Streaming phases stop short of the hard deadline so calibration
-    // and the JSON emit always fit.
+    // Streaming phases stop short of the hard deadline so the JSON emit
+    // always fits.
     val TailReserveNs = 30L * 1000000000L
     def fitsPhase(estSec: Double): Boolean =
       StreamBench.fits(deadlineNs - TailReserveNs, estSec)
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local().getOrCreate()
     Tables.logEventTsSchema(spark, sfDir, "bench")
     // q11 ranks the ≤100 survivors of a TakeOrderedAndProject with an
     // unpartitioned window — a gated exception (WinScanSpec) that is
@@ -142,31 +129,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       spark.range(1000000L).selectExpr("sum(id)").collect()
     } catch { case _: Throwable => () }
-    // Load-calibration probe (VERDICT r8 #3): a fixed-cost pure-codegen
-    // loop — 64M rows PER CORE of multiply+mod, one partition per core —
-    // timed at bench start, midpoint, and end (min of 2 runs each). Its
-    // only variable is machine load: drift across the three checkpoints,
-    // or inflation vs prior rounds' cal_ms, quantifies ambient load for
-    // any run, so a per-query regression is separable from a loaded box.
-    // id is reduced mod p BEFORE the multiply so the product tops out at
-    // ~2.65e18 < Long.MaxValue for ANY core count (the raw id*constant
-    // form overflows — an ANSI ArithmeticException — once range end
-    // exceeds ~3.47e9, i.e. >=55 cores). A probe failure reports -1
-    // rather than killing the bench before any query is timed.
-    def calibrate(): Long = try {
-      val n = math.max(1, cpus.toInt)
-      def once(): Long = {
-        val t0 = System.nanoTime()
-        spark.range(0L, 64000000L * n, 1L, n)
-          .selectExpr("sum(((id % 1000000007) * 2654435761) % 1000000007)")
-          .collect()
-        (System.nanoTime() - t0) / 1000000
-      }
-      math.min(once(), once())
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] calibrate failed: ${e.getMessage}")
-      -1L
-    }
     // noop sink: forces full computation of every output column (count()
     // would let Catalyst prune the per-row work for select-only queries).
     // Three passes: per-query MIN (steady-state cost, not first-run JIT)
@@ -211,7 +173,6 @@ object Bench {
     // unconditional (a bench with zero passes measures nothing), each
     // later pass runs only if the measured cost of the previous one —
     // padded — still fits before the deadline less the tail reserve.
-    val cal0 = calibrate()
     val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
     var passCost = 0.0
     def timedPass(): Unit = {
@@ -221,7 +182,6 @@ object Bench {
     }
     timedPass()
     if (fitsPhase(passCost)) timedPass() else skipped += "pass2"
-    val cal1 = calibrate()
     if (passes.size < 2) skipped += "pass3" // pass2 already didn't fit
     else if (fitsPhase(passCost)) timedPass()
     else skipped += "pass3"
@@ -332,34 +292,8 @@ object Bench {
         st.result.epsSustained)},"p50_ms":${st.result.p50Ms},"p99_ms":${
         st.result.p99Ms},"batches":${st.result.batches}}"""
     }.mkString("[", ",", "]")
-    val cal2 = calibrate()
-    val calArr = s"[$cal0,$cal1,$cal2]"
-    // The bench defends itself against box regime (VERDICT r13 #3):
-    // rounds 12-13 each burned a judge/builder cycle re-proving that a
-    // uniformly slower run was machine load, so the JSON now carries
-    // (a) the cal-normalized total — totalMin scaled by pinned-healthy
-    // cal (270 ms, the clean-regime median across BENCH_HISTORY) over
-    // this run's cal median, comparable across box regimes — and
-    // (b) an explicit degraded flag at 1.5× pinned. A regression that
-    // survives normalization is code; one that doesn't is the box.
-    val PinnedCalMs = 270L
-    val calMedian = {
-      val ok = Seq(cal0, cal1, cal2).filter(_ > 0).sorted
-      if (ok.isEmpty) -1L else ok(ok.size / 2)
-    }
-    val calNormalizedTotal =
-      if (calMedian > 0) totalMin * PinnedCalMs / calMedian else totalMin
-    val calStatus =
-      if (calMedian <= 0) "unmeasured"
-      else if (calMedian > (PinnedCalMs * 3) / 2) "degraded" else "ok"
-    // cal-normalization OVER-corrects in the degraded regime (VERDICT
-    // r14 #1: the pure-CPU probe slows faster than the partially-I/O
-    // suite — the r14 gate read 96.6 s where truth was ~175 s), so the
-    // field of record is RATIO-normalized: raw ÷ median per-query
-    // ratio vs the pinned healthy BenchRef vector. cal_normalized_total
-    // stays for continuity but carries an explicit reliability flag —
-    // read it only when cal_status is "ok".
-    val calNormalizedReliable = calStatus == "ok"
+    // the one box-regime correction: raw ÷ the median per-query ratio
+    // against the pinned healthy BenchRef vector (medianRatio)
     val ratioNormalizedTotal = ratioOpt.map(totalMin / _).getOrElse(totalMin)
     // eps scales INVERSELY with time: a 1.14×-loaded box measured the
     // flagship 1.14× slower, so the normalized eps multiplies back up
@@ -403,12 +337,12 @@ object Bench {
     val budgetPart =
       s""""budget_s":$budgetS,"bench_elapsed_s":${fmt2(elapsedS)},"passes":${passes.size},"skipped":$skippedArr"""
     val streamPart =
-      s""""flagship_events_per_sec":${"%.0f".format(flagshipEps)},"flagship_isolated_eps":${"%.0f".format(flagshipIsolatedEps)},$ratioPart,"cal_normalized_total":${fmt2(calNormalizedTotal)},"cal_normalized_reliable":$calNormalizedReliable,"cal_status":"$calStatus","stream_eps":${"%.0f".format(stream.epsSustained)},"stream_p50_ms":${stream.p50Ms},"stream_p99_ms":${stream.p99Ms},"stream_batches":${stream.batches},"stream_knee_eps":${"%.0f".format(knee.kneeEps)},"stream_knee_p50_ms":${knee.kneeP50Ms},"stream_knee_files":${knee.kneeStageFiles},"stream_knee_bracketed":${knee.bracketed},"stream_knee_reliable":$isKneeReliable,$budgetPart,"stream_sweep":$sweepJson"""
+      s""""flagship_events_per_sec":${"%.0f".format(flagshipEps)},"flagship_isolated_eps":${"%.0f".format(flagshipIsolatedEps)},$ratioPart,"stream_eps":${"%.0f".format(stream.epsSustained)},"stream_p50_ms":${stream.p50Ms},"stream_p99_ms":${stream.p99Ms},"stream_batches":${stream.batches},"stream_knee_eps":${"%.0f".format(knee.kneeEps)},"stream_knee_p50_ms":${knee.kneeP50Ms},"stream_knee_files":${knee.kneeStageFiles},"stream_knee_bracketed":${knee.bracketed},"stream_knee_reliable":$isKneeReliable,$budgetPart,"stream_sweep":$sweepJson"""
     // FULL detail — every query's min and median — persisted to
     // target/bench_last.json and BENCH_DETAIL.json (repo root, so a
     // round snapshot carries it), and printed first (its tail may be
     // cut by the capture window; the files never are).
-    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"cal_ms":$calArr,"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"sf":"$sfName"}"""
+    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"sf":"$sfName"}"""
     for (p <- Seq("target/bench_last.json", "BENCH_DETAIL.json"))
       try java.nio.file.Files.writeString(
         java.nio.file.Path.of(p), detail + "\n")
@@ -430,11 +364,11 @@ object Bench {
     }
     println(detail)
     // Compact headline line LAST: the driver keeps only the final 2000
-    // stdout chars, and this line (~700 chars: totals, calibration, the
+    // stdout chars, and this line (~700 chars: totals, normalization, the
     // fixed 15-query headline set's min+median, streaming) always fits
     // and parses — restoring a non-null parsed JSON for the first time
     // since the query count passed the window size.
-    val compact = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"cal_ms":$calArr,"queries":${qmap(Headline, _._1)},"queries_med":${qmap(Headline, _._2)},"failed":$failedArr,$streamPart,"n_queries":${perQuery.size},"detail":"BENCH_DETAIL.json","sf":"$sfName"}"""
+    val compact = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(Headline, _._1)},"queries_med":${qmap(Headline, _._2)},"failed":$failedArr,$streamPart,"n_queries":${perQuery.size},"detail":"BENCH_DETAIL.json","sf":"$sfName"}"""
     println(compact)
     spark.stop()
   }

@@ -5,8 +5,8 @@ package graft
   * round-14 builder run recorded at BENCH_HISTORY.jsonl epoch
   * 1786816023 — raw total 174.76 s over 196 queries at sf0.1, cal
   * triplet [398, 275, 283] ms (clean regime: median ≈ the 270 ms pinned
-  * healthy cal). Why a PER-QUERY vector and not the cal probe: the
-  * pure-CPU cal probe degrades FASTER under box load than the
+  * healthy cal). Why a PER-QUERY vector and not the (since retired) cal
+  * probe: the pure-CPU cal probe degrades FASTER under box load than the
   * partially-I/O suite, so scaling the total by the cal ratio
   * OVER-corrects on badly degraded boxes (the r14 gate run read
   * 96.6 s where three stable builder runs said ~166 s cal-normalized /
@@ -26,7 +26,6 @@ package graft
   * thins out. */
 object BenchRef {
   val sf: String = "sf0.1"
-  val calMs: Long = 283L
   val totalSec: Double = 174.76
   val queries: Map[String, Double] = Map(
     "q01" -> 0.61, "q02" -> 0.59, "q03" -> 0.7, "q04" -> 0.32,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Reproducible plan evidence: dumps `.explain("formatted")` for every
@@ -15,22 +14,12 @@ import org.apache.spark.sql.execution.ExplainMode
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val only: Option[Set[String]] =
-      if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = SparkEntry.select(args.lift(1))
+    val spark = GraftSession.local().getOrCreate()
     val outDir = java.nio.file.Path.of("target/plans")
     java.nio.file.Files.createDirectories(outDir)
     var n = 0
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if only.forall(_.contains(name))) {
+    for ((name, fn) <- selected) {
       try {
         val plan = fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted"))

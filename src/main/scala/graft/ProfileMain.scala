@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Optimization-round measurement harness (guide §1: measure first).
@@ -53,19 +52,9 @@ object ProfileMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val only: Option[Set[String]] =
-      if (args.length > 1 && args(1).nonEmpty) Some(args(1).split(",").toSet)
-      else None
+    val selected = SparkEntry.select(args.lift(1))
     val passes = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local().getOrCreate()
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     // Warmup identical to Bench so JIT/footer costs don't land on query 1.
@@ -73,8 +62,7 @@ object ProfileMain {
       .write.format("noop").mode("overwrite").save()
     spark.range(1000000L).selectExpr("sum(id)").collect()
     println("name\tsec\tbuild_s\tplan_s\texec_s\tcodegen_s\ttask_s\tjobs_build\tjobs_run\tstages\ttasks\tshuf_rd_mb\tshuf_wr_mb\tinput_mb")
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
-         if only.forall(_.contains(name))) {
+    for ((name, fn) <- selected) {
       val best = (1 to passes).map { _ =>
         val (j0, s0, t0, r0, w0, i0, m0) = acc.snap
         val cg0 = codegenMs

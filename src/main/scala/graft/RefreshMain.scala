@@ -49,21 +49,13 @@ object RefreshMain {
       selRetrainDue: Boolean, indexCatalogJson: String)
 
   def run(spark: SparkSession, sfDir: String): Summary = {
-    def cleanup(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    Seq("refresh_text_idx", "refresh_sem_idx", "refresh_search_idx",
-      "refresh_search_idx_meta", "refresh_search_idx_pos",
-      "refresh_fuzzy_vocab", "refresh_fuzzy_keys",
+    val tables = Seq("refresh_text_idx", "refresh_sem_idx",
+      "refresh_search_idx", "refresh_search_idx_meta",
+      "refresh_search_idx_pos", "refresh_fuzzy_vocab", "refresh_fuzzy_keys",
       "refresh_phash_idx", "refresh_phash_idx_df", "refresh_selmodel",
       "refresh_selmodel_dsir", "refresh_selmodel_meta",
-      "refresh_vclip_idx", "refresh_vclip_idx_df").foreach(cleanup)
+      "refresh_vclip_idx", "refresh_vclip_idx_df")
+    GraftSession.dropTables(spark, tables: _*)
 
     // snapshot cut: everything NOT in the deterministic refresh slices
     val docs = Tables.documents(spark, sfDir)
@@ -285,26 +277,13 @@ object RefreshMain {
     semAdmittedIds.unpersist()
     imgAdmittedIds.unpersist()
     clipAdmittedIds.unpersist()
-    Seq("refresh_text_idx", "refresh_sem_idx", "refresh_search_idx",
-      "refresh_search_idx_meta", "refresh_search_idx_pos",
-      "refresh_fuzzy_vocab", "refresh_fuzzy_keys",
-      "refresh_phash_idx", "refresh_phash_idx_df", "refresh_selmodel",
-      "refresh_selmodel_dsir", "refresh_selmodel_meta",
-      "refresh_vclip_idx", "refresh_vclip_idx_df").foreach(cleanup)
+    GraftSession.dropTables(spark, tables: _*)
     summary
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local().getOrCreate()
     val s = run(spark, sfDir)
     println(s"""{"text_batch":${s.textBatch},"text_admitted":${s.textAdmitted},""" +
       s""""sem_batch":${s.semBatch},"sem_admitted":${s.semAdmitted},""" +

@@ -151,15 +151,7 @@ object ScaleTrend {
     // "stream" to also run the streaming-gate trend); no filter = all
     val filter = args.drop(1).headOption.map(_.split(",").toSet)
     val names = filter.map(f => QueryNames.filter(f)).getOrElse(QueryNames)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local().getOrCreate()
     // warmup
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
@@ -206,17 +198,9 @@ object ScaleTrend {
     import org.apache.spark.sql.functions.col
     import graft.operators.{FuzzyVocabIndex, InvertedTextIndex}
     def cleanup(): Unit =
-      Seq("st_search_idx", "st_search_idx_meta", "st_search_idx_pos",
-        "st_search_idx_fwd", "st_fuzzy_vocab", "st_fuzzy_keys")
-        .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+      GraftSession.dropTables(spark, "st_search_idx", "st_search_idx_meta",
+        "st_search_idx_pos", "st_search_idx_fwd", "st_fuzzy_vocab",
+        "st_fuzzy_keys")
     for (m <- mults) {
       cleanup()
       val dir = s"$root/x$m"
@@ -442,16 +426,8 @@ object ScaleTrend {
         import graft.operators.InvertedTextIndex
         import graft.streaming.StreamingIndexFreshness
         def cleanupFresh(): Unit =
-          Seq("st_fresh_idx", "st_fresh_idx_meta", "st_fresh_idx_applied")
-            .foreach { t =>
-              spark.sql(s"DROP TABLE IF EXISTS $t")
-              val p = java.nio.file.Paths.get("spark-warehouse", t)
-              if (java.nio.file.Files.exists(p)) {
-                import scala.jdk.CollectionConverters._
-                java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-                  .foreach(java.nio.file.Files.deleteIfExists(_))
-              }
-            }
+          GraftSession.dropTables(spark, "st_fresh_idx", "st_fresh_idx_meta",
+            "st_fresh_idx_applied")
         cleanupFresh()
         val docsDf = spark.read.parquet(s"$root/x$m/documents.parquet")
         InvertedTextIndex.build(docsDf.filter(col("doc_id") % 10 =!= 0),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{AnnIvfIndex, FuzzyVocabIndex, HybridRetrieval,
   IndexCatalog, InvertedTextIndex}
 import graft.queries.RetrievalQueries
+import graft.StreamBench.pct
 
 /** The SERVING story assembled end-to-end as ONE runnable job — what a
   * query front actually operates against a cut corpus, composed from
@@ -94,11 +95,8 @@ object ServeMain {
       warm(i) = (System.nanoTime() - t0) / 1000000L
       i += 1
     }
-    def pct(ts: Array[Long], q: Double): Long = {
-      val s = ts.sorted
-      s(math.min(reps - 1, (q * reps).toInt))
-    }
-    (Leg(hits, pct(cold, 0.50), cold.max, pct(warm, 0.50), warm.max),
+    (Leg(hits, pct(cold.sorted, 0.50), cold.max, pct(warm.sorted, 0.50),
+      warm.max),
       () => { rdd.count(); () })
   }
 
@@ -163,35 +161,21 @@ object ServeMain {
     val wallMs = math.max(1L, (System.nanoTime() - t0) / 1000000L)
     import scala.jdk.CollectionConverters._
     val all = lats.asScala.toSeq
-    def pct(ts: Seq[Long], q: Double): Long =
-      if (ts.isEmpty) 0L
-      else {
-        val s = ts.sorted
-        s(math.min(s.size - 1, (q * s.size).toInt))
-      }
+    def p50(ts: Seq[Long]): Long = pct(ts.sorted.toIndexedSeq, 0.50)
     ConcPoint(n, requests, wallMs, requests * 1000.0 / wallMs,
-      pct(all.map(_._2), 0.50), all.map(_._2).max,
+      p50(all.map(_._2)), all.map(_._2).max,
       all.groupBy(_._1).map { case (k, v) =>
-        k -> (pct(v.map(_._2), 0.50), v.map(_._2).max)
+        k -> (p50(v.map(_._2)), v.map(_._2).max)
       })
   }
 
   def run(spark: SparkSession, sfDir: String, reps: Int = 20,
       concLevels: Seq[Int] = Seq(10, 50, 100)): Summary = {
-    def cleanup(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     val tables = Seq("serve_text_idx", "serve_text_idx_meta",
       "serve_text_idx_pos", "serve_text_idx_fwd",
       "serve_ann_idx", "serve_ann_idx_cent",
       "serve_fuzzy_vocab", "serve_fuzzy_keys")
-    tables.foreach(cleanup)
+    GraftSession.dropTables(spark, tables: _*)
 
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
@@ -259,26 +243,19 @@ object ServeMain {
       annImbalanceX100 = bal.getAs[Long]("imbalance_x100"),
       annRetrainDue = bal.getAs[Boolean]("retrain_due"),
       concurrency = conc, indexCatalogJson = catalogJson)
-    tables.foreach(cleanup)
+    GraftSession.dropTables(spark, tables: _*)
     summary
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val reps = if (args.length > 1) args(1).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local()
       // FAIR scheduling so N in-flight requests share executor slots
       // instead of head-of-line blocking behind the largest job — the
       // serving-front configuration (pools are per worker thread)
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val s = run(spark, sfDir, reps)
     def legJson(name: String, l: Leg): String =
       s""""${name}_hits":${l.hits},"${name}_p50_ms":${l.p50Ms},""" +

@@ -24,8 +24,8 @@ object SparkEntry {
     * streaming STT path, batch form) on sf0.001.
     *
     * The caller's session may not carry the nanos-timestamp reader
-    * config that events.parquet needs (Verify/Bench set it in their
-    * builders; the driver's smoke session might not) — it's a runtime
+    * config that events.parquet needs (GraftSession.local sets it; a
+    * session built elsewhere might not) — it's a runtime
     * SQLConf, so set it here defensively. */
   def entry(spark: SparkSession): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -36,6 +36,23 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
+
+  /** The queries a main's comma-separated name filter picks, sorted by
+    * name; no filter (or an empty one) picks them all. An unknown name
+    * fails fast: a typo that silently matched nothing would make a
+    * check look green having checked nothing. */
+  def select(filter: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val qs = queries
+    val names = filter.filter(_.nonEmpty).map(_.split(",").toSet)
+    names.foreach { ns =>
+      val unknown = ns.diff(qs.keySet)
+      require(unknown.isEmpty,
+        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}" +
+          " — valid names are in SparkEntry.queries")
+    }
+    qs.toSeq.filter { case (n, _) => names.forall(_(n)) }.sortBy(_._1)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

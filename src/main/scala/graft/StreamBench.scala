@@ -40,6 +40,14 @@ object StreamBench {
     deadlineNs == Long.MaxValue ||
       System.nanoTime() + (estSec * 1.25 * 1e9).toLong <= deadlineNs
 
+  /** Nearest-rank quantile of an ascending sample: the element at
+    * `min(n - 1, floor(q * n))`, zero when the sample is empty. The one
+    * rule behind the p50/p99 and quartile figures the harnesses print. */
+  private[graft] def pct[T](sorted: collection.IndexedSeq[T], q: Double)(
+      implicit num: Numeric[T]): T =
+    if (sorted.isEmpty) num.zero
+    else sorted(math.min(sorted.size - 1, (q * sorted.size).toInt))
+
   final case class Result(
       rows: Long,
       batches: Int,
@@ -349,12 +357,9 @@ object StreamBench {
       .filter(_.numInputRows > 0) // AvailableNow appends an empty closer
     val durs = progress
       .map(p => p.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-      .sorted
+      .sorted.toIndexedSeq
     val rows = progress.map(_.numInputRows).sum
     val sumSec = durs.sum / 1e3
-    def pct(q: Double): Long =
-      if (durs.isEmpty) 0L
-      else durs(math.min(durs.length - 1, (q * durs.length).toInt))
     Result(
       rows = rows,
       batches = progress.length,
@@ -362,7 +367,7 @@ object StreamBench {
       triggerSumSec = sumSec,
       epsSustained = if (sumSec > 0) rows / sumSec else 0.0,
       epsWall = if (wall > 0) rows / wall else 0.0,
-      p50Ms = pct(0.50),
-      p99Ms = pct(0.99))
+      p50Ms = pct(durs, 0.50),
+      p99Ms = pct(durs, 0.99))
   }
 }

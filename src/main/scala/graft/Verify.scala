@@ -1,39 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated name filter for fast local checks.
-    // Unknown names fail fast — a typo that silently matched nothing
-    // would make a local check look green having verified nothing.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.mkString(", ")} — " +
-          s"valid names are in SparkEntry.queries")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts physical type varies by testdata generation; nanosAsLong
-      // only matters for the TIMESTAMP(NANOS) generation — Tables.events
-      // normalizes every variant to LONG epoch-nanos (EventTsNormalizeSpec).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional 3rd arg: comma-separated name filter for fast local checks
+    val selected = SparkEntry.select(args.lift(2))
+    val spark = GraftSession.local().getOrCreate()
     Tables.logEventTsSchema(spark, sfDir, "verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

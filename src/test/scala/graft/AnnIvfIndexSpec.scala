@@ -15,15 +15,7 @@ import graft.operators.AnnIvfIndex
 class AnnIvfIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.flatMap(t => Seq(t, t + "_cent")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables.flatMap(t => Seq(t, t + "_cent")): _*)
 
   test("bucketed index search reproduces q110 with a pruned, unshuffled corpus scan") {
     cleanup("ann_idx_t")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BucketedSnapshot, DeltaDedupIndex}
@@ -13,19 +14,13 @@ import graft.operators.{BucketedSnapshot, DeltaDedupIndex}
 class BucketedIndexMaintenanceSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = Paths.get("spark-warehouse", t)
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables: _*)
 
   private def parquetFiles(table: String): Long = {
     import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get("spark-warehouse", table)).iterator().asScala
+    val dir = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).location
+    Files.walk(Paths.get(dir)).iterator().asScala
       .count(p => p.toString.endsWith(".parquet"))
   }
 

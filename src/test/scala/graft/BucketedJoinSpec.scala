@@ -15,18 +15,7 @@ class BucketedJoinSpec extends SparkSpec {
     // threshold and would hide the bucketed-join path this test proves.
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-    // in-memory catalog forgets tables between JVMs but leaves the
-    // managed dirs behind — remove them so saveAsTable can recreate
-    for (t <- Seq("li_b", "ord_b")) {
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, "li_b", "ord_b")
 
     spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select("l_orderkey", "l_extendedprice", "l_discount")

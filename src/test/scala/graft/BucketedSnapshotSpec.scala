@@ -22,16 +22,8 @@ class BucketedSnapshotSpec extends SparkSpec {
   private val prefix = "bsnap_"
 
   private def cleanup(): Unit =
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith(prefix)).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+    GraftSession.dropTables(spark, spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith(prefix)).toSeq: _*)
 
   /** (name suffix, numBuckets, bucket columns, sort columns) of every
     * `bsnap_` table; unbucketed tables read (0, Nil, Nil). */

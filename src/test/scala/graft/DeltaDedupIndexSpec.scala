@@ -15,15 +15,8 @@ import graft.operators.DeltaDedupIndex
 class DeltaDedupIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    (if (tables.isEmpty) Seq("dedup_idx_t") else tables).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark,
+      (if (tables.isEmpty) Seq("dedup_idx_t") else tables): _*)
 
   test("bucketed snapshot index reproduces q173 verdicts with no snapshot-side shuffle") {
     cleanup()

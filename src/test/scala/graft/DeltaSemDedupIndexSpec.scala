@@ -16,15 +16,7 @@ import graft.operators.DeltaSemDedupIndex
 class DeltaSemDedupIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables: _*)
 
   test("bucketed cell index reproduces q176 verdicts with no snapshot-side shuffle") {
     cleanup("sem_idx_t")

@@ -14,15 +14,8 @@ import graft.queries.RetrievalQueries
 class FuzzyVocabIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.flatMap(t => Seq(t + "_vocab", t + "_keys")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark,
+      tables.flatMap(t => Seq(t + "_vocab", t + "_keys")): _*)
 
   test("dictionary search reproduces q188 with a pruned key scan") {
     cleanup("fuzzy_idx")

@@ -1,28 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.expressions.Registration
 
 class GraftExtensionsSpec extends SparkSpec {
-
-  /** A sibling session on TestSpark's context configured ONLY through
-    * the extensions (no `register` helper ever runs on it). */
-  private def withExtensionsSession(f: SparkSession => Unit): Unit = {
-    val ctx = spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      f(SparkSession.builder()
-        .master(ctx.master)
-        .withExtensions(new GraftExtensions())
-        .getOrCreate())
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
-  }
 
   test("extensions register the native function for new sessions") {
     withExtensionsSession { s2 =>

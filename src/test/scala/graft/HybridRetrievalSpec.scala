@@ -16,16 +16,8 @@ import graft.queries.RetrievalQueries
 class HybridRetrievalSpec extends SparkSpec {
 
   private def cleanup(): Unit =
-    Seq("hyb_text_idx", "hyb_text_idx_meta", "hyb_text_idx_pos",
-      "hyb_ann_idx", "hyb_ann_idx_cent").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, "hyb_text_idx", "hyb_text_idx_meta",
+      "hyb_text_idx_pos", "hyb_ann_idx", "hyb_ann_idx_cent")
 
   test("hybrid fusion is exactly RRF over the two index outputs, with both scans pruned") {
     cleanup()

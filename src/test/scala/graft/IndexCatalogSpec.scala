@@ -17,15 +17,7 @@ class IndexCatalogSpec extends SparkSpec {
     "cat_fuzzy_vocab", "cat_fuzzy_keys", "cat_skew_idx",
     "cat_skew_idx_cent")
 
-  private def cleanup(): Unit = tables.foreach { t =>
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val p = java.nio.file.Paths.get("spark-warehouse", t)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
+  private def cleanup(): Unit = GraftSession.dropTables(spark, tables: _*)
 
   test("catalog normalizes every index family's audit into one frame") {
     cleanup()

@@ -16,16 +16,8 @@ import graft.queries.RetrievalQueries
 class InvertedTextIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    (if (tables.isEmpty) Seq("inv_idx_t") else tables)
-      .flatMap(t => Seq(t, t + "_meta", t + "_pos", t + "_fwd")).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+    GraftSession.dropTables(spark, (if (tables.isEmpty) Seq("inv_idx_t") else tables)
+      .flatMap(t => Seq(t, t + "_meta", t + "_pos", t + "_fwd")): _*)
 
   /** q180's query workload with its text — what a caller hands to
     * search(): (q_doc, text). */

@@ -227,15 +227,8 @@ class MmrSelectSpec extends SparkSpec {
 
   test("q186 and mmrSearch plans run the kernel, with no array-HOF rounds") {
     val table = "mmr_select_spec_idx"
-    def drop(): Unit = Seq(table, s"${table}_meta", s"${table}_fwd").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    def drop(): Unit = GraftSession.dropTables(spark, table, s"${table}_meta",
+      s"${table}_fwd")
     drop()
     try {
       InvertedTextIndex.build(Tables.documents(spark, sf0001), table, forward = true)

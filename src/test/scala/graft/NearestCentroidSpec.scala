@@ -139,15 +139,7 @@ class NearestCentroidSpec extends SparkSpec {
 
   test("AnnIvfIndex.append places every vector in the cell the join rule picks") {
     val table = "nc_ann_append"
-    def cleanup(): Unit = Seq(table, table + "_cent").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    def cleanup(): Unit = GraftSession.dropTables(spark, table, table + "_cent")
     cleanup()
     try {
       val emb = Tables.embeddings(spark, sf0001)

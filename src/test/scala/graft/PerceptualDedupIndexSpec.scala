@@ -18,15 +18,7 @@ import graft.operators.PerceptualDedupIndex.{AudioLayout, ImageLayout}
 class PerceptualDedupIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.flatMap(t => Seq(t, t + "_df")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables.flatMap(t => Seq(t, t + "_df")): _*)
 
   /** Image signature frame from the oracle-checked q206 fingerprints. */
   private def imageSig: DataFrame =

@@ -16,15 +16,7 @@ import graft.operators.PqSemDedupIndex
 class PqSemDedupIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables: _*)
 
   test("compressed index matches q176 admit verdicts; snapshot side is unshuffled code rows") {
     cleanup("pq_idx_t", "pq_idx_t_cb")

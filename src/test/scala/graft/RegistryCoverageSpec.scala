@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Every function an `expr(...)`/`selectExpr(...)` string in `src/main`
@@ -83,21 +82,13 @@ class RegistryCoverageSpec extends SparkSpec {
     assert(used.size > 50 && used.contains("opt_barrier"),
       s"scan found too few calls: ${used.keys}")
 
-    val ctx = spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master(ctx.master)
-        .withExtensions(new GraftExtensions()).getOrCreate()
+    withExtensionsSession { s2 =>
       val registry = s2.sessionState.functionRegistry
       val missing = used.filterNot { case (n, _) =>
         registry.functionExists(FunctionIdentifier(n))
       }
       assert(missing.isEmpty, "unresolved functions (name -> sources): " +
         missing.toSeq.sortBy(_._1).mkString("; "))
-    } finally {
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
     }
   }
 }

@@ -169,16 +169,8 @@ class RetrievalQueriesSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.{AnnIvfIndex, HybridRetrieval, InvertedTextIndex}
     def cleanup(): Unit =
-      Seq("q190_text_idx", "q190_text_idx_meta", "q190_text_idx_pos",
-        "q190_ann_idx", "q190_ann_idx_cent").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+      GraftSession.dropTables(spark, "q190_text_idx", "q190_text_idx_meta",
+        "q190_text_idx_pos", "q190_ann_idx", "q190_ann_idx_cent")
     cleanup()
     try {
       val docs = Tables.documents(spark, sf0001)

@@ -13,15 +13,8 @@ import graft.operators.{IndexCatalog, SelectionModelIndex}
 class SelectionModelIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.flatMap(t => Seq(t, t + "_dsir", t + "_meta")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark,
+      tables.flatMap(t => Seq(t, t + "_dsir", t + "_meta")): _*)
 
   /** The q200 labeling convention, re-derived through the public q149
     * query: rule verdict as weak label, md5 doc_id split. */

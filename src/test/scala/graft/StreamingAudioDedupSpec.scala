@@ -28,15 +28,7 @@ class StreamingAudioDedupSpec extends SparkSpec {
     * in the same workspace (fresh catalog, stale directory) can't die
     * with LOCATION_ALREADY_EXISTS. */
   private def cleanup(tables: String*): Unit =
-    tables.flatMap(t => Seq(t, t + "_df")).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables.flatMap(t => Seq(t, t + "_df")): _*)
 
   /** Deterministic 256-sample int16 waveform; sample values are kept
     * EVEN so a 0.5× gain is exact integer arithmetic (the gain-

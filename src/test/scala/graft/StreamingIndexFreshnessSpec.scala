@@ -14,23 +14,14 @@ import graft.streaming.StreamingIndexFreshness
 class StreamingIndexFreshnessSpec extends SparkSpec {
 
   private def cleanup(): Unit = {
-    Seq("fresh_idx", "fresh_idx_meta", "fresh_idx_pos", "fresh_idx_fwd",
-      "fresh_idx_applied", "fresh_idx_staged", "fresh_ann",
-      "fresh_ann_cent",
+    GraftSession.dropTables(spark, "fresh_idx", "fresh_idx_meta",
+      "fresh_idx_pos", "fresh_idx_fwd", "fresh_idx_applied",
+      "fresh_idx_staged", "fresh_ann", "fresh_ann_cent",
       "fresh_full", "fresh_full_meta", "fresh_full_pos", "fresh_full_fwd",
       "crash_idx", "crash_idx_meta", "crash_idx_pos", "crash_idx_fwd",
       "crash_idx_applied", "crash_idx_staged", "crash_ann",
       "crash_ann_cent", "crash_fuzzy_vocab", "crash_fuzzy_keys",
       "crash_fuzzy_full_vocab", "crash_fuzzy_full_keys")
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()

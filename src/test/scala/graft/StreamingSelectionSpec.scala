@@ -93,15 +93,7 @@ class StreamingSelectionSpec extends SparkSpec {
     import spark.implicits._
 
     def cleanup(): Unit =
-      Seq("sel_ingest_idx", "sel_ingest_idx_meta").foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = java.nio.file.Paths.get("spark-warehouse", t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
-      }
+      GraftSession.dropTables(spark, "sel_ingest_idx", "sel_ingest_idx_meta")
     cleanup()
     val labels = SparkEntry.queries("q149_quality_rules")(spark, sf0001)
       .select(col("doc_id"), col("keep").as("label"))

@@ -16,15 +16,7 @@ import graft.streaming.StreamingSemDedupPq.{Codebook, Member, Vec}
 class StreamingSemDedupPqSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables: _*)
 
   private def corpus(): Array[(Long, Array[Float])] =
     Tables.embeddings(spark, sf0001)

@@ -18,15 +18,7 @@ import graft.queries.PerceptualQueries
 class VideoClipIndexSpec extends SparkSpec {
 
   private def cleanup(tables: String*): Unit =
-    tables.foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    GraftSession.dropTables(spark, tables: _*)
 
   // the q214 dual-generator corpus: even vids = full videos (the
   // snapshot), odd vids = planted clips (the refresh batch)

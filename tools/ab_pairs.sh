@@ -4,8 +4,13 @@
 #
 #   tools/ab_pairs.sh <parent-rev> <workload> <seed>...
 #
-# The parent runs from a temporary `git clone --shared` checked out at
-# <parent-rev>; the change runs from this checkout. Each pair is two
+# Both sides run from fresh temporary `git clone --shared` checkouts, so
+# neither inherits this checkout's ignored state (`.bench_build/`,
+# `spark-warehouse/`) or its warm page cache: the parent is checked out
+# at <parent-rev>, the change at a commit of the working tree. That
+# commit is written through a temporary index (GIT_INDEX_FILE), so it
+# holds tracked edits and untracked files that are not ignored, and
+# neither the index nor any ref of this checkout moves. Each pair is two
 # untraced `perfbench/run.py` runs (--trace 0, --seconds from
 # BENCHMARK.json's run_seconds) on the same seed: the change first on
 # odd seeds, the parent first on even ones, so a drift in host load
@@ -17,7 +22,7 @@
 # `better` field in BENCHMARK.json; a tie is not a win). Under each
 # metric a second line gives both sides' median and quartiles over only
 # the runs whose host_steal_share is below 5%, with how many runs that
-# is; it is printed in addition to the full figures. The clone is
+# is; it is printed in addition to the full figures. The clones are
 # removed at exit. Nothing under perfbench/ or BENCHMARK.json is
 # written.
 set -euo pipefail
@@ -36,8 +41,16 @@ seconds=$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_
 
 tmp=$(mktemp -d "${TMPDIR:-/tmp}/ab_pairs.XXXXXX")
 trap 'rm -rf "$tmp"' EXIT
-git clone --quiet --shared --no-checkout "$root" "$tmp/parent"
+# the working tree as a commit, written through a temporary index
+cp "$(git rev-parse --git-path index)" "$tmp/index"
+work=$(export GIT_INDEX_FILE="$tmp/index" && git add -A &&
+  git -c user.name=ab_pairs -c user.email=ab_pairs@localhost \
+    commit-tree "$(git write-tree)" -p HEAD -m "ab_pairs working tree")
+for side in parent change; do
+  git clone --quiet --shared --no-checkout "$root" "$tmp/$side"
+done
 git -C "$tmp/parent" checkout --quiet --detach "$sha"
+git -C "$tmp/change" checkout --quiet --detach "$work"
 results="$tmp/results.jsonl"
 : > "$results"
 
@@ -60,14 +73,14 @@ row = {"side": side, "seed": seed, "correct": res["correct"],
 print(json.dumps(row))' "$side" "$seed" | tee -a "$results"
 }
 
-echo "parent $sha vs working tree; workload $workload, --seconds $seconds"
+echo "parent $sha vs working tree $work; workload $workload, --seconds $seconds"
 for seed in "$@"; do
   if [ $((seed % 2)) -eq 1 ]; then
-    run change "$root" "$seed"
+    run change "$tmp/change" "$seed"
     run parent "$tmp/parent" "$seed"
   else
     run parent "$tmp/parent" "$seed"
-    run change "$root" "$seed"
+    run change "$tmp/change" "$seed"
   fi
 done
 
