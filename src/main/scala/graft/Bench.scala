@@ -1,4 +1,9 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.observability.JobWatch
+
 object Bench {
   /** Fixed membership of the compact stdout line's "queries" map: the
     * flagship, every fixpoint/capstone, the banded-LSH family, and the
@@ -91,7 +96,23 @@ object Bench {
   def kneeReliable(bracketed: Boolean, ratioOpt: Option[Double]): Boolean =
     bracketed && ratioOpt.exists(_ <= 1.15)
 
+  /** Only a run of every query at the reference scale writes the
+    * round's record (BENCH_DETAIL.json, a BENCH_HISTORY.jsonl line). */
+  def writesRecord(filtered: Boolean, sfName: String): Boolean =
+    !filtered && sfName == BenchRef.sf
+
+  /** One timed query: its construction, then a noop write (count()
+    * would let Catalyst prune a select-only query's per-row work). */
+  def timeQuery(watch: JobWatch, spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): JobWatch.Cost =
+    watch.measure(fn(spark, sfDir))(
+      _.write.format("noop").mode("overwrite").save())
+
+  /** Usage: runMain graft.Bench [name,name,...]. A filter times only
+    * those queries, skipping the isolated flagship and streaming. */
   def main(args: Array[String]): Unit = {
+    val selected = SparkEntry.select(args.headOption)
+    val filtered = args.headOption.exists(_.nonEmpty)
     // Wall-clock budget (VERDICT r16 #1): the driver kills the bench
     // at ~60 min; r16's run died mid-knee-search with NOTHING emitted
     // (rc 124, parsed null). Every phase after the first timing pass
@@ -129,23 +150,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       spark.range(1000000L).selectExpr("sum(id)").collect()
     } catch { case _: Throwable => () }
-    // noop sink: forces full computation of every output column (count()
-    // would let Catalyst prune the per-row work for select-only queries).
-    // Three passes: per-query MIN (steady-state cost, not first-run JIT)
-    // and MEDIAN (load-robust central tendency) both reported.
-    // A query that throws reports -1 (never a valid elapsed time) and is
-    // listed in "failed" — a silent failure must not corrupt the totals.
-    def timeAll(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          name -> (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          name -> -1.0
-        }
-      }.toMap
     // ISOLATED flagship (VERDICT r13 #3): q15's throughput measured
     // FIRST — suite-fresh (before the 196-query suite runs, same JVM as
     // the warmup block above) — so the number the rounds compare is
@@ -156,7 +160,7 @@ object Bench {
     // produce by hand). Suite-fresh does NOT defeat a loaded box (r14
     // measured ±20% across same-binary runs) — the recorded eps is
     // additionally ratio-normalized below.
-    val flagshipIsolatedEps = try {
+    val flagshipIsolatedEps = if (filtered) { skipped += "flagship"; 0.0 } else try {
       val n = Tables.events(spark, sfDir).count()
       val t = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
@@ -169,11 +173,24 @@ object Bench {
       System.err.println(s"[bench] isolated flagship failed: ${e.getMessage}")
       0.0
     }
+    // Three passes: per-query MIN (steady-state cost, not first-run JIT)
+    // and MEDIAN (load-robust central tendency), and the MIN pass's cost.
+    // A query that throws is listed in "failed" — a silent failure must
+    // not corrupt the totals.
+    val watch = new JobWatch(spark)
+    def timeAll(): Map[String, Option[JobWatch.Cost]] =
+      selected.map { case (name, fn) =>
+        try name -> Some(timeQuery(watch, spark, sfDir, fn))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          name -> None
+        }
+      }.toMap
     // Three timing passes when the budget allows; pass 1 is
     // unconditional (a bench with zero passes measures nothing), each
     // later pass runs only if the measured cost of the previous one —
     // padded — still fits before the deadline less the tail reserve.
-    val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
+    val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Option[JobWatch.Cost]]]
     var passCost = 0.0
     def timedPass(): Unit = {
       val t0 = System.nanoTime()
@@ -185,9 +202,10 @@ object Bench {
     if (passes.size < 2) skipped += "pass3" // pass2 already didn't fit
     else if (fitsPhase(passCost)) timedPass()
     else skipped += "pass3"
-    val perQuery: Map[String, (Double, Double)] =
-      aggregatePasses(passes.toSeq)
+    val perQuery: Map[String, (Double, Double)] = aggregatePasses(
+      passes.toSeq.map(_.map { case (k, c) => k -> c.fold(-1.0)(_.wallS) }))
     val (failed, results) = perQuery.partition(_._2._1 < 0)
+    watch.close()
     def fmt2(v: Double): String = "%.2f".format(v)
     // qNN short keys (full names in SURVEY.md §2.12 / Verify output).
     def short(k: String): String = k.takeWhile(_ != '_')
@@ -233,7 +251,7 @@ object Bench {
     val streamDeadline = deadlineNs - TailReserveNs
     val streamT0 = System.nanoTime()
     val stream =
-      if (!fitsPhase(StreamRunEstSec)) { skipped += "stream"; streamZero }
+      if (filtered || !fitsPhase(StreamRunEstSec)) { skipped += "stream"; streamZero }
       else try StreamBench.runMedian3(spark, sfDir,
         deadlineNs = streamDeadline)
       catch { case e: Throwable =>
@@ -269,7 +287,7 @@ object Bench {
     val kneeZero = StreamBench.Knee(Seq.empty, 0.0, 0L, 0,
       bracketed = false, exhausted = true)
     val knee =
-      if (!fitsPhase(streamRunCost)) { skipped += "knee"; kneeZero }
+      if (filtered || !fitsPhase(streamRunCost)) { skipped += "knee"; kneeZero }
       else try StreamBench.kneeSearch(spark, sfDir,
         deadlineNs = streamDeadline)
       catch { case e: Throwable =>
@@ -338,20 +356,24 @@ object Bench {
       s""""budget_s":$budgetS,"bench_elapsed_s":${fmt2(elapsedS)},"passes":${passes.size},"skipped":$skippedArr"""
     val streamPart =
       s""""flagship_events_per_sec":${"%.0f".format(flagshipEps)},"flagship_isolated_eps":${"%.0f".format(flagshipIsolatedEps)},$ratioPart,"stream_eps":${"%.0f".format(stream.epsSustained)},"stream_p50_ms":${stream.p50Ms},"stream_p99_ms":${stream.p99Ms},"stream_batches":${stream.batches},"stream_knee_eps":${"%.0f".format(knee.kneeEps)},"stream_knee_p50_ms":${knee.kneeP50Ms},"stream_knee_files":${knee.kneeStageFiles},"stream_knee_bracketed":${knee.bracketed},"stream_knee_reliable":$isKneeReliable,$budgetPart,"stream_sweep":$sweepJson"""
-    // FULL detail — every query's min and median — persisted to
-    // target/bench_last.json and BENCH_DETAIL.json (repo root, so a
-    // round snapshot carries it), and printed first (its tail may be
-    // cut by the capture window; the files never are).
-    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"sf":"$sfName"}"""
-    for (p <- Seq("target/bench_last.json", "BENCH_DETAIL.json"))
+    val costJson = results.keys.toSeq.sorted.map { k =>
+      "\"" + short(k) + "\":" + passes.flatMap(_(k)).minBy(_.wallS).json
+    }.mkString("{", ",", "}")
+    // FULL detail — every query's min, median and cost — persisted to
+    // target/bench_last.json and, for a recorded run, BENCH_DETAIL.json,
+    // and printed first (its tail may be cut by the capture window; the
+    // files never are).
+    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"cost":$costJson,"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"sf":"$sfName"}"""
+    val record = writesRecord(filtered, sfName)
+    for (p <- "target/bench_last.json" +: Option.when(record)("BENCH_DETAIL.json").toSeq)
       try java.nio.file.Files.writeString(
         java.nio.file.Path.of(p), detail + "\n")
       catch { case _: Throwable => () }
     // BENCH_DETAIL.json is overwritten per run, so each round's commit
     // used to lose the prior round's detail (ADVICE r9). Append every
-    // run to a history log too — one line per run, timestamped — so the
-    // full per-query series survives in-repo.
-    try java.nio.file.Files.writeString(
+    // recorded run to a history log too — one line per run, timestamped
+    // — so the full per-query series survives in-repo.
+    if (record) try java.nio.file.Files.writeString(
       java.nio.file.Path.of("BENCH_HISTORY.jsonl"),
       s"""{"at_epoch_s":${System.currentTimeMillis() / 1000},""" +
         s""""sf":"$sfName","detail":$detail}""" + "\n",

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Empirical scale-trend for the dedup family (VERDICT r7 #4): runs the
   * banded/bucketed dedup queries over 1×/2×/4× corpora (generated by
@@ -12,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * superlinearly on a self-similar corpus, so their exponents must be
   * read against pair counts, not row counts.
   *
-  * Usage: runMain graft.ScaleTrend [root]   (default /tmp/graft_scale)
+  * Usage: runMain graft.ScaleTrend [root] [name,...]   (see [[filter]])
   */
 object ScaleTrend {
 
@@ -145,11 +146,27 @@ object ScaleTrend {
     // NO shuffle — must stay linear like q213
     "q218_video_decode_fingerprint")
 
+  /** Filter names: dedup queries, and the streaming-gate (`stream`) and
+    * serving-index (`search`) trends; `None` runs everything. */
+  def filter(arg: Option[String]): Option[Set[String]] =
+    SparkEntry.filterNames(arg, QueryNames.toSet + "stream" + "search")
+
+  /** Warm-up, then the faster of two timed runs (s) and `f`'s result. */
+  private def best(f: => Long): (Double, Long) = {
+    def timed(): (Double, Long) = {
+      val t0 = System.nanoTime()
+      val n = f
+      ((System.nanoTime() - t0) / 1e9, n)
+    }
+    timed() // warm (JIT + parquet footer)
+    val (t1, n) = timed()
+    val (t2, _) = timed()
+    (math.min(t1, t2), n)
+  }
+
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_scale")
-    // optional 2nd arg: comma-separated query-name filter (add
-    // "stream" to also run the streaming-gate trend); no filter = all
-    val filter = args.drop(1).headOption.map(_.split(",").toSet)
+    val filter = ScaleTrend.filter(args.lift(1))
     val names = filter.map(f => QueryNames.filter(f)).getOrElse(QueryNames)
     val spark = GraftSession.local().getOrCreate()
     // warmup
@@ -158,20 +175,9 @@ object ScaleTrend {
     val mults = Seq(1, 2, 4)
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      val per = mults.map { m =>
-        val dir = s"$root/x$m"
-        def once(): (Double, Long) = {
-          val t0 = System.nanoTime()
-          // count() not noop: pair volume is part of the story here and
-          // we want the row count; the aggregate is negligible vs the join
-          val n = fn(spark, dir).count()
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        once() // warm (JIT + parquet footer)
-        val (t1, n) = once()
-        val (t2, _) = once()
-        m -> (math.min(t1, t2), n)
-      }.toMap
+      // count() not noop: pair volume is part of the story here and we
+      // want the row count; the aggregate is negligible vs the join
+      val per = mults.map(m => m -> best(fn(spark, s"$root/x$m").count())).toMap
       val exps = Seq((1, 2), (2, 4)).map { case (a, b) =>
         val ea = math.log(per(b)._1 / per(a)._1) / math.log(2.0)
         f"x$a→x$b ${ea}%.2f"
@@ -218,17 +224,6 @@ object ScaleTrend {
       val phrases = queries.select(col("q_doc"),
         org.apache.spark.sql.functions.expr(
           "array_join(slice(split(text, ' '), 3, 3), ' ')").as("phrase"))
-      def timed(f: => Long): (Double, Long) = {
-        val t = System.nanoTime()
-        val n = f
-        ((System.nanoTime() - t) / 1e9, n)
-      }
-      def best(f: => Long): (Double, Long) = {
-        timed(f) // warm
-        val (s1, n) = timed(f)
-        val (s2, _) = timed(f)
-        (math.min(s1, s2), n)
-      }
       val (searchSec, hits) =
         best(InvertedTextIndex.search(probe, "st_search_idx").count())
       val (phraseSec, phits) =
@@ -300,9 +295,16 @@ object ScaleTrend {
         .select(col("doc_id"), col("source"), col("text"))
         .as[(Long, String, String)].collect()
 
-      def report(kind: String, rows: Long, wallSec: Double,
-          progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+      /** Feeds the started gate `q`, drains and stops it, prints its line. */
+      def gate(kind: String, rows: => Long, q: StreamingQuery)(feed: => Unit)
           : Unit = {
+        val t0 = System.nanoTime()
+        try {
+          feed
+          q.processAllAvailable()
+        } finally q.stop()
+        val wallSec = (System.nanoTime() - t0) / 1e9
+        val progress = q.recentProgress
         val active = progress.filter(_.numInputRows > 0)
         val sumSec = active.map(
           _.durationMs.getOrDefault("triggerExecution", 0L).toLong).sum / 1e3
@@ -312,21 +314,18 @@ object ScaleTrend {
         println(f"SCALETREND-STREAM $kind x$m  $wallSec%.2fs  $eps%.0f eps  " +
           s"state_rows=$stateRows  batches=${active.length}")
       }
+      def noop(ds: Dataset[_]): StreamingQuery =
+        ds.writeStream.format("noop").outputMode("append").start()
 
       // near-dup gate: band-keyed flatMapGroupsWithState
       locally {
         val input = MemoryStream[StreamingNearDup.Doc]
-        val q = StreamingNearDup.attach(input.toDS())
-          .writeStream.format("noop").outputMode("append").start()
-        val t0 = System.nanoTime()
-        try {
+        gate("neardup", docs.length.toLong,
+            noop(StreamingNearDup.attach(input.toDS()))) {
           docs.grouped(1000).foreach { chunk =>
             input.addData(chunk.map(d => StreamingNearDup.Doc(d._1, d._3)))
           }
-          q.processAllAvailable()
-        } finally q.stop()
-        report("neardup", docs.length.toLong,
-          (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
+        }
       }
 
       // containment gate: shingle-keyed inverted index in state,
@@ -336,40 +335,32 @@ object ScaleTrend {
       locally {
         import graft.streaming.StreamingContainment
         val input = MemoryStream[StreamingContainment.Doc]
-        val q = StreamingContainment.attach(input.toDS())
-          .writeStream.format("noop").outputMode("append").start()
-        val t0 = System.nanoTime()
-        try {
+        gate("containment", docs.length.toLong,
+            noop(StreamingContainment.attach(input.toDS()))) {
           docs.grouped(1000).foreach { chunk =>
             input.addData(chunk.map(d => StreamingContainment.Doc(d._1, d._3)))
           }
-          q.processAllAvailable()
-        } finally q.stop()
-        report("containment", docs.length.toLong,
-          (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
+        }
       }
 
-      // semantic-dedup gate: cell-keyed flatMapGroupsWithState under
-      // the deployed grid for THIS corpus size (the q172 occupancy
-      // rule) — state rows = active cells, ~vecs/64
+      // both semantic gates stream the same vectors under the deployed
+      // grid for THIS corpus size (the q172 occupancy rule)
+      val vecs = spark.read.parquet(s"$root/x$m/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      val nbits = graft.streaming.StreamingSemDedup.deployedBits(vecs.length.toLong)
+
+      // semantic-dedup gate: cell-keyed flatMapGroupsWithState — state
+      // rows = active cells, ~vecs/64
       locally {
         import graft.streaming.StreamingSemDedup
-        val vecs = spark.read.parquet(s"$root/x$m/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .collect()
-          .map(r => StreamingSemDedup.Vec(r.getLong(0),
-            r.getSeq[Float](1).toArray))
-        val nbits = StreamingSemDedup.deployedBits(vecs.length.toLong)
         val input = MemoryStream[StreamingSemDedup.Vec]
-        val q = StreamingSemDedup.attach(input.toDS(), nbits)
-          .writeStream.format("noop").outputMode("append").start()
-        val t0 = System.nanoTime()
-        try {
-          vecs.grouped(1000).foreach(chunk => input.addData(chunk.toIndexedSeq))
-          q.processAllAvailable()
-        } finally q.stop()
-        report(s"semdedup(b=$nbits)", vecs.length.toLong,
-          (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
+        gate(s"semdedup(b=$nbits)", vecs.length.toLong,
+            noop(StreamingSemDedup.attach(input.toDS(), nbits))) {
+          vecs.grouped(1000).foreach { chunk =>
+            input.addData(chunk.map(v => StreamingSemDedup.Vec(v._1, v._2)))
+          }
+        }
       }
 
       // PQ-state semantic gate: same cell keying, state rows identical
@@ -379,42 +370,28 @@ object ScaleTrend {
       // from the x1 corpus (the production setup: the codebook is part
       // of the snapshot's identity and does not grow with the stream)
       locally {
-        import graft.streaming.{StreamingSemDedup, StreamingSemDedupPq}
-        val vecs = spark.read.parquet(s"$root/x$m/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .collect()
-          .map(r => StreamingSemDedupPq.Vec(r.getLong(0),
-            r.getSeq[Float](1).toArray))
-        val nbits = StreamingSemDedup.deployedBits(vecs.length.toLong)
+        import graft.streaming.StreamingSemDedupPq
         val input = MemoryStream[StreamingSemDedupPq.Vec]
-        val q = StreamingSemDedupPq.attach(input.toDS(), nbits, x1cb)
-          .writeStream.format("noop").outputMode("append").start()
-        val t0 = System.nanoTime()
-        try {
-          vecs.grouped(1000).foreach(chunk => input.addData(chunk.toIndexedSeq))
-          q.processAllAvailable()
-        } finally q.stop()
-        report(s"semdedup-pq(b=$nbits)", vecs.length.toLong,
-          (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
+        gate(s"semdedup-pq(b=$nbits)", vecs.length.toLong,
+            noop(StreamingSemDedupPq.attach(input.toDS(), nbits, x1cb))) {
+          vecs.grouped(1000).foreach { chunk =>
+            input.addData(chunk.map(v => StreamingSemDedupPq.Vec(v._1, v._2)))
+          }
+        }
       }
 
       // decontam gate: foreachBatch, zero cross-batch state by contract
       locally {
         val input = MemoryStream[(Long, String, String)]
         var out = 0L
-        val q = StreamingDecontam.start(
-          input.toDF().toDF("doc_id", "source", "text")
-            .filter(col("source") =!= "src0"), evalGrams,
-          queryName = s"decontam_trend_x$m") { (v, _) =>
+        gate("decontam", out, StreamingDecontam.start(
+            input.toDF().toDF("doc_id", "source", "text")
+              .filter(col("source") =!= "src0"), evalGrams,
+            queryName = s"decontam_trend_x$m") { (v, _) =>
           out += v.count()
-        }
-        val t0 = System.nanoTime()
-        try {
+        }) {
           docs.grouped(1000).foreach(chunk => input.addData(chunk.toIndexedSeq))
-          q.processAllAvailable()
-        } finally q.stop()
-        report("decontam", out, (System.nanoTime() - t0) / 1e9,
-          q.recentProgress.toSeq)
+        }
       }
 
       // index-freshness gate: foreachBatch appends the delta into the
@@ -434,21 +411,17 @@ object ScaleTrend {
           "st_fresh_idx")
         val delta = docs.filter(_._1 % 10 == 0)
         val input = MemoryStream[(Long, String, String)]
-        val q = StreamingIndexFreshness.start(
-          input.toDF().toDF("doc_id", "source", "text")
-            .select(col("doc_id"), col("text")),
-          "st_fresh_idx", queryName = s"freshness_trend_x$m")
-        val t0 = System.nanoTime()
-        try {
+        gate("index-freshness", delta.length.toLong,
+            StreamingIndexFreshness.start(
+              input.toDF().toDF("doc_id", "source", "text")
+                .select(col("doc_id"), col("text")),
+              "st_fresh_idx", queryName = s"freshness_trend_x$m")) {
           delta.grouped(math.max(1, delta.length / 8))
             .foreach(chunk => input.addData(chunk.toIndexedSeq))
-          q.processAllAvailable()
-        } finally q.stop()
+        }
         val applied = spark.table("st_fresh_idx_applied").count()
         val served = spark.table("st_fresh_idx")
           .select(col("doc_id")).distinct().count()
-        report("index-freshness", delta.length.toLong,
-          (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
         println(s"SCALETREND-STREAM index-freshness x$m  " +
           s"applied_batches=$applied  served_docs=$served")
         cleanupFresh()

@@ -38,20 +38,25 @@ object SparkEntry {
     all.map(q => q.name -> q.fn).toMap
 
   /** The queries a main's comma-separated name filter picks, sorted by
-    * name; no filter (or an empty one) picks them all. An unknown name
-    * fails fast: a typo that silently matched nothing would make a
-    * check look green having checked nothing. */
+    * name; no filter (or an empty one) picks them all. */
   def select(filter: Option[String])
       : Seq[(String, (SparkSession, String) => DataFrame)] = {
     val qs = queries
+    val names = filterNames(filter, qs.keySet)
+    qs.toSeq.filter { case (n, _) => names.forall(_(n)) }.sortBy(_._1)
+  }
+
+  /** A comma-separated filter's names, `None` for none (or empty). A name
+    * outside `valid` fails fast: a typo that silently matched nothing
+    * would make a check look green having checked nothing. */
+  def filterNames(filter: Option[String], valid: Set[String]): Option[Set[String]] = {
     val names = filter.filter(_.nonEmpty).map(_.split(",").toSet)
     names.foreach { ns =>
-      val unknown = ns.diff(qs.keySet)
+      val unknown = ns.diff(valid)
       require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}" +
-          " — valid names are in SparkEntry.queries")
+        s"unknown name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    qs.toSeq.filter { case (n, _) => names.forall(_(n)) }.sortBy(_._1)
+    names
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -605,6 +605,10 @@ object MediaQueries {
        |    FROM embeddings))""".stripMargin
   }
 
+  /** The documents with text, the rows every probe query reads. */
+  private[queries] def textDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).filter(length(col("text")) >= 1)
+
   /** q88/q89 shared plane builder — indexes the text by CODE POINTS
     * (as DuckDB's length/substr/ascii do), not UTF-16 code units, so
     * both engines derive the identical pixel plane even when the
@@ -636,9 +640,7 @@ object MediaQueries {
         case None => (nBlack, -1L, -1L, -1L, -1L)
       }
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"), col("t._1").as("n_black"),
         col("t._2").as("bb_x"), col("t._3").as("bb_y"),
         col("t._4").as("bb_w"), col("t._5").as("bb_h"))
@@ -686,17 +688,9 @@ object MediaQueries {
       val img = graft.functions.ImageOps.Gray(32, 16, textPlane(text))
       val r90 = graft.functions.ImageOps.rotate90cw(img)
       val r180 = graft.functions.ImageOps.rotate180(img)
-      def checksum(g: graft.functions.ImageOps.Gray): Long = {
-        var s = 0L
-        var i = 0
-        while (i < g.px.length) { s += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
-        s
-      }
       (checksum(r90), checksum(r180), (r90.w * 100000 + r90.h).toLong)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"), col("t._1").as("sum90"),
         col("t._2").as("sum180"), col("t._3").as("dims90"))
   }
@@ -1003,6 +997,15 @@ object MediaQueries {
          |    d -> $src[i + d * $W + 1])))""".stripMargin
   }
 
+  /** Position-weighted plane checksum, Σ (i+1)·px(i) over unsigned
+    * pixels; [[checksumSql]] is the oracle's side. */
+  private def checksum(g: graft.functions.ImageOps.Gray): Long = {
+    var cs = 0L
+    var i = 0
+    while (i < g.px.length) { cs += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
+    cs
+  }
+
   private def checksumSql(src: String): String =
     s"""CAST(list_reduce(list_transform(range(0, ${W * H}),
        |  i -> CAST((i + 1) * $src[i + 1] AS BIGINT)),
@@ -1025,20 +1028,12 @@ object MediaQueries {
     val probe = udf((text: String) => {
       val io = graft.functions.ImageOps
       val b = io.binarizeFixed(io.Gray(W, H, textPlane(text)))
-      def checksum(g: graft.functions.ImageOps.Gray): Long = {
-        var s = 0L
-        var i = 0
-        while (i < g.px.length) { s += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
-        s
-      }
       val tm = io.tableMask(b, 9)
       (checksum(io.open(b, 2, 2)), checksum(io.close(b, 2, 2)),
         checksum(io.removeNoise(b, 9)),
         tm.px.count(p => (p & 0xff) < 128).toLong)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"), col("t._1").as("c_open"),
         col("t._2").as("c_close"), col("t._3").as("c_removed"),
         col("t._4").as("n_table_dark"))
@@ -1101,18 +1096,10 @@ object MediaQueries {
       val enh = io.enhanceContrast(img)
       val sh = io.sharpen3x3(enh)
       val bl = io.addWeighted(enh, 0.7, sh, 0.3)
-      def checksum(g: graft.functions.ImageOps.Gray): Long = {
-        var s = 0L
-        var i = 0
-        while (i < g.px.length) { s += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
-        s
-      }
       (checksum(enh), checksum(sh), checksum(bl),
         (bl.px(W * H / 2) & 0xff).toLong)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"), col("t._1").as("c_enhanced"),
         col("t._2").as("c_sharpened"), col("t._3").as("c_blended"),
         col("t._4").as("mid_px"))
@@ -1210,9 +1197,7 @@ object MediaQueries {
       }
       (sumAbs(x), sumAbs(y), y(64), y(128), y(200))
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"),
         round(col("t._1"), 6).as("e_in"), round(col("t._2"), 6).as("e_out"),
         round(col("t._3"), 6).as("y64"), round(col("t._4"), 6).as("y128"),
@@ -1357,20 +1342,12 @@ object MediaQueries {
     val probe = udf((text: String) => {
       val io = graft.functions.ImageOps
       val img = io.Gray(W, H, textPlaneGrad(text))
-      def checksum(g: graft.functions.ImageOps.Gray): Long = {
-        var s = 0L
-        var i = 0
-        while (i < g.px.length) { s += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
-        s
-      }
       val ad = io.binarizeAdaptiveGaussian(img, c = 2)
       val t = io.otsuThreshold(img)
       (checksum(ad), ad.px.count(_ == -1).toLong, t.toLong,
         checksum(io.binarizeOtsu(img)))
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"), col("t._1").as("c_adapt"),
         col("t._2").as("n_white_adapt"), col("t._3").as("t_otsu"),
         col("t._4").as("c_otsu"))
@@ -1554,8 +1531,7 @@ object MediaQueries {
       (combo, applied.toLong, cs,
         fin.px.count(p => (p & 0xff) <= 127).toLong)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
+    textDocs(s, d)
       .select(col("doc_id"), probe(col("doc_id"), col("text")).as("t"))
       .select(col("doc_id"),
         col("t._1").as("combo"), col("t._2").as("applied_deg"),
@@ -1782,9 +1758,7 @@ object MediaQueries {
       val img = graft.functions.ImageOps.Gray(W, H, textPlane(text))
       graft.functions.ImageOps.houghAngle(img)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"),
         (col("t._1") + lit(0.0)).as("skew_deg"),
         col("t._2").as("n_lines"))
@@ -1862,8 +1836,7 @@ object MediaQueries {
       (sniffed, (dec.w * 100000 + dec.h).toLong, nBlack, cs,
         bb._1, bb._2, bb._3, bb._4)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
+    textDocs(s, d)
       .select(col("doc_id"), probe(col("doc_id"), col("text")).as("t"))
       .select(col("doc_id"),
         col("t._1").as("fmt"),
@@ -1932,9 +1905,7 @@ object MediaQueries {
       while (i < fixed.px.length) { cs += (i + 1).toLong * (fixed.px(i) & 0xff); i += 1 }
       (skew, applied.toLong, cs, nBlack)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"),
         (col("t._1") + lit(0.0)).as("skew_deg"),
         col("t._2").as("applied_deg"),
@@ -2025,20 +1996,13 @@ object MediaQueries {
       val img = graft.functions.ImageOps.Gray(W, H, textPlane(text))
       val dec = graft.functions.ImageCodec.decode(
         graft.functions.ImageCodec.encode(img, "png")).get
-      def checksum(g: graft.functions.ImageOps.Gray): Long = {
-        var cs = 0L; var i = 0
-        while (i < g.px.length) { cs += (i + 1).toLong * (g.px(i) & 0xff); i += 1 }
-        cs
-      }
       val down = graft.functions.ImageOps.resizeNN(dec, 16, 8)
       val up = graft.functions.ImageOps.resizeNN(dec, 64, 32)
       (checksum(down), checksum(up),
         down.px.count(b => (b & 0xff) <= 127).toLong,
         up.px.count(b => (b & 0xff) <= 127).toLong)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"),
         col("t._1").as("cs_down"), col("t._2").as("cs_up"),
         col("t._3").as("dark_down"), col("t._4").as("dark_up"))
@@ -2082,8 +2046,7 @@ object MediaQueries {
     import org.apache.spark.sql.Encoders
     val mk = udf((text: String) => graft.functions.ImageCodec.encode(
       graft.functions.ImageOps.Gray(W, H, textPlane(text)), "png"))
-    val payloads = Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
+    val payloads = textDocs(s, d)
       .select(col("doc_id").as("id"), lit("image").as("modality"),
         lit("png").as("format"), mk(col("text")).as("content"))
       .as[graft.multimodal.Multimodal.Payload](

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Materialize, Tables}
@@ -45,7 +45,7 @@ import graft.operators.WidePhash
   */
 object PerceptualQueries {
 
-  import MediaQueries.{W, H, planeSql, textPlane}
+  import MediaQueries.{W, H, planeSql, textDocs, textPlane}
 
   /** doc → (dhash63, ahash63, wide lanes) through the real codec path:
     * synthesize the q88 plane, encode to actual PNG container bytes,
@@ -65,13 +65,15 @@ object PerceptualQueries {
       wide(0), wide(1), wide(2), wide(3))
   })
 
+  /** Rows where `c` holds, 0 over an empty relation. */
+  private def cnt(c: Column): Column =
+    coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+
   /** Shared signature frame: one scan, one UDF evaluation per doc.
     * Columns: doc_id, dhash, ahash (narrow 63-bit), l0..l3 (wide
     * 252-bit lanes, the [[WidePhash]] input names). */
   private def sig(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), pHash(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), pHash(col("text")).as("t"))
       .select(col("doc_id"),
         col("t._1").as("dhash"), col("t._2").as("ahash"),
         col("t._3").as("l0"), col("t._4").as("l1"),
@@ -310,9 +312,7 @@ object PerceptualQueries {
       }
       graft.functions.AudioDsp.fingerprint63(x)
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("fp"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("fp"))
   }
 
   /** The q104 pigeonhole join for 63-BIT fingerprints (the audio
@@ -453,9 +453,7 @@ object PerceptualQueries {
       (graft.functions.AudioDsp.fingerprint63(x),
         graft.functions.AudioDsp.fingerprint63(x2))
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(explode(array(
         struct((col("doc_id") * 2).as("id"), col("t._1").as("h")),
         struct((col("doc_id") * 2 + 1).as("id"), col("t._2").as("h"))))
@@ -493,11 +491,7 @@ object PerceptualQueries {
     * sum-over-empty is NULL where the guard is absent). */
   private def q211(s: SparkSession, d: String): DataFrame = {
     val pairs = hd3Pairs(clips(s, d))
-    val nDocs = Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .agg(count(lit(1)).as("n_planted"))
-    def cnt(c: org.apache.spark.sql.Column) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+    val nDocs = textDocs(s, d).agg(count(lit(1)).as("n_planted"))
     pairs
       .withColumn("planted",
         (col("id_b") - col("id_a") === 1) && (col("id_a") % 2 === 0))
@@ -559,7 +553,7 @@ object PerceptualQueries {
     * broadcast scalars. */
   private def q212(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d).filter(length(col("text")) >= 1)
+    val docs = textDocs(s, d)
     val s1 = docs
       .select(col("doc_id"), md5(col("text").cast("binary")).as("ft"))
       .withColumn("kmin",
@@ -662,8 +656,7 @@ object PerceptualQueries {
     * q206's covered ground; frames here hash the plane directly.) */
   private def q213(s: SparkSession, d: String): DataFrame = {
     val fh = udf((text: String, j: Int) => frameHash(text, j))
-    Tables.spreadKernel(Tables.documents(s, d)
-        .filter(length(col("text")) >= 1))
+    Tables.spreadKernel(textDocs(s, d))
       .select(col("doc_id"), col("text"),
         explode(expr(s"sequence(0, ${VFrames - 1})")).as("fid"))
       .select(col("doc_id"), col("fid").cast("long").as("frame_id"),
@@ -704,8 +697,7 @@ object PerceptualQueries {
 
   private def videoFrames(s: SparkSession, d: String): DataFrame = {
     val fh = udf((text: String, j: Int) => frameHash(text, j))
-    val docs = Tables.spreadKernel(
-      Tables.documents(s, d).filter(length(col("text")) >= 1))
+    val docs = Tables.spreadKernel(textDocs(s, d))
     val full = docs
       .select(col("doc_id"), col("text"),
         explode(expr(s"sequence(0, ${VFrames - 1})")).as("p"))
@@ -783,11 +775,7 @@ object PerceptualQueries {
     * basis-point recall, the q211 convention — counts coalesced to 0
     * against the empty-relation case, matching the oracle. */
   private def q215(s: SparkSession, d: String): DataFrame = {
-    val nDocs = Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .agg(count(lit(1)).as("n_planted"))
-    def cnt(c: org.apache.spark.sql.Column) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+    val nDocs = textDocs(s, d).agg(count(lit(1)).as("n_planted"))
     q214(s, d)
       .withColumn("planted",
         (col("vid_b") - col("vid_a") === 1) && (col("vid_a") % 2 === 0) &&
@@ -870,9 +858,7 @@ object PerceptualQueries {
       }
       (fp(textPlane(text)), fp(degradedPlane(text)))
     })
-    Tables.documents(s, d)
-      .filter(length(col("text")) >= 1)
-      .select(col("doc_id"), probe(col("text")).as("t"))
+    textDocs(s, d).select(col("doc_id"), probe(col("text")).as("t"))
       .select(col("doc_id"),
         col("t._1._1").as("h_o"), col("t._2._1").as("h_d"),
         col("t._1._2").as("lo0"), col("t._1._3").as("lo1"),
@@ -954,8 +940,6 @@ object PerceptualQueries {
         Seq("rep_a", "rep_b"), "left")
       .withColumn("rec",
         col("whd") === 0 || coalesce(col("in_rp"), lit(false)))
-    def cnt(c: org.apache.spark.sql.Column) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     val agg = flagged.agg(
       count(lit(1)).as("n_planted"),
       cnt(col("nhd") <= 3).as("narrow_recovered"),
@@ -1078,8 +1062,7 @@ object PerceptualQueries {
           (j.toLong, io.dHash63(io.cellSums(g, 8, 8)))
         }
     })
-    Tables.spreadKernel(Tables.documents(s, d)
-        .filter(length(col("text")) >= 1))
+    Tables.spreadKernel(textDocs(s, d))
       .select(col("doc_id"), explode(probe(col("text"))).as("f"))
       .select(col("doc_id"), col("f._1").as("frame_id"),
         col("f._2").as("fhash"))
@@ -1333,8 +1316,6 @@ object PerceptualQueries {
     * scan lineage; the rollup is ≤ 2·32·sources rows). */
   private def q219(s: SparkSession, d: String): DataFrame = {
     val flags = manifestFlags(s, d)
-    def cnt(c: org.apache.spark.sql.Column) =
-      coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
     flags.groupBy(col("split"), col("shard"), col("source"))
       .agg(count(lit(1)).as("n_raw"),
         cnt(!col("keep")).as("drop_quality"),

@@ -1,5 +1,7 @@
 package graft
 
+import graft.observability.JobWatch
+
 /** Bounds the Spark jobs a query's CONSTRUCTION may launch, for queries
   * whose construction runs declared [[Materialize]] calls
   * (NoEagerActionSpec allows those jobs; this says how many), so a fold

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import graft.observability.JobWatch
+
 /** Pins [[Materialize]]: a bounded collect returns every row in one
   * labelled job, a frame above its bound fails with the label and the
   * bound in the message (or reads `None` through `upTo`), the label

@@ -1,5 +1,7 @@
 package graft
 
+import graft.observability.JobWatch
+
 /** Guard against the q61 regression class: declaring a query must not
   * hide an action behind a lazy-looking API. The rule, for every query
   * in [[SparkEntry.queries]]: construction may start only jobs that

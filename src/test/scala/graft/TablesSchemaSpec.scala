@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 
+import graft.observability.JobWatch
+
 /** Pins [[Tables.tbl]]'s schema cache: a warm read of an unchanged table
   * starts no job, and a table rewritten at the same path with different
   * types reads its new schema in the same session. */
