@@ -7,9 +7,9 @@ import graft.expressions.Registration
 /** Session extensions for cluster deployment: ship every native
   * expression on [[Registration.natives]] to every session via
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`). Local callers can use
-  * the expressions' `register` helpers instead, which read the same
-  * list. */
+  * `builder.withExtensions(new GraftExtensions)`). A session without
+  * them gets the same list from [[Registration.install]] where it
+  * enters the engine. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     Registration.natives.foreach { f =>

@@ -3,8 +3,8 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder and the one table reset every main and spec
-  * starts from. */
+/** The one session builder, table reset, directory delete and scoped
+  * conf setting every main and spec starts from. */
 object GraftSession {
   /** `local[cpus]` (`SPARK_GRAFT_CPUS` by default, 4 when unset) with one
     * shuffle partition per core, UTC, no UI and WARN logging.
@@ -29,8 +29,25 @@ object GraftSession {
     names.foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val catalog = spark.sessionState.catalog
-      val dir = new Path(catalog.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(t)))
-      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+      delete(spark, new Path(catalog.defaultTablePath(
+        spark.sessionState.sqlParser.parseTableIdentifier(t))))
     }
+
+  /** Delete `dir` and everything under it, if it exists. */
+  def delete(spark: SparkSession, dir: Path): Unit =
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+
+  /** Runs `f` with `settings` on the session conf, then puts back what
+    * was explicitly set before: a key that was unset is unset again
+    * (`conf.getOption` reports Spark's default, and restoring that
+    * would leave it set). */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(f: => T): T = {
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

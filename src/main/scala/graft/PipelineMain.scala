@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.model.AudioChunk
 import graft.observability.{Metrics, SparkMetricsBridge}
 import graft.streaming.{EnvelopeValidation, QueueRouter, ResultStore, SessionProcessor}
 
@@ -39,14 +39,7 @@ object PipelineMain {
   def run(spark: SparkSession, sfDir: String, outDir: String): Summary = {
     import spark.implicits._
     SparkMetricsBridge.install(spark)
-    val fs = new java.io.File(outDir)
-    if (fs.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(fs)
-    }
+    GraftSession.delete(spark, new Path(outDir))
     // stage the ingest directory (the reference's upload/queue inbox)
     Tables.events(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/ingest")
@@ -93,17 +86,9 @@ object PipelineMain {
       .start()
 
     // ---- session path: chunks → stateful sessionizer → transcripts ----
-    val base = Window_baseUs(spark, s"$outDir/ingest")
-    val chunks = stream
-      .join(broadcast(base), "user_id") // per-user offset base (static side)
-      .select(
-        col("user_id").cast("string").as("sessionId"),
-        encode(coalesce(col("props"), lit("")), "UTF-8").as("content"),
-        ((expr("ts div 1000") - col("base_us")) / 1000L).cast("long")
-          .as("offsetMs"),
-        lit(50L).as("durationMs"),
-        lit(false).as("isFinal"))
-      .as[AudioChunk](Encoders.product[AudioChunk])
+    // per-user offset base from the static ingest side
+    val chunks = SessionProcessor.chunksOf(stream,
+      spark.read.parquet(s"$outDir/ingest"))
     val q2 = SparkMetricsBridge.observeStage(
         SessionProcessor.attach(chunks, timeoutMs = 0L).toDF(),
         "transcripts")
@@ -188,13 +173,6 @@ object PipelineMain {
       correlated = nCompleted,
       timedOut = nTimedOut)
   }
-
-  /** Static per-user min event time (the session offset base) — read
-    * once as a batch side, broadcast into the stream-static join. */
-  private def Window_baseUs(spark: SparkSession, ingest: String) =
-    spark.read.parquet(ingest)
-      .groupBy(col("user_id"))
-      .agg(min(expr("ts div 1000")).as("base_us"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

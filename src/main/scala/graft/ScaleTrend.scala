@@ -186,7 +186,10 @@ object ScaleTrend {
         f"x$m ${per(m)._1}%.2fs/${per(m)._2}%d rows").mkString("  ")
       println(s"SCALETREND $name  $line  exp[$exps]")
     }
-    if (filter.forall(_.contains("stream"))) streamTrend(spark, root, mults)
+    if (filter.forall(_.contains("stream")))
+      GraftSession.withConf(spark,
+        "spark.sql.streaming.numRecentProgressUpdates" -> "1000")(
+        streamTrend(spark, root, mults))
     if (filter.forall(_.contains("search"))) indexTrend(spark, root, mults)
     spark.stop()
   }
@@ -274,7 +277,6 @@ object ScaleTrend {
     import spark.implicits._
     import graft.streaming.{StreamingDecontam, StreamingNearDup}
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1000")
 
     // fixed eval set across scales (the realistic setup: benchmarks
     // don't grow with the corpus) — x1's src0 slice

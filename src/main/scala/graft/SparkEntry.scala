@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.expressions.Registration
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -33,9 +34,14 @@ object SparkEntry {
     queries("q15_transcript_assembly")(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each
+    * installs the native functions in the caller's session first, so a
+    * query plans on any session, extensions or not. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map(q => q.name -> { (s: SparkSession, d: String) =>
+      Registration.install(s)
+      q.fn(s, d)
+    }).toMap
 
   /** The queries a main's comma-separated name filter picks, sorted by
     * name; no filter (or an empty one) picks them all. */

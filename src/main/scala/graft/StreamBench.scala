@@ -1,7 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.AudioChunk
 import graft.streaming.SessionProcessor
@@ -269,89 +269,49 @@ object StreamBench {
       useRocksDb: Boolean = true,
       shufflePartitions: Option[Int] = Some(4),
       changelogCheckpoint: Boolean = true): Result = {
-    import spark.implicits._
-    val wd = new java.io.File(workDir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(wd)
+    GraftSession.delete(spark, new Path(workDir))
 
     // batch pre-pass: events → AudioChunk rows (PipelineMain's session-
     // path mapping), staged as `stageFiles` files to bound trigger size
     val events = Tables.events(spark, sfDir)
-    val base = events.groupBy(col("user_id"))
-      .agg(min(expr("ts div 1000")).as("base_us"))
-    events
-      .join(broadcast(base), "user_id")
-      .select(
-        col("user_id").cast("string").as("sessionId"),
-        encode(coalesce(col("props"), lit("")), "UTF-8").as("content"),
-        ((expr("ts div 1000") - col("base_us")) / 1000L).cast("long")
-          .as("offsetMs"),
-        lit(50L).as("durationMs"),
-        lit(false).as("isFinal"))
+    SessionProcessor.chunksOf(events, events)
       .repartition(stageFiles)
       .write.mode("overwrite").parquet(s"$workDir/chunks")
 
     // Session conf is shared with the caller: set what the bench needs
     // (provider + enough progress retention to never truncate the
-    // telemetry this function sums over) and RESTORE both on every
-    // exit path — a leaked provider would silently change state-store
-    // behavior for every later streaming query in the session.
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val RetainKey = "spark.sql.streaming.numRecentProgressUpdates"
-    val PartsKey = "spark.sql.shuffle.partitions"
-    val ChangelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(ProviderKey)
-    val prevRetain = spark.conf.getOption(RetainKey)
-    val prevParts = spark.conf.getOption(PartsKey)
-    val prevChangelog = spark.conf.getOption(ChangelogKey)
-    val (query, wall) =
-      try {
-        if (useRocksDb)
-          spark.conf.set(ProviderKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        spark.conf.set(RetainKey, math.max(1000, stageFiles * 2).toString)
-        shufflePartitions.foreach(p => spark.conf.set(PartsKey, p.toString))
-        if (changelogCheckpoint) spark.conf.set(ChangelogKey, "true")
-        val schema = spark.read.parquet(s"$workDir/chunks").schema
-        val chunks = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", filesPerTrigger)
-          .parquet(s"$workDir/chunks")
-          .as[AudioChunk](Encoders.product[AudioChunk])
+    // telemetry this function sums over) only for the run — a leaked
+    // provider would silently change state-store behavior for every
+    // later streaming query in the session.
+    val settings = Seq(
+      Some("spark.sql.streaming.numRecentProgressUpdates" ->
+        math.max(1000, stageFiles * 2).toString),
+      Option.when(useRocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
+      shufflePartitions.map(p => "spark.sql.shuffle.partitions" -> p.toString),
+      Option.when(changelogCheckpoint)(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+          "true")).flatten
+    val (query, wall) = GraftSession.withConf(spark, settings: _*) {
+      val schema = spark.read.parquet(s"$workDir/chunks").schema
+      val chunks = spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger)
+        .parquet(s"$workDir/chunks")
+        .as[AudioChunk](Encoders.product[AudioChunk])
 
-        val t0 = System.nanoTime()
-        val q = SessionProcessor.attach(chunks, timeoutMs = 0L).toDF()
-          .writeStream
-          .queryName("stream_bench_sessionizer")
-          .option("checkpointLocation", s"$workDir/ckpt")
-          .outputMode("append")
-          .format("noop")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        (q, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        prevProvider match {
-          case Some(v) => spark.conf.set(ProviderKey, v)
-          case None => spark.conf.unset(ProviderKey)
-        }
-        prevRetain match {
-          case Some(v) => spark.conf.set(RetainKey, v)
-          case None => spark.conf.unset(RetainKey)
-        }
-        if (shufflePartitions.isDefined) prevParts match {
-          case Some(v) => spark.conf.set(PartsKey, v)
-          case None => spark.conf.unset(PartsKey)
-        }
-        if (changelogCheckpoint) prevChangelog match {
-          case Some(v) => spark.conf.set(ChangelogKey, v)
-          case None => spark.conf.unset(ChangelogKey)
-        }
-      }
+      val t0 = System.nanoTime()
+      val q = SessionProcessor.attach(chunks, timeoutMs = 0L).toDF()
+        .writeStream
+        .queryName("stream_bench_sessionizer")
+        .option("checkpointLocation", s"$workDir/ckpt")
+        .outputMode("append")
+        .format("noop")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      (q, (System.nanoTime() - t0) / 1e9)
+    }
 
     val progress = query.recentProgress.toSeq
       .filter(_.numInputRows > 0) // AvailableNow appends an empty closer

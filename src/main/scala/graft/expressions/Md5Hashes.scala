@@ -2,7 +2,6 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -190,9 +189,6 @@ object Md5PrefixLong {
     case _ => throw new IllegalArgumentException(
       "md5_prefix_long(str, nHex) takes 2 arguments")
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "md5_prefix_long")
 }
 
 /** `md5_prefix_longs(arr, nHex)`: elementwise [[Md5PrefixLong]] over
@@ -231,9 +227,6 @@ object Md5PrefixLongs {
     case _ => throw new IllegalArgumentException(
       "md5_prefix_longs(arr, nHex) takes 2 arguments")
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "md5_prefix_longs")
 }
 
 /** `ngram_md5_longs(arr, n, nHex)`: md5-prefix hash of every size-`n`
@@ -277,9 +270,6 @@ object NgramMd5Longs {
     case _ => throw new IllegalArgumentException(
       "ngram_md5_longs(arr, n, nHex) takes 3 arguments")
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "ngram_md5_longs")
 }
 
 /** `minhash_sig(words)`: the 8 MinHash permutation minima over the
@@ -317,7 +307,4 @@ object MinHashSig {
     case _ => throw new IllegalArgumentException(
       "minhash_sig(words) takes 1 argument")
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "minhash_sig")
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{EvalMode, Expression, GenericInternalRow, IntegralDivide, Literal, NumericEvalContext}
@@ -129,8 +128,6 @@ object MmrSelect {
     case _ => throw new IllegalArgumentException(
       "mmr_select(cs, topK, lambdaMilli)")
   }
-
-  def register(spark: SparkSession): Unit = Registration.once(spark, "mmr_select")
 }
 
 /** The greedy itself, over `cs` elements of `nFields` fields with

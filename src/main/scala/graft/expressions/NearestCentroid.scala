@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -195,9 +195,6 @@ object NearestCentroid {
       "nearest_centroid(u, cells, cbarq, cnormsq)")
   }
 
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "nearest_centroid")
-
   /** Largest cell count and vector width a centroid matrix may have:
     * the matrix rides generated code by reference, so k·dims stays a
     * few MB (the testdata's is 10 × 64). */
@@ -222,11 +219,9 @@ object NearestCentroid {
   }
 
   /** The `nearest_centroid` column of micro-unit vector `u` under `c`,
-    * with the matrix passed as literals (registers the function in
-    * `spark` first). */
-  def assign(spark: SparkSession, u: Column, c: Centroids): Column = {
-    register(spark)
+    * with the matrix passed as literals (the caller's session has the
+    * natives installed, see [[Registration.install]]). */
+  def assign(u: Column, c: Centroids): Column =
     call_function("nearest_centroid", u, typedLit(c.cells),
       typedLit(c.cbarq), typedLit(c.cnormsq))
-  }
 }

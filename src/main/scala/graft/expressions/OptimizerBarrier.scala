@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -42,10 +41,4 @@ case class OptimizerBarrier(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object OptimizerBarrier {
-  /** Register `opt_barrier(x)` for `expr(...)` use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "opt_barrier")
 }

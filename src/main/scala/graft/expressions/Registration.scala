@@ -13,20 +13,19 @@ final case class NativeFunction(name: String, cls: Class[_ <: Expression],
 }
 
 /** The engine's native functions, and their session-scoped, truly
-  * idempotent temp-function registration.
+  * idempotent temp-function install.
   *
-  * [[natives]] is the ONE list: `graft.GraftExtensions` injects every
-  * entry into sessions built with the extensions, and each
-  * expression's `register(spark)` helper registers its own entry by
-  * name — so an extensions-only cluster session and a locally
-  * registered one resolve the same functions.
+  * [[natives]] is the ONE list, installed on two paths that read it
+  * whole: `graft.GraftExtensions` injects it into sessions built with
+  * the extensions (the cluster path), and [[install]] registers it in
+  * any other session where that session enters the engine — each
+  * query `SparkEntry.queries` hands out, and each operator or streaming
+  * entry point whose plan calls a native by name. No plan-building site
+  * registers a single function.
   *
   * `createOrReplaceTempFunction` logs a "replaced a previously registered
-  * function" WARN on every call after the first; queries register their
-  * expressions at build time, so an unguarded call per query build spams
-  * the log (and on a shared cluster, the driver's event log). Checking
-  * `functionExists` first keeps registration a no-op after the first call
-  * in a session.
+  * function" WARN on every call after the first; checking
+  * `functionExists` first keeps a repeated install a no-op.
   */
 object Registration {
 
@@ -72,15 +71,17 @@ object Registration {
       "(words) - the 8 MinHash permutation minima over the words' 32-bit md5-prefix hashes.",
       MinHashSig.build))
 
-  private lazy val byName: Map[String, NativeFunction] =
-    natives.map(f => f.name -> f).toMap
-
-  /** Register the [[natives]] entry `name` in `spark`'s session, once. */
-  def once(spark: SparkSession, name: String): Unit = {
+  /** Register every [[natives]] entry `spark`'s session lacks. The
+    * registry's lock makes check-then-register one step, so entries
+    * called from concurrent threads (serving clients) never both
+    * register a name. */
+  def install(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name))) {
-      registry.createOrReplaceTempFunction(name, byName(name).build,
-        "built-in")
+    registry.synchronized {
+      natives.foreach { f =>
+        if (!registry.functionExists(FunctionIdentifier(f.name)))
+          registry.createOrReplaceTempFunction(f.name, f.build, "built-in")
+      }
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -153,16 +152,11 @@ object RollingFingerprint {
     k.toInt
   }
 
-  /** The shared builder for SQL registration (register / extensions). */
+  /** The builder [[Registration.natives]] registers. */
   def build(exprs: Seq[Expression]): RollingFingerprint = exprs match {
     case Seq(c) => RollingFingerprint(c)
     case Seq(c, kLit) => RollingFingerprint(c, kFrom(kLit))
     case _ => throw new IllegalArgumentException(
       "rolling_fingerprint(text[, k])")
   }
-
-  /** Register `rolling_fingerprint(text[, k])` for `expr(...)` use in
-    * the current session (idempotent, no re-registration warning). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "rolling_fingerprint")
 }

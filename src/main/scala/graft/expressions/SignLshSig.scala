@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,7 +94,4 @@ object SignLshSig {
     }
 
   private[expressions] val flatPlanes: Array[Int] = planeSign.flatten
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sign_lsh_sig")
 }

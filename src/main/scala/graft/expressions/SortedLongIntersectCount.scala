@@ -1,6 +1,5 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,11 +77,4 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedLongIntersectCount {
-  /** Register `sorted_long_intersect_count(a, b)` for `expr(...)` use in
-    * the current session (idempotent, no re-registration warning). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "sorted_long_intersect_count")
 }

@@ -106,7 +106,7 @@ object TokenWindowHashes {
     new GenericArrayData(out)
   }
 
-  /** The shared builder for SQL registration (register / extensions). */
+  /** The builder [[Registration.natives]] registers. */
   def build(exprs: Seq[Expression]): TokenWindowHashes = exprs match {
     case Seq(c) => TokenWindowHashes(c)
     case Seq(c, kLit) =>
@@ -114,7 +114,4 @@ object TokenWindowHashes {
     case _ => throw new IllegalArgumentException(
       "token_window_hashes(tokens[, k]) takes 1 or 2 arguments")
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.once(spark, "token_window_hashes")
 }

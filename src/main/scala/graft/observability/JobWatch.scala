@@ -115,7 +115,17 @@ object JobWatch {
 
   /** One block's wall split into build, plan and exec, with the codegen
     * compile and executor task seconds it spent (summed over threads,
-    * so either may exceed the wall) and its disk spill. */
+    * so either may exceed the wall) and its disk spill.
+    *
+    * `inputMb` is Spark's `inputMetrics.bytesRead`, which it takes from
+    * Hadoop's `FileSystem.Statistics`. Parquet 1.16 reads column chunks
+    * through Hadoop vectored IO (`parquet.hadoop.vectored.io.enabled`,
+    * on by default), and on the local file system those reads bypass
+    * the statistics: only the footer reads count. A full scan of the
+    * sf0.1 `lineitem.parquet` (10.8 MB, 600,000 rows) reports 11,894
+    * bytes; with vectored IO off it reports 10,823,715, and 4,239,834
+    * for two of its columns. So a parquet scan here reads as a few KB,
+    * whatever it reads. */
   final case class Cost(buildS: Double, planS: Double, execS: Double,
       codegenS: Double, taskS: Double, jobsBuild: Int, jobsRun: Int,
       stages: Int, tasks: Long, shuffleReadMb: Double,

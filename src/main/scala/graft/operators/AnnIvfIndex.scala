@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Materialize
-import graft.expressions.NearestCentroid
+import graft.expressions.{NearestCentroid, Registration}
 import graft.functions.VectorFunctions.{microUnits, norm}
 
 /** The PRODUCTION shape of the IVF search family (q33/q110/q130/q148):
@@ -124,6 +124,7 @@ object AnnIvfIndex {
     * restarts at the base generation). */
   def retrain(s: SparkSession, table: String,
       maxRounds: Int = 10, tolMoves: Long = 0L): Seq[Long] = {
+    Registration.install(s)
     val nb = BucketedSnapshot.bucketCount(s, table)
     // embeddings + starting assignment, materialized OFF the table
     // (the rebuild below overwrites it — a lazy plan reading the same
@@ -137,7 +138,7 @@ object AnnIvfIndex {
     val moved = scala.collection.mutable.ArrayBuffer.empty[Long]
     var round = 0
     while (round < maxRounds && !moved.lastOption.exists(_ <= tolMoves)) {
-      val next = nearestCell(s, cent)
+      val next = nearestCell(cent)
       moved += base.filter(next =!= assign).count()
       assign = next
       cent = NearestCentroid.collect(centroidsOf(assigned(base, assign)))
@@ -160,9 +161,8 @@ object AnnIvfIndex {
     * rounds on: max [[probeScore]], ties to the LOWER cell id. A null
     * or empty embedding has no cell (null). One narrow pass: k·dims
     * multiply-adds per vector, no shuffle. */
-  private def nearestCell(s: SparkSession,
-      cent: NearestCentroid.Centroids): Column =
-    NearestCentroid.assign(s, microUnits(col("embedding")), cent)
+  private def nearestCell(cent: NearestCentroid.Centroids): Column =
+    NearestCentroid.assign(microUnits(col("embedding")), cent)
 
   /** Centroid frame (cell, dim, csum, n, cbarq, cnormsq) from an
     * ASSIGNED corpus — [[build]]'s exact integer math, shared with
@@ -193,8 +193,9 @@ object AnnIvfIndex {
     val s = newVecs.sparkSession
     if (skipExisting && InvertedTextIndex.hasBatch(s, table, batchId))
       return
+    Registration.install(s)
     val cent = NearestCentroid.collect(s.table(centTable(table)))
-    BucketedSnapshot.append(assigned(newVecs, nearestCell(s, cent))
+    BucketedSnapshot.append(assigned(newVecs, nearestCell(cent))
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("batch_id", lit(batchId)), table, "cell")
   }
@@ -236,7 +237,7 @@ object AnnIvfIndex {
   def search(queries: DataFrame, table: String, nprobe: Int = 2,
       k: Int = 3, excludeSelf: Boolean = true): DataFrame = {
     val s = queries.sparkSession
-    graft.expressions.FloatVectorDot.register(s)
+    Registration.install(s)
     val cent = s.table(centTable(table))
     val dots = dimRows(queries, "q_id")
       .join(broadcast(cent.select(col("cell"), col("dim"), col("cbarq"))),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.TextQueries
+import graft.expressions.Registration
 
 /** The PRODUCTION shape of q173's delta dedup: the corpus snapshot's
   * LSH band table is a MATERIALIZED index — built once when the
@@ -61,6 +62,7 @@ object DeltaDedupIndex {
     * — pass it explicitly only when the caller already knows the
     * corpus size (saves the sizing count job). */
   def build(docs: DataFrame, table: String, buckets: Int = 0): Unit = {
+    Registration.install(docs.sparkSession)
     val nb = if (buckets > 0) buckets else bucketsFor(docs.count())
     BucketedSnapshot.write(bandRows(docs), table, nb, "bkey")
   }
@@ -70,8 +72,10 @@ object DeltaDedupIndex {
     * ([[BucketedSnapshot.append]]). Callers append only docs that
     * [[admit]] ADMITTED — appending a rejected near-dup would make the
     * snapshot self-contradictory. */
-  def append(admittedDocs: DataFrame, table: String): Unit =
+  def append(admittedDocs: DataFrame, table: String): Unit = {
+    Registration.install(admittedDocs.sparkSession)
     BucketedSnapshot.append(bandRows(admittedDocs), table, "bkey")
+  }
 
   /** Layout audit — the lifecycle counterpart of
     * [[DeltaSemDedupIndex.occupancy]] for the band index. Band dedup
@@ -101,8 +105,7 @@ object DeltaDedupIndex {
     *     cost ∝ |batch|. */
   def admit(newDocs: DataFrame, table: String): DataFrame = {
     val s = newDocs.sparkSession
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
+    Registration.install(s)
     val inc = TextQueries.lshBandRows(
         newDocs.select(col("doc_id"), col("text")))
       .withColumn("bkey",

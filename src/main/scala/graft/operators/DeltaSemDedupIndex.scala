@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.VectorQueries
+import graft.expressions.Registration
 
 /** The PRODUCTION shape of q176's delta SEMANTIC dedup — the embedding
   * analog of [[DeltaDedupIndex]]: the corpus snapshot's sign-LSH cell
@@ -55,7 +56,6 @@ object DeltaSemDedupIndex {
   /** Cell rows of `vecs` (`vec_id`, `embedding`, + passthrough
     * `label` for the verdict frame) under the grid `capRow`. */
   private[operators] def cellRows(vecs: DataFrame, capRow: DataFrame): DataFrame = {
-    graft.expressions.OptimizerBarrier.register(vecs.sparkSession)
     val withLabel =
       if (vecs.columns.contains("label")) vecs
       else vecs.withColumn("label", lit(0))
@@ -71,6 +71,7 @@ object DeltaSemDedupIndex {
   def build(vecs: DataFrame, table: String, gridN: Long = 0,
       buckets: Int = 0): Unit = {
     val s = vecs.sparkSession
+    Registration.install(s)
     val n = if (gridN > 0) gridN else vecs.count()
     val nb = if (buckets > 0) buckets else bucketsFor(n)
     BucketedSnapshot.write(cellRows(vecs, VectorQueries.gridCapRowFor(s, n))
@@ -85,6 +86,7 @@ object DeltaSemDedupIndex {
     * only vectors [[admit]] ADMITTED. */
   def append(admittedVecs: DataFrame, table: String): Unit = {
     val s = admittedVecs.sparkSession
+    Registration.install(s)
     BucketedSnapshot.append(cellRows(admittedVecs, deployedGrid(s, table))
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"),
         col("nbits")), table, "cell")
@@ -138,7 +140,7 @@ object DeltaSemDedupIndex {
   def admit(newVecs: DataFrame, table: String,
       cosThreshold: Double = 0.3): DataFrame = {
     val s = newVecs.sparkSession
-    graft.expressions.FloatVectorDot.register(s)
+    Registration.install(s)
     val inc = cellRows(newVecs, deployedGrid(s, table))
       .withColumn("pcell", explode(expr(VectorQueries.multiprobeExpr)))
       .select(col("vec_id").as("id_n"), col("embedding").as("e_n"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Materialize
 import graft.queries.RetrievalQueries
+import graft.expressions.Registration
 
 /** The PRODUCTION shape of q180's keyword search: the corpus postings
   * list is a MATERIALIZED inverted index — (wh, doc_id, tf, dl) rows
@@ -77,12 +78,10 @@ object InvertedTextIndex {
     * companion materializes this bucketed by doc_id so doc-keyed
     * serving lookups (PRF term harvesting, MMR similarity sets) prune
     * to the touched documents instead of rescanning the corpus. */
-  private def forwardRows(docs: DataFrame): DataFrame = {
-    RetrievalQueries.registerKernels(docs.sparkSession)
+  private def forwardRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       expr(s"array_distinct(${RetrievalQueries.whArrayExpr})").as("tset"),
       size(expr("split(text, ' ')")).cast("long").as("dl"))
-  }
 
   /** Write the corpus' inverted index. `docs` must have `doc_id` and
     * `text`. `buckets` ≤ 0 (the default) derives the count from the
@@ -118,6 +117,7 @@ object InvertedTextIndex {
 
   def build(docs: DataFrame, table: String, buckets: Int = 0,
       positional: Boolean = false, forward: Boolean = false): Unit = {
+    Registration.install(docs.sparkSession)
     val metaPlan = metaRow(docs)
       .withColumn("batch_id", lit(BaseBatchId))
     // ONE corpus tokenization pass serves both bucket sizing and the
@@ -158,6 +158,7 @@ object InvertedTextIndex {
   def append(admittedDocs: DataFrame, table: String,
       batchId: Long = BaseBatchId, skipExisting: Boolean = false): Unit = {
     val s = admittedDocs.sparkSession
+    Registration.install(s)
     def need(t: String): Boolean =
       !skipExisting || !hasBatch(s, t, batchId)
     if (need(table))
@@ -252,8 +253,10 @@ object InvertedTextIndex {
     * term's TRUE corpus df, append-stable by construction. */
   def search(queries: DataFrame, table: String,
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
-      k: Int = 5, maxInList: Int = MaxInList): DataFrame =
+      k: Int = 5, maxInList: Int = MaxInList): DataFrame = {
+    Registration.install(queries.sparkSession)
     searchPlan(queries, table, termsPerQuery, k, maxInList)._1
+  }
 
   /** The shared serving plan: (ranked top-k, selected terms, the
     * workload-pruned scan of any companion index table). */
@@ -261,7 +264,6 @@ object InvertedTextIndex {
       termsPerQuery: Int, k: Int, maxInList: Int)
       : (DataFrame, DataFrame, DataFrame => DataFrame) = {
     val s = queries.sparkSession
-    RetrievalQueries.registerKernels(s)
     val Materialize.Local(qtokRows, qtok) = Materialize.local(queries
       .select(col("q_doc"),
         explode(expr(RetrievalQueries.whArrayExpr)).as("wh"))
@@ -301,6 +303,7 @@ object InvertedTextIndex {
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       k: Int = 5, maxInList: Int = MaxInList): DataFrame = {
     val s = queries.sparkSession
+    Registration.install(s)
     val (ranked, terms, pruned) =
       searchPlan(queries, table, termsPerQuery, k, maxInList)
     val firstHit = pruned(s.table(posTable(table)))
@@ -339,7 +342,7 @@ object InvertedTextIndex {
   def phraseSearch(phrases: DataFrame, table: String,
       maxInList: Int = MaxInList): DataFrame = {
     val s = phrases.sparkSession
-    RetrievalQueries.registerKernels(s)
+    Registration.install(s)
     // the phrase tokenization collects once (≤ MaxQueries·MaxDocTokens
     // rows, like searchPlan) and feeds the IN-list/semi-join guard, the
     // broadcast candidate side, and the per-phrase length — never
@@ -389,6 +392,7 @@ object InvertedTextIndex {
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       k: Int = 5, maxInList: Int = MaxInList): DataFrame = {
     val s = queries.sparkSession
+    Registration.install(s)
     // collect the selected terms FIRST and build the first-stage
     // ranking from the LOCAL rows — using searchPlan's own ranked
     // frame would embed (and re-execute) the term-selection subtree a
@@ -465,6 +469,7 @@ object InvertedTextIndex {
       termsPerQuery: Int = RetrievalQueries.TermsPerQuery,
       maxInList: Int = MaxInList): DataFrame = {
     val s = queries.sparkSession
+    Registration.install(s)
     val (ranked, _, _) =
       searchPlan(queries, table, termsPerQuery, fuseDepth, maxInList)
     val mw = Window.partitionBy(col("q_doc"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.VectorQueries
+import graft.expressions.Registration
 
 /** The COMPRESSED production shape of delta semantic dedup — q178's
   * two-stage admit as a materialized index. [[DeltaSemDedupIndex]]
@@ -80,6 +81,7 @@ object PqSemDedupIndex {
   def build(vecs: DataFrame, table: String, gridN: Long = 0,
       buckets: Int = 0): Unit = {
     val s = vecs.sparkSession
+    Registration.install(s)
     val n = if (gridN > 0) gridN else vecs.count()
     val nb = if (buckets > 0) buckets else bucketsFor(n)
     val dims = VectorQueries.pqDims(vecs)
@@ -99,6 +101,7 @@ object PqSemDedupIndex {
     * and append their code rows into the bucket layout. */
   def append(admittedVecs: DataFrame, table: String): Unit = {
     val s = admittedVecs.sparkSession
+    Registration.install(s)
     val (cw, rmeta) = codebookOf(s, table)
     val cells = DeltaSemDedupIndex
       .cellRows(admittedVecs, DeltaSemDedupIndex.deployedGrid(s, table))
@@ -119,7 +122,7 @@ object PqSemDedupIndex {
   def admit(newVecs: DataFrame, table: String, corpus: DataFrame,
       cosThreshold: Double = 0.3, adcFloor: Double = 0.05): DataFrame = {
     val s = newVecs.sparkSession
-    graft.expressions.FloatVectorDot.register(s)
+    Registration.install(s)
     val inc = DeltaSemDedupIndex
       .cellRows(newVecs, DeltaSemDedupIndex.deployedGrid(s, table))
       .withColumn("pcell", explode(expr(VectorQueries.multiprobeExpr)))

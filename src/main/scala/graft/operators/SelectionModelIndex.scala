@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingSelection
+import graft.expressions.Registration
 
 /** DEPLOYED-ARTIFACT lifecycle for the data-selection models (VERDICT
   * r15 #8): q200's quality classifier and q201's DSIR buckets were
@@ -68,6 +69,7 @@ object SelectionModelIndex {
     * tables — the number future audits drift against. */
   def build(labeled: DataFrame, table: String, buckets: Int = 8): Unit = {
     val s = labeled.sparkSession
+    Registration.install(s)
     val m = StreamingSelection.trainModel(
       labeled.filter(col("is_train"))
         .select(col("doc_id"), col("text"), col("label")))
@@ -124,7 +126,7 @@ object SelectionModelIndex {
     * per doc, half-bit importance Σ [bits_raw − bits_target] over its
     * bigram buckets; `selected` = importance ≥ 0. */
   def dsirScore(s: SparkSession, docs: DataFrame, table: String): DataFrame = {
-    graft.expressions.NgramMd5Longs.register(s)
+    Registration.install(s)
     val t = s.table(table + "_meta").filter(col("kind") === "train")
       .orderBy(col("seq").desc).select("tot_r", "tot_t").head()
     val (totR, totT) = (t.getLong(0), t.getLong(1))

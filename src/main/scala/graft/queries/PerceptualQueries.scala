@@ -1108,7 +1108,6 @@ object PerceptualQueries {
     * dropped it. */
   private def manifestFlags(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.TokenWindowHashes.register(s)
     val nShards = 32
     val docs = Tables.documents(s, d)
       .filter(col("source") =!= "src0" && length(col("text")) >= 1)

@@ -64,13 +64,9 @@ object RetrievalQueries {
     * TextQueries.tokenHashes — the q113 rule: the shuffle key is never
     * the string; change the hash there and here together). Fused
     * kernel ([[graft.expressions.Md5PrefixLongs]], bit-identical to
-    * the composed conv/substring/md5 form); every evaluation site
-    * registers it via [[registerKernels]]. */
+    * the composed conv/substring/md5 form). */
   private[graft] def whArrayExprFor(textCol: String): String =
     s"md5_prefix_longs(split($textCol, ' '), 15)"
-
-  private[graft] def registerKernels(s: SparkSession): Unit =
-    graft.expressions.Md5PrefixLongs.register(s)
 
   private[graft] val whArrayExpr: String = whArrayExprFor("text")
 
@@ -80,7 +76,6 @@ object RetrievalQueries {
     * Shared with [[graft.operators.InvertedTextIndex]] — the index is
     * this frame, materialized bucketed by wh. */
   private[graft] def postingRows(docs: DataFrame): DataFrame = {
-    registerKernels(docs.sparkSession)
     docs
       .select(col("doc_id"), expr(whArrayExpr).as("whs"))
       .withColumn("dl", size(col("whs")).cast("long"))
@@ -115,7 +110,6 @@ object RetrievalQueries {
     * it inline from one scan; [[graft.operators.InvertedTextIndex]]
     * materializes it bucketed by wh as the `_pos` companion table). */
   private[graft] def positionRows(docs: DataFrame): DataFrame = {
-    registerKernels(docs.sparkSession)
     docs
       .select(col("doc_id"), posexplode(expr(whArrayExpr)).as(Seq("pos", "wh")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("wh"))
@@ -281,7 +275,6 @@ object RetrievalQueries {
     * from the keyword list alone. Fusion itself joins two ≤(queries ×
     * [[FuseDepth]])-row frames — negligible at any corpus size. */
   private def q181(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val qdocs = localQueryDocs(s, d)
     val kw = rankTop(scored(s, d, postingsM(s, d), qdocs), "rk_kw", FuseDepth)
       .select(col("q_doc"), col("doc_id"), col("rk_kw"))
@@ -371,7 +364,6 @@ object RetrievalQueries {
     * tokens among quote positions 3-10 (1-based) of each query doc. */
   private def quoteTerms(s: SparkSession, d: String,
       post: DataFrame, qdocs: DataFrame): DataFrame = {
-    registerKernels(s)
     val quoteTok = Tables.documents(s, d)
       .join(broadcast(qdocs), col("doc_id") === col("q_doc"))
       .select(col("q_doc"), posexplode(expr(whArrayExpr)).as(Seq("p", "wh")))
@@ -408,7 +400,6 @@ object RetrievalQueries {
           .as("mrr_ppm_sum"))
 
   private def q182(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
     val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)
@@ -812,7 +803,6 @@ object RetrievalQueries {
         expr("score div greatest(1L, maxs div 10000L)"))
       .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")),
       "q186.candidates", MaxQueryDocs * FuseDepth).df
-    registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).distinct()), "doc_id")
       .select(col("doc_id"), expr(s"array_distinct($whArrayExpr)").as("tset"))
@@ -836,7 +826,6 @@ object RetrievalQueries {
     * runs exactly once. */
   private[graft] def mmrFold(candsWithTsets: DataFrame, topK: Int)
       : DataFrame = {
-    graft.expressions.MmrSelect.register(candsWithTsets.sparkSession)
     candsWithTsets
       .groupBy(col("q_doc"))
       .agg(sort_array(collect_list(struct(col("rk"), col("doc_id"),
@@ -1241,7 +1230,6 @@ object RetrievalQueries {
     * payloads; per-query feature math is workload-bounded. The corpus
     * scales only the one token shuffle. */
   private def q189(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     // retrieved ∪ known-positive: the target doc always joins the pool
     // (rk_kw = 0 marks "scored but not retrieved" — it shares its own
     // query terms, so it is always in the scored frame), the standard
@@ -1260,7 +1248,6 @@ object RetrievalQueries {
     // re-enter as a local relation
     val cands = Materialize.local(candsPlan, "q189.pool",
       MaxQueryDocs * (FuseDepth + 1)).df
-    registerKernels(s)
     val tsets = Tables.documents(s, d)
       .join(broadcast(cands.select(col("doc_id")).unionByName(
         cands.select(col("q_doc").as("doc_id"))).distinct()), "doc_id")
@@ -1395,7 +1382,6 @@ object RetrievalQueries {
     * — against the materialized index it is the pruned-bucket scan);
     * the fusion and recall bookkeeping are ≤3×|queries| rows. */
   private def q190(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val post = postingsM(s, d)
     val qdocs = localQueryDocs(s, d)
     val terms = quoteTerms(s, d, post, qdocs)

@@ -86,7 +86,6 @@ object SelectionQueries {
     * engines. */
   private def labeledBigrams(s: SparkSession, d: String,
       lab: DataFrame): DataFrame = {
-    graft.expressions.NgramMd5Longs.register(s)
     Tables.documents(s, d)
       .join(lab, "doc_id")
       .withColumn("w", expr(wordsExpr))

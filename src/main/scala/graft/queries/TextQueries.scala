@@ -30,7 +30,6 @@ object TextQueries {
     * parity breaks for all three queries at once (which is the point —
     * one place per engine, not three). */
   private def tokenHashes(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.Md5PrefixLongs.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         explode(expr(s"md5_prefix_longs($wordsExpr, 15)")).as("wh"))
@@ -190,7 +189,6 @@ object TextQueries {
     * the aggregation exchange. The sig-null filter mirrors the old
     * explode's drop of docs whose word array is null. */
   private def minhashAgg(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.expressions.MinHashSig.register(s)
     docs
       .select(col("doc_id"), expr(s"minhash_sig($wordsExpr)").as("sig"))
       .filter(col("sig").isNotNull)
@@ -239,14 +237,11 @@ object TextQueries {
     * twice; verify-all-then-distinct intersects 1.4× more candidates —
     * both slower. */
   private def q29(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val sig = q28(s, d)
     // opt_barrier pins the hashed word set in this projection — without
     // it CollapseProject/pushdown inline the md5 token hashing into
     // every consumer (size(), join-side null filters), recomputing it
     // per reference (same pathology measured 30× on q31).
-    graft.expressions.Md5PrefixLongs.register(s)
     val words = Tables.documents(s, d)
       .select(col("doc_id"),
         expr("opt_barrier(array_sort(array_distinct(" +
@@ -506,9 +501,6 @@ object TextQueries {
     * smallest band index where the minhashes agree — an O(1) array
     * probe, no `distinct` shuffle). */
   private def q31(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
-    graft.expressions.NgramMd5Longs.register(s)
     // opt_barrier pins the trigram set and the signature array in THIS
     // projection: without it, the Generate's pushed-down null/size checks
     // and the join's null filters alias-substitute the whole
@@ -630,7 +622,6 @@ object TextQueries {
     * (one linear scan per doc, O(1) rolling update per gram); the
     * oracle recomputes every gram hash by direct folding. */
   private def q72(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.RollingFingerprint.register(s)
     Tables.documents(s, d)
       // exclude sub-8-char docs identically on both sides
       .filter(length(col("text")) >= 8)
@@ -686,7 +677,6 @@ object TextQueries {
     * each doc's words sit in one input row, so the shuffle carries one
     * 60-column partial row per doc. */
   private def q104(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.Md5PrefixLongs.register(s)
     val bits = 0 until 60
     val hw = Tables.documents(s, d)
       .select(col("doc_id"),
@@ -809,7 +799,6 @@ object TextQueries {
     * partials → group back by doc. The shuffle key is the 60-bit hash,
     * never the bigram string. */
   private def q113(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.NgramMd5Longs.register(s)
     val pairs = Tables.documents(s, d)
       .withColumn("w", expr(wordsExpr))
       .filter(size(col("w")) >= 2)
@@ -874,7 +863,6 @@ object TextQueries {
     * anti-join against the exploded disjoint intervals. */
   private def q115(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.TokenWindowHashes.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), expr(wordsExpr).as("w"))
       .withColumn("n", size(col("w")))
@@ -1462,9 +1450,6 @@ object TextQueries {
 
   private def q155(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
-    graft.expressions.NgramMd5Longs.register(s)
     val sw = Window.partitionBy(col("source"))
       .orderBy(md5(col("text").cast("binary")).asc, col("doc_id").asc)
     val tri = Tables.documents(s, d)
@@ -1693,9 +1678,6 @@ object TextQueries {
     * rule: the key is never the string). V rides along as a 1-row
     * broadcast scalar (plan-guard-proved pattern). */
   private def q161(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.Md5PrefixLong.register(s)
-    graft.expressions.Md5PrefixLongs.register(s)
-    graft.expressions.NgramMd5Longs.register(s)
     val gramsOf = (df: DataFrame) => df
       .withColumn("w", expr(wordsExpr))
       .filter(size(col("w")) >= 2)
@@ -2148,7 +2130,6 @@ object TextQueries {
     * under 13 tokens have no grams and report 0/false via
     * explode_outer. */
   private[queries] def q166(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.TokenWindowHashes.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         expr("token_window_hashes(" + wordsExpr + ", 13)").as("grams"))
@@ -2265,7 +2246,6 @@ object TextQueries {
   def intraDocDedup(s: SparkSession,
       documents: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.TokenWindowHashes.register(s)
     val docs = documents
       .select(col("doc_id"), expr(wordsExpr).as("w"))
       .withColumn("n", size(col("w")))
@@ -2399,11 +2379,7 @@ object TextQueries {
     * quote-and-extend pairs against an independent naive reference. */
   def containmentNearDup(s: SparkSession, documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
-    graft.expressions.NgramMd5Longs.register(s)
     val sig = minhashAgg(s, documents)
-    graft.expressions.Md5PrefixLongs.register(s)
     val words = documents
       .select(col("doc_id"),
         expr("opt_barrier(array_sort(array_distinct(" +
@@ -2614,8 +2590,6 @@ object TextQueries {
 
   private def q170(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.expressions.OptimizerBarrier.register(s)
-    graft.expressions.NgramMd5Longs.register(s)
     def tri(c: String) = triHashSetExpr(c)
     def minsExpr(c: String, k: Int) =
       perms.take(k).map { case (a, b) =>
@@ -2760,7 +2734,6 @@ object TextQueries {
     * small), quality flags by doc_id join. The documents table itself
     * never reshuffles. */
   private def q171(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.TokenWindowHashes.register(s)
     val nShards = 32
     val keepFlags = q149(s, d).select(col("doc_id"), col("keep"))
     val (labels, _) =
@@ -2905,9 +2878,7 @@ object TextQueries {
     * (doc, band) with the band-1 fold kept for the first-matching-band
     * rule and the hashed word set attached for verification. */
   private[graft] def lshBandRows(docs: DataFrame): DataFrame = {
-    graft.expressions.OptimizerBarrier.register(docs.sparkSession)
     val sig = minhashAgg(docs.sparkSession, docs)
-    graft.expressions.Md5PrefixLongs.register(docs.sparkSession)
     val words = docs
       .select(col("doc_id"),
         expr("opt_barrier(array_sort(array_distinct(" +
@@ -2930,8 +2901,6 @@ object TextQueries {
   }
 
   private def q173(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.SortedLongIntersectCount.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val bandRows = lshBandRows(
       Tables.documents(s, d).select(col("doc_id"), col("text")))
     val inc = bandRows.filter(col("doc_id") % 10 === 0)
@@ -3043,7 +3012,6 @@ object TextQueries {
     * the gate joins, and the ≤ 2·32·sources manifest aggregation are
     * all delta-sized. All output columns integer-exact. */
   private def q177(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.TokenWindowHashes.register(s)
     val nShards = 32
     val isBatch = col("doc_id") % 10 === 0
     val keepFlags = q149(s, d).select(col("doc_id"), col("keep"))

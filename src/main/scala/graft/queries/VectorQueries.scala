@@ -26,7 +26,6 @@ object VectorQueries {
     * (same fold order), so the oracle SQL is unchanged. */
   private def scored(s: SparkSession, d: String, sameLabel: Boolean)
       : DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val emb = Tables.embeddings(s, d)
       .withColumn("nrm", norm(col("embedding")))
     val queries = emb.filter(col("vec_id") < 8)
@@ -127,7 +126,6 @@ object VectorQueries {
     * shuffle key, so the pairwise work stays inside cells exactly like
     * LSH bands. */
   private def q62(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val emb = Tables.embeddings(s, d)
       .withColumn("nrm", norm(col("embedding")))
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a"),
@@ -194,7 +192,6 @@ object VectorQueries {
     * products stay < 2⁶³ up to ~10⁹-vector cells; beyond that, store
     * per-dim MEANS (divide by n) or DECIMAL partials — same plan. */
   private def q110(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val emb = Tables.embeddings(s, d)
     val dims = emb
       .select(col("vec_id"), col("label"),
@@ -713,7 +710,6 @@ object VectorQueries {
     * embedding side stays a streamed semi-join probe — no shuffle of
     * the corpus. The oracle replays q130 verbatim and re-scores in SQL. */
   private def q148(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val emb = Tables.embeddings(s, d).withColumn("nrm", norm(col("embedding")))
     val cands = q130(s, d).select(col("q_id"), col("c_id"), col("adc_dist"))
     emb
@@ -888,7 +884,6 @@ object VectorQueries {
     * generated code per stage); the opt_barrier pins the micro-unit
     * array projection as its own evaluation. */
   private[graft] def withCells(emb: DataFrame, capRow: DataFrame): DataFrame = {
-    graft.expressions.SignLshSig.register(emb.sparkSession)
     emb
       .withColumn("u", expr("opt_barrier(transform(embedding, " +
         "x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0D) AS BIGINT)))"))
@@ -942,8 +937,6 @@ object VectorQueries {
       |  WHERE k < l)""".stripMargin
 
   private def q172(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val emb = Tables.embeddings(s, d)
     val capRow = gridCapRow(emb)
     val withCell = withCells(emb, capRow)
@@ -1063,8 +1056,6 @@ object VectorQueries {
     * corpus-sized term is the 1-row count that fixes the deployed
     * cell depth. */
   private def q175(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val emb = Tables.embeddings(s, d)
     val sample = withCells(emb.filter(col("vec_id") < 512), gridCapRow(emb))
     val a = sample.select(col("vec_id").as("id_a"), col("label").as("la"),
@@ -1146,8 +1137,6 @@ object VectorQueries {
     * match count, first (min-id) snapshot match, best cosine, and the
     * admitted verdict. */
   private def q176(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val emb = Tables.embeddings(s, d)
     val cells = withCells(emb, gridCapRow(emb))
     val inc = cells.filter(col("vec_id") % 4 === 0)
@@ -1357,8 +1346,6 @@ object VectorQueries {
   private val PqSampleCap = 512L
 
   private def q178(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
-    graft.expressions.OptimizerBarrier.register(s)
     val emb = Tables.embeddings(s, d)
     val cells = withCells(emb, gridCapRow(emb))
     val inc = cells
@@ -1621,8 +1608,6 @@ object VectorQueries {
     * 3-row broadcast; everything after is a (scenario, cell) count
     * aggregate — map-side combinable, no joins, no embeddings moved. */
   private def q179(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.OptimizerBarrier.register(s)
-    graft.expressions.SignLshSig.register(s)
     val emb = Tables.embeddings(s, d)
     val nrow = emb.agg(count(lit(1)).as("n_total"))
     val sigs = emb
@@ -1754,7 +1739,6 @@ object VectorQueries {
     * with |Q| fixed at 50 (the q80/q175 measurement pattern: the
     * RECALL PROBE pays brute force so serving never has to). */
   private def q197(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.FloatVectorDot.register(s)
     val emb = Tables.embeddings(s, d)
     // one row per vector: the true cell and the micro-unit vector
     val base = emb.select(col("vec_id"), col("embedding"),
@@ -1772,7 +1756,7 @@ object VectorQueries {
         .agg(sum(col("u")).as("csum"), count(lit(1)).as("n"))
         .select(col("cell"), col("dim"), expr("csum div n").as("cbarq")))
     def nearest(c: NearestCentroid.Centroids): Column =
-      NearestCentroid.assign(s, col("u"), c)
+      NearestCentroid.assign(col("u"), c)
 
     val c0 = centOf(col("tcell")) // deployed quantizer: true cluster means
     val k = c0.cells.max + 1L

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.inference.{Inferencer, SurrogateInferencer}
 import graft.model.{AudioChunk, TranscriptEvent}
@@ -217,6 +217,25 @@ object SessionLogic {
 }
 
 object SessionProcessor {
+
+  /** `events` (`user_id`, `ts` epoch-nanos, `props`) as chunks: one
+    * session per user, each offset in ms from that user's first event
+    * in `bases`, 50 ms long, none final. A stream passes its static
+    * history as `bases`; a batch passes itself. */
+  def chunksOf(events: DataFrame, bases: DataFrame): Dataset[AudioChunk] = {
+    val base = bases.groupBy(col("user_id"))
+      .agg(min(expr("ts div 1000")).as("base_us"))
+    events
+      .join(broadcast(base), "user_id")
+      .select(
+        col("user_id").cast("string").as("sessionId"),
+        encode(coalesce(col("props"), lit("")), "UTF-8").as("content"),
+        ((expr("ts div 1000") - col("base_us")) / 1000L).cast("long")
+          .as("offsetMs"),
+        lit(50L).as("durationMs"),
+        lit(false).as("isFinal"))
+      .as[AudioChunk](Encoders.product[AudioChunk])
+  }
 
   /** Event-time variant of W5: sessions finalize when the WATERMARK
     * passes lastChunkEnd + idleGapMs — fully deterministic under

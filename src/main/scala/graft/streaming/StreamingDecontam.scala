@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.expressions.Registration
 
 /** Stream-static eval-set decontamination — q166's audit as a LIVE gate
   * on an ingest stream: every arriving document is checked against the
@@ -31,7 +32,7 @@ object StreamingDecontam {
   /** Distinct rolling k-gram hashes of a static eval corpus
     * (`doc_id`, `text`); one column `h`. */
   def evalGramSet(evalDocs: DataFrame, k: Int = 13): DataFrame = {
-    graft.expressions.TokenWindowHashes.register(evalDocs.sparkSession)
+    Registration.install(evalDocs.sparkSession)
     evalDocs
       .select(explode(expr(s"token_window_hashes(split(text, ' '), $k)"))
         .as("h"))
@@ -57,7 +58,7 @@ object StreamingDecontam {
     * directly usable on any batch corpus. */
   def auditBatch(docs: DataFrame, evalGrams: DataFrame,
       k: Int = 13): DataFrame = {
-    graft.expressions.TokenWindowHashes.register(docs.sparkSession)
+    Registration.install(docs.sparkSession)
     docs
       .select(col("doc_id"), col("source"),
         explode_outer(expr(s"token_window_hashes(split(text, ' '), $k)"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.expressions.Registration
 
 /** Stream-side deployment of the q200 quality classifier — the trained
   * model as a SHIPPED ARTIFACT applied to an ingest stream, closing
@@ -49,7 +50,7 @@ object StreamingSelection {
     * convention) and the train slice. One vocab-sized aggregation; the
     * model frame is persisted so per-batch scoring doesn't retrain. */
   def trainModel(labeledDocs: DataFrame): NbModel = {
-    graft.expressions.NgramMd5Longs.register(labeledDocs.sparkSession)
+    Registration.install(labeledDocs.sparkSession)
     val grams = labeledDocs
       .withColumn("w", expr("split(text, ' ')"))
       .select(col("label"), explode(expr(bigramsExpr)).as("h"))
@@ -69,7 +70,7 @@ object StreamingSelection {
     * what `start` applies per micro-batch; it is also directly usable
     * on any batch corpus. */
   def scoreBatch(docs: DataFrame, m: NbModel): DataFrame = {
-    graft.expressions.NgramMd5Longs.register(docs.sparkSession)
+    Registration.install(docs.sparkSession)
     val xp = s"((${m.totPos} + ${m.vocab}) div (coalesce(c_pos, 0L) + 1))"
     val xn = s"((${m.totNeg} + ${m.vocab}) div (coalesce(c_neg, 0L) + 1))"
     docs

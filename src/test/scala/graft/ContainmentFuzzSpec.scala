@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.TextQueries
+import graft.expressions.Registration
 
 /** Fuzz oracle for the q168 containment kernel: random diverse-vocab
   * corpora with PLANTED quote-and-extend pairs are scored by the
@@ -90,6 +91,7 @@ class ContainmentFuzzSpec extends SparkSpec {
   }
 
   test("distributed two-generator kernel == naive reference; planted pairs found") {
+    Registration.install(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(20260814L)
     val vocab = Vector.tabulate(150)(i => f"w$i%03d")

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.FloatVectorDot
+import graft.expressions.Registration
 import graft.functions.VectorFunctions
 
 class FloatVectorDotSpec extends SparkSpec {
 
   test("fused dot is bit-identical to the HOF formulation") {
-    FloatVectorDot.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(99)
     val rows = (1 to 200).map { _ =>
@@ -22,7 +22,7 @@ class FloatVectorDotSpec extends SparkSpec {
   }
 
   test("empty and mismatched lengths behave") {
-    FloatVectorDot.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val df = Seq((Seq.empty[Float], Seq(1.0f)),
       (Seq(2.0f, 3.0f), Seq(4.0f))).toDF("a", "b")

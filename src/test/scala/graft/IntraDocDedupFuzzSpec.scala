@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.queries.TextQueries
+import graft.expressions.Registration
 
 /** Fuzz oracle for the q167 intra-document repeated-span removal
   * kernel: random small-vocabulary corpora (forcing dense window
@@ -31,6 +32,7 @@ class IntraDocDedupFuzzSpec extends SparkSpec {
   }
 
   test("distributed chain == naive reference on random dense corpora") {
+    Registration.install(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(20260813L)
     val vocab = Vector("a", "b", "c", "d")
@@ -56,6 +58,7 @@ class IntraDocDedupFuzzSpec extends SparkSpec {
   }
 
   test("hand-pinned edges: all-repeat collapses, short docs untouched") {
+    Registration.install(spark)
     import spark.implicits._
     val df = Seq(
       (1L, "x x x x x x"), // every window after the first repeats

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.expressions.Registration
 
 /** Pins the fused md5-prefix kernels (r18) against the composed
   * builtin forms they replaced — conv(substring(md5(x),1,N),16,10)
@@ -27,8 +28,7 @@ class Md5HashesSpec extends SparkSpec {
     }
 
   test("md5_prefix_long / md5_prefix_longs equal the conv-substring form") {
-    graft.expressions.Md5PrefixLong.register(spark)
-    graft.expressions.Md5PrefixLongs.register(spark)
+    Registration.install(spark)
     val rnd = new scala.util.Random(11)
     import spark.implicits._
     val rows = Seq.tabulate(400) { k =>
@@ -62,7 +62,7 @@ class Md5HashesSpec extends SparkSpec {
   }
 
   test("ngram_md5_longs equals the sequence/concat/md5 form (n=2,3; nHex=8,15)") {
-    graft.expressions.NgramMd5Longs.register(spark)
+    Registration.install(spark)
     val rnd = new scala.util.Random(13)
     import spark.implicits._
     for ((n, nHex) <- Seq((2, 15), (3, 8))) {
@@ -90,7 +90,7 @@ class Md5HashesSpec extends SparkSpec {
   }
 
   test("minhash_sig equals explode + hash32 + 8-permutation min groupBy") {
-    graft.expressions.MinHashSig.register(spark)
+    Registration.install(spark)
     val rnd = new scala.util.Random(17)
     import spark.implicits._
     val rows = Seq.tabulate(300) { k =>

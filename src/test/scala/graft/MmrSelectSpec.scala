@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjectio
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
-import graft.expressions.{MmrSelect, OptimizerBarrier}
+import graft.expressions.{MmrSelect, OptimizerBarrier, Registration}
 import graft.operators.InvertedTextIndex
 import graft.queries.RetrievalQueries
 
@@ -58,7 +58,7 @@ class MmrSelectSpec extends SparkSpec {
         "'rem', transform(slice(cs, 2, size(cs) - 1), " +
         "c -> named_struct('doc_id', c.doc_id, 'rel_bp', c.rel_bp, " +
         "'tset', c.tset)))"))
-    OptimizerBarrier.register(spark)
+    Registration.install(spark)
     for (t <- 2 to topK)
       st = st.withColumn("st", expr(s"opt_barrier(${roundSql(t)})"))
     st.select(col("q_doc"), explode(col("st.sel")).as("s"))
@@ -73,7 +73,7 @@ class MmrSelectSpec extends SparkSpec {
         col("rel_bp"), col("tset")))).as("cs"))
 
   private def kernelSelect(g: DataFrame, topK: Int): DataFrame = {
-    MmrSelect.register(spark)
+    Registration.install(spark)
     g.select(col("q_doc"), explode(call_function("mmr_select", col("cs"),
         lit(topK), lit(RetrievalQueries.MmrLambdaMilli))).as("s"))
       .select(col("q_doc"), col("s.pick"), col("s.doc_id"), col("s.rel_bp"),
@@ -142,6 +142,7 @@ class MmrSelectSpec extends SparkSpec {
   }
 
   test("mmrFold equals the HOF fold on 240 seeded candidate sets, topK 1 to 6") {
+    Registration.install(spark)
     val sets = randomSets(7, 240, nullTsets = false)
     assert(sets.count(_.size == 1) >= 20 && sets.count(_.size < RetrievalQueries.TopK) >= 60)
     assert(sets.exists(_.exists(c => c._4.distinct.size < c._4.size)))
@@ -154,6 +155,7 @@ class MmrSelectSpec extends SparkSpec {
   }
 
   test("null token sets follow the fold under ANSI and under the legacy setting") {
+    Registration.install(spark)
     for (ansi <- Seq(true, false)) withAnsi(ansi) {
       val cands = candFrame(randomSets(11, 200, nullTsets = true))
       assertSameRows(rows(RetrievalQueries.mmrFold(cands, RetrievalQueries.TopK)),
@@ -162,6 +164,7 @@ class MmrSelectSpec extends SparkSpec {
   }
 
   test("ties in v go to the lower doc_id, equal rel_bp included") {
+    Registration.install(spark)
     // docs 9, 4 and 6 have the same rel_bp and token set: once 1 is
     // picked they tie in v, and the lower doc_id goes first
     val ts = Seq[java.lang.Long](1L, 2L, 3L)
@@ -186,6 +189,7 @@ class MmrSelectSpec extends SparkSpec {
   }
 
   test("two empty token sets: the fold's zero denominator, under either ANSI setting") {
+    Registration.install(spark)
     val empty = Seq.empty[java.lang.Long]
     val cands = candFrame(Seq(Seq(
       (1L, java.lang.Long.valueOf(3L), java.lang.Long.valueOf(10000L), empty),

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
-import graft.expressions.NearestCentroid
+import graft.expressions.{NearestCentroid, Registration}
 import graft.operators.AnnIvfIndex
 
 /** Pins the `nearest_centroid` kernel against the join form of the IVF
@@ -37,10 +37,12 @@ class NearestCentroidSpec extends SparkSpec {
         (-col("cell")).as("negCell"))).as("best"))
       .select(col("vec_id"), (-col("best.negCell")).as("cell"))
 
-  private def viaKernel(vecs: DataFrame, cent: DataFrame): DataFrame =
-    vecs.select(col("vec_id"), NearestCentroid.assign(spark, col("u"),
+  private def viaKernel(vecs: DataFrame, cent: DataFrame): DataFrame = {
+    Registration.install(spark)
+    vecs.select(col("vec_id"), NearestCentroid.assign(col("u"),
         NearestCentroid.collect(cent)).as("cell"))
       .filter(col("cell").isNotNull)
+  }
 
   /** Centroid frame rows from per-cell mean vectors, cnormsq = Σ cbarq². */
   private def centFrame(cents: Seq[(Long, Array[Long])]): DataFrame =
@@ -102,7 +104,7 @@ class NearestCentroidSpec extends SparkSpec {
     // an empty or null vector has no cell
     val none = Seq((1L, Array.empty[Long]), (2L, null.asInstanceOf[Array[Long]]))
       .toDF("vec_id", "u")
-      .select(NearestCentroid.assign(spark, col("u"),
+      .select(NearestCentroid.assign(col("u"),
         NearestCentroid.collect(centFrame(cents))))
       .collect()
     assert(none.forall(_.isNullAt(0)))
@@ -129,7 +131,7 @@ class NearestCentroidSpec extends SparkSpec {
   }
 
   test("non-foldable centroid arguments are rejected") {
-    NearestCentroid.register(spark)
+    Registration.install(spark)
     val vecs = Seq((1L, Array(1L, 2L))).toDF("vec_id", "u")
     val err = intercept[AnalysisException](vecs.select(
       expr("nearest_centroid(u, array(vec_id), array(u), array(vec_id))"))

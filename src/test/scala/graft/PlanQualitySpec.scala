@@ -1,5 +1,7 @@
 package graft
 
+import graft.expressions.Registration
+
 /** Plan-quality regression guards (PLANS.md): these lock in the
   * properties that matter at 100 TB — filter/column pushdown to the
   * scan, broadcast dimension joins, and no accidental cartesian /
@@ -57,7 +59,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("the native intersect expression runs inside codegen") {
-    graft.expressions.SortedLongIntersectCount.register(spark)
+    Registration.install(spark)
     // non-foldable input (literals would constant-fold to LocalTableScan)
     val df = spark.range(100)
       .selectExpr("sequence(0L, id % 10) AS a", "sequence(0L, 5L) AS b")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.RollingFingerprint
+import graft.expressions.{Registration, RollingFingerprint}
 import org.apache.spark.unsafe.types.UTF8String
 
 class RollingFingerprintSpec extends SparkSpec {
@@ -42,7 +42,7 @@ class RollingFingerprintSpec extends SparkSpec {
   }
 
   test("SQL surface works and stays inside whole-stage codegen") {
-    RollingFingerprint.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val local = Seq("the quick brown fox", "tiny", "abcdefghij").toDF("text")
       .select(expr("rolling_fingerprint(text, 8)").as("fp"))
@@ -59,7 +59,7 @@ class RollingFingerprintSpec extends SparkSpec {
   }
 
   test("non-constant / non-integral k raises a clear analysis error") {
-    RollingFingerprint.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val df = Seq(("abcdefghij", 4)).toDF("text", "n")
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.expressions.Registration
 
 /** Pins the fused sign-LSH signature expression against the literal
   * 1,024-term SQL form it replaced (r17): same ±1 plane matrix, same
@@ -23,7 +24,7 @@ class SignLshSigSpec extends SparkSpec {
     }.mkString("(", " + ", ")")
 
   test("fused expression equals the literal 1,024-term form") {
-    graft.expressions.SignLshSig.register(spark)
+    Registration.install(spark)
     val rnd = new scala.util.Random(7)
     import spark.implicits._
     val rows = Seq.tabulate(500) { k =>
@@ -41,7 +42,7 @@ class SignLshSigSpec extends SparkSpec {
   }
 
   test("short and null arrays are total") {
-    graft.expressions.SignLshSig.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val rows = Seq(
       (1L, Array(5L, -3L)),           // shorter than Dim

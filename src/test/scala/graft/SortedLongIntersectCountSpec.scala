@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.SortedLongIntersectCount
+import graft.expressions.Registration
 
 class SortedLongIntersectCountSpec extends SparkSpec {
 
   private def count(a: Seq[Long], b: Seq[Long]): Long = {
-    SortedLongIntersectCount.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     Seq((a, b)).toDF("a", "b")
       .select(expr("sorted_long_intersect_count(a, b)").as("c"))
@@ -30,7 +30,7 @@ class SortedLongIntersectCountSpec extends SparkSpec {
   }
 
   test("matches array_intersect semantics on random sorted sets") {
-    SortedLongIntersectCount.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val rows = (1 to 200).map { _ =>

@@ -10,6 +10,7 @@ class StreamBenchSpec extends SparkSpec {
   test("stream bench: all events flow once, multi-trigger, RocksDB state") {
     val before = spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass")
+    val confBefore = spark.conf.getAll
     val r = StreamBench.run(spark, sf0001,
       workDir = "/tmp/graft_stream_bench_spec",
       stageFiles = 6, filesPerTrigger = 1)
@@ -25,6 +26,11 @@ class StreamBenchSpec extends SparkSpec {
     assert(spark.conf.getOption(
       "spark.sql.streaming.stateStore.providerClass") == before,
       "StreamBench leaked the state-store provider conf")
+    // nor write Spark's defaults back as explicit settings
+    val confAfter = spark.conf.getAll
+    val changed = (confAfter.toSet diff confBefore.toSet) ++
+      (confBefore.toSet diff confAfter.toSet)
+    assert(changed.isEmpty, s"session conf changed: $changed")
   }
 
   test("knee search steps offered load and stops at the first break") {

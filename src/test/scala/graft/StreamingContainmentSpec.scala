@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingContainment
 import graft.streaming.StreamingContainment.{ContainPair, Doc}
+import graft.expressions.Registration
 
 /** Streaming containment gate: the probe kernel is bit-identical to the
   * batch q168 constants, a quote-and-extend pair is surfaced on the
@@ -21,7 +22,7 @@ class StreamingContainmentSpec extends SparkSpec {
     (0 until n).map(i => s"w${seed}x$i").mkString(" ")
 
   test("hash32 / trigram kernel matches the batch engine expressions") {
-    graft.expressions.OptimizerBarrier.register(spark)
+    Registration.install(spark)
     import spark.implicits._
     val texts = Seq("alpha beta gamma delta", "one two three")
     val df = texts.toDF("text")

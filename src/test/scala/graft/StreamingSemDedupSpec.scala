@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingSemDedup
 import graft.streaming.StreamingSemDedup.{SemDupPair, Vec}
+import graft.expressions.Registration
 
 /** Streaming semantic-dedup gate: the signature kernel is bit-identical
   * to the deployed batch cell grid, the streamed emissions over a real
@@ -22,7 +23,7 @@ class StreamingSemDedupSpec extends SparkSpec {
       .sortBy(_._1)
 
   test("signature & cell agree with the batch grid kernel for every corpus vector") {
-    graft.expressions.OptimizerBarrier.register(spark)
+    Registration.install(spark)
     val emb = Tables.embeddings(spark, sf0001)
     val batchCells = graft.queries.VectorQueries
       .withCells(emb, graft.queries.VectorQueries.gridCapRow(emb))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.TokenWindowHashes
+import graft.expressions.Registration
 
 /** Native sliding-window token hasher (the q115 exact-substring
   * candidate generator): rolling update == direct fold, window count,
@@ -20,7 +20,7 @@ class TokenWindowHashesSpec extends SparkSpec {
 
   test("rolling hashes equal the direct fold at every position") {
     import spark.implicits._
-    TokenWindowHashes.register(spark)
+    Registration.install(spark)
     val tokens = (0 until 200).map(i => s"w${i % 37}x${(i * 7) % 11}")
     val k = 50
     val got = Seq(tokens).toDF("w")
@@ -34,7 +34,7 @@ class TokenWindowHashesSpec extends SparkSpec {
 
   test("fewer than k tokens -> empty array; null -> null; empty token -> 0 hash") {
     import spark.implicits._
-    TokenWindowHashes.register(spark)
+    Registration.install(spark)
     val df = Seq(
       (1, Seq("a", "b")), // < k
       (2, Seq("", "", "")) // empty tokens, k=3 window of zeros
