@@ -356,6 +356,13 @@ object Bench {
       s""""budget_s":$budgetS,"bench_elapsed_s":${fmt2(elapsedS)},"passes":${passes.size},"skipped":$skippedArr"""
     val streamPart =
       s""""flagship_events_per_sec":${"%.0f".format(flagshipEps)},"flagship_isolated_eps":${"%.0f".format(flagshipIsolatedEps)},$ratioPart,"stream_eps":${"%.0f".format(stream.epsSustained)},"stream_p50_ms":${stream.p50Ms},"stream_p99_ms":${stream.p99Ms},"stream_batches":${stream.batches},"stream_knee_eps":${"%.0f".format(knee.kneeEps)},"stream_knee_p50_ms":${knee.kneeP50Ms},"stream_knee_files":${knee.kneeStageFiles},"stream_knee_bracketed":${knee.bracketed},"stream_knee_reliable":$isKneeReliable,$budgetPart,"stream_sweep":$sweepJson"""
+    // where the primary run's trigger goes (detail only: the stdout line
+    // has a capture window)
+    val streamSplitJson =
+      s"""{"latest_offset":${stream.latestOffsetP50Ms},"wal_commit":${
+        stream.walCommitP50Ms},"add_batch":${stream.addBatchP50Ms},""" +
+        s""""commit_offsets":${stream.commitOffsetsP50Ms},"state_commit":${
+          stream.stateCommitP50Ms}}"""
     val costJson = results.keys.toSeq.sorted.map { k =>
       "\"" + short(k) + "\":" + passes.flatMap(_(k)).minBy(_.wallS).json
     }.mkString("{", ",", "}")
@@ -363,7 +370,7 @@ object Bench {
     // target/bench_last.json and, for a recorded run, BENCH_DETAIL.json,
     // and printed first (its tail may be cut by the capture window; the
     // files never are).
-    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"cost":$costJson,"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"sf":"$sfName"}"""
+    val detail = s"""{"metric":"total","value":${fmt2(totalMin)},"unit":"sec","total_med":${fmt2(totalMed)},"queries":${qmap(_ => true, _._1)},"queries_med":${qmap(_ => true, _._2)},"cost":$costJson,"failed":$failedArr,$streamPart,"stream_knee_steps":$kneeStepsJson,"stream_trigger_p50_ms":$streamSplitJson,"sf":"$sfName"}"""
     val record = writesRecord(filtered, sfName)
     for (p <- "target/bench_last.json" +: Option.when(record)("BENCH_DETAIL.json").toSeq)
       try java.nio.file.Files.writeString(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.streaming.LocalCheckpointFiles
 
 /** The one session builder, table reset, directory delete and scoped
   * conf setting every main and spec starts from. */
@@ -10,7 +11,11 @@ object GraftSession {
     * shuffle partition per core, UTC, no UI and WARN logging.
     * `nanosAsLong` only matters for the TIMESTAMP(NANOS) generation of
     * `events.parquet`; `Tables.events` normalizes every variant to LONG
-    * epoch-nanos (EventTsNormalizeSpec). */
+    * epoch-nanos (EventTsNormalizeSpec). Checkpoint files go through
+    * [[LocalCheckpointFiles]], which starts no process per file. The
+    * generated-class cache holds 4096 classes, not Spark's 100: one pass
+    * of 130 queries at sf0.001 compiles ~2,500 distinct classes, so at
+    * 100 (or 512) every later pass compiled them all again. */
   def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       : SparkSession.Builder =
     SparkSession.builder()
@@ -20,6 +25,8 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
+      .config(LocalCheckpointFiles.ConfKey, classOf[LocalCheckpointFiles].getName)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** `DROP TABLE IF EXISTS` each name, then delete whatever is left at
     * its default location: an in-memory catalog forgets its tables

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 import graft.model.AudioChunk
 import graft.streaming.SessionProcessor
 
@@ -56,7 +56,16 @@ object StreamBench {
       epsSustained: Double, // rows / Σ triggerExecution — steady-state
       epsWall: Double, // rows / wall — includes stream startup
       p50Ms: Long,
-      p99Ms: Long)
+      p99Ms: Long,
+      // the trigger's parts, p50 over the same triggers: Spark's
+      // `durationMs` entries, and the first state operator's
+      // `commitTimeMs` (summed over its partitions, so it may exceed
+      // `addBatch`, which runs them in parallel)
+      latestOffsetP50Ms: Long = 0L,
+      walCommitP50Ms: Long = 0L,
+      addBatchP50Ms: Long = 0L,
+      commitOffsetsP50Ms: Long = 0L,
+      stateCommitP50Ms: Long = 0L)
 
   /** Operating-point sweep (VERDICT r8 #4): the 4× amortization proof
     * says per-trigger cost is fixed overhead, so the (eps, p50, p99)
@@ -315,9 +324,11 @@ object StreamBench {
 
     val progress = query.recentProgress.toSeq
       .filter(_.numInputRows > 0) // AvailableNow appends an empty closer
-    val durs = progress
-      .map(p => p.durationMs.getOrDefault("triggerExecution", 0L).toLong)
-      .sorted.toIndexedSeq
+    def p50(f: StreamingQueryProgress => Long): Long =
+      pct(progress.map(f).sorted.toIndexedSeq, 0.50)
+    def part(k: String)(p: StreamingQueryProgress): Long =
+      p.durationMs.getOrDefault(k, 0L).longValue
+    val durs = progress.map(part("triggerExecution")).sorted.toIndexedSeq
     val rows = progress.map(_.numInputRows).sum
     val sumSec = durs.sum / 1e3
     Result(
@@ -328,6 +339,12 @@ object StreamBench {
       epsSustained = if (sumSec > 0) rows / sumSec else 0.0,
       epsWall = if (wall > 0) rows / wall else 0.0,
       p50Ms = pct(durs, 0.50),
-      p99Ms = pct(durs, 0.99))
+      p99Ms = pct(durs, 0.99),
+      latestOffsetP50Ms = p50(part("latestOffset")),
+      walCommitP50Ms = p50(part("walCommit")),
+      addBatchP50Ms = p50(part("addBatch")),
+      commitOffsetsP50Ms = p50(part("commitOffsets")),
+      stateCommitP50Ms =
+        p50(_.stateOperators.headOption.fold(0L)(_.commitTimeMs)))
   }
 }

@@ -87,6 +87,7 @@ object BandedGate {
       maxPerKey: Int, stateTtlMs: Long)(
       implicit stateEnc: Encoder[List[S]], outEnc: Encoder[O]): Dataset[O] = {
     import rows.sparkSession.implicits._
+    LocalCheckpointFiles.install(rows.sparkSession)
     val timeout =
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()

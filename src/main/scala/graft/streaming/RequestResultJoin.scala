@@ -29,23 +29,10 @@ object RequestResultJoin {
   /** Correlated (job_id, req_ms, res_ms, payload, latency_ms) rows. */
   def attach(requests: Dataset[Request], results: Dataset[Result],
       resultWindow: String = "30 seconds",
-      maxDelay: String = "10 seconds"): DataFrame = {
-    val req = requests.toDF()
-      .select(col("jobId").as("job_id"), col("tsMs").as("req_ms"))
-      .withColumn("req_time", timestamp_millis(col("req_ms")))
-      .withWatermark("req_time", maxDelay)
-    val res = results.toDF()
-      .select(col("jobId").as("r_job_id"), col("tsMs").as("res_ms"),
-        col("payload"))
-      .withColumn("res_time", timestamp_millis(col("res_ms")))
-      .withWatermark("res_time", maxDelay)
-    req.join(res,
-        col("job_id") === col("r_job_id") &&
-          col("res_time") >= col("req_time") &&
-          col("res_time") <= col("req_time") + expr(s"interval $resultWindow"))
+      maxDelay: String = "10 seconds"): DataFrame =
+    join(requests, results, resultWindow, maxDelay, "inner")
       .select(col("job_id"), col("req_ms"), col("res_ms"), col("payload"),
         (col("res_ms") - col("req_ms")).as("latency_ms"))
-  }
 
   /** The reference's poll does not silently drop an unanswered request —
     * it returns an explicit TIMEOUT result (`grpc_server/server.py:
@@ -61,7 +48,18 @@ object RequestResultJoin {
     * than the in-flight window. */
   def attachWithTimeouts(requests: Dataset[Request], results: Dataset[Result],
       resultWindow: String = "30 seconds",
-      maxDelay: String = "10 seconds"): DataFrame = {
+      maxDelay: String = "10 seconds"): DataFrame =
+    join(requests, results, resultWindow, maxDelay, "leftOuter")
+      .select(col("job_id"), col("req_ms"), col("res_ms"), col("payload"),
+        (col("res_ms") - col("req_ms")).as("latency_ms"),
+        when(col("res_ms").isNull, lit("TIMEOUT"))
+          .otherwise(lit("COMPLETED")).as("status"))
+
+  /** Both sides watermarked by `maxDelay`, joined on job id with the
+    * result inside `resultWindow` after its request. */
+  private def join(requests: Dataset[Request], results: Dataset[Result],
+      resultWindow: String, maxDelay: String, joinType: String): DataFrame = {
+    LocalCheckpointFiles.install(requests.sparkSession)
     val req = requests.toDF()
       .select(col("jobId").as("job_id"), col("tsMs").as("req_ms"))
       .withColumn("req_time", timestamp_millis(col("req_ms")))
@@ -72,13 +70,9 @@ object RequestResultJoin {
       .withColumn("res_time", timestamp_millis(col("res_ms")))
       .withWatermark("res_time", maxDelay)
     req.join(res,
-        col("job_id") === col("r_job_id") &&
-          col("res_time") >= col("req_time") &&
-          col("res_time") <= col("req_time") + expr(s"interval $resultWindow"),
-        "leftOuter")
-      .select(col("job_id"), col("req_ms"), col("res_ms"), col("payload"),
-        (col("res_ms") - col("req_ms")).as("latency_ms"),
-        when(col("res_ms").isNull, lit("TIMEOUT"))
-          .otherwise(lit("COMPLETED")).as("status"))
+      col("job_id") === col("r_job_id") &&
+        col("res_time") >= col("req_time") &&
+        col("res_time") <= col("req_time") + expr(s"interval $resultWindow"),
+      joinType)
   }
 }

@@ -285,6 +285,7 @@ object SessionProcessor {
       timeout: GroupStateTimeout)(
       arm: (GroupState[SessionLogic.State], Seq[AudioChunk]) => Unit)
       : Dataset[TranscriptEvent] = {
+    LocalCheckpointFiles.install(chunks.sparkSession)
     implicit val stateEnc = Encoders.kryo[SessionLogic.State]
     implicit val outEnc = Encoders.product[TranscriptEvent]
     chunks.groupBy(col("sessionId"))

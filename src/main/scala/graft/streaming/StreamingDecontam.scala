@@ -114,6 +114,7 @@ object StreamingDecontam {
       queryName: String = "decontam-gate",
       evalStrs: Option[DataFrame] = None)(
       emit: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalCheckpointFiles.install(docs.sparkSession)
     val grams = evalGrams.persist()
     grams.count() // materialize before the first batch needs it
     val strs = evalStrs.map { s => val p = s.persist(); p.count(); p }

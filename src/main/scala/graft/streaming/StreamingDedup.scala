@@ -29,11 +29,13 @@ object StreamingDedup {
   final case class Doc(docId: Long, tsMs: Long, text: String)
 
   /** Admitted documents with their fingerprint, within-horizon-unique. */
-  def attach(docs: Dataset[Doc], horizon: String = "10 minutes"): DataFrame =
+  def attach(docs: Dataset[Doc], horizon: String = "10 minutes"): DataFrame = {
+    LocalCheckpointFiles.install(docs.sparkSession)
     docs
       .withColumn("event_time", timestamp_millis(col("tsMs")))
       .withColumn("fp", md5(col("text").cast("binary")))
       .withWatermark("event_time", horizon)
       .dropDuplicatesWithinWatermark("fp")
       .select(col("docId").as("doc_id"), col("event_time"), col("fp"))
+  }
 }

@@ -32,6 +32,7 @@ object StreamingEnrich {
   final case class EnrichState(lastTUs: Long, lastVal: Double, has: Boolean)
 
   def attach(ticks: Dataset[Tick]): Dataset[Enriched] = {
+    LocalCheckpointFiles.install(ticks.sparkSession)
     implicit val stateEnc = Encoders.product[EnrichState]
     implicit val outEnc = Encoders.product[Enriched]
     ticks.groupByKey(_.key)(Encoders.scalaLong)

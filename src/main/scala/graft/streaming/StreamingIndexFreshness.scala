@@ -260,6 +260,7 @@ object StreamingIndexFreshness {
       checkpointDir: Option[String] = None,
       queryName: String = "index-freshness-gate"): StreamingQuery = {
     val owner = docs.sparkSession
+    LocalCheckpointFiles.install(owner)
     init(owner, textTable)
     val writer = docs.writeStream
       .queryName(queryName)

@@ -100,6 +100,7 @@ object StreamingSelection {
       checkpointDir: Option[String] = None,
       queryName: String = "selection-gate")(
       emit: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalCheckpointFiles.install(docs.sparkSession)
     m.grams.count() // materialize the artifact before the first batch
     val writer = docs.writeStream
       .queryName(queryName)
