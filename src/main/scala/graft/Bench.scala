@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.observability.JobWatch
@@ -40,15 +42,11 @@ object Bench {
     * None when fewer than `minCommon` queries overlap — a ratio from a
     * thin common set (suite renamed, wrong sf) would mislead. */
   def medianRatio(run: Map[String, Double], ref: Map[String, Double],
-      floorSec: Double = 0.05, minCommon: Int = 20): Option[Double] = {
-    val ratios = run.toSeq.flatMap { case (k, v) =>
-      ref.get(k).filter(r => r > floorSec && v > floorSec).map(v / _)
-    }.sorted
-    if (ratios.size < minCommon) None
-    else Some(
-      if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-      else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2)
-  }
+      floorSec: Double = 0.05, minCommon: Int = 20): Option[Double] =
+    ratios(run, ref, floorSec, minCommon).map { r =>
+      if (r.size % 2 == 1) r(r.size / 2)
+      else (r(r.size / 2 - 1) + r(r.size / 2)) / 2
+    }
 
   /** (p25, p75) of the same per-query ratio vector (nearest-rank, the
     * StreamBench quantile convention) — VERDICT r15 #3: the median
@@ -62,13 +60,17 @@ object Bench {
     * the per-query detail before concluding anything. */
   def ratioQuartiles(run: Map[String, Double], ref: Map[String, Double],
       floorSec: Double = 0.05, minCommon: Int = 20)
-      : Option[(Double, Double)] = {
-    val ratios = run.toSeq.flatMap { case (k, v) =>
+      : Option[(Double, Double)] =
+    ratios(run, ref, floorSec, minCommon)
+      .map(r => (StreamBench.pct(r, 0.25), StreamBench.pct(r, 0.75)))
+
+  /** The ascending run/ref time ratios of the queries both maps hold
+    * above `floorSec`; None when fewer than `minCommon` remain. */
+  private def ratios(run: Map[String, Double], ref: Map[String, Double],
+      floorSec: Double, minCommon: Int): Option[IndexedSeq[Double]] =
+    Some(run.toIndexedSeq.flatMap { case (k, v) =>
       ref.get(k).filter(r => r > floorSec && v > floorSec).map(v / _)
-    }.sorted.toIndexedSeq
-    if (ratios.size < minCommon) None
-    else Some((StreamBench.pct(ratios, 0.25), StreamBench.pct(ratios, 0.75)))
-  }
+    }.sorted).filter(_.size >= minCommon)
 
   /** Per-query (min, lowerMedian) over however many timing passes the
     * wall-clock budget allowed (VERDICT r16 #1). With the full three
@@ -206,7 +208,7 @@ object Bench {
       passes.toSeq.map(_.map { case (k, c) => k -> c.fold(-1.0)(_.wallS) }))
     val (failed, results) = perQuery.partition(_._2._1 < 0)
     watch.close()
-    def fmt2(v: Double): String = "%.2f".format(v)
+    def fmt2(v: Double): String = "%.2f".formatLocal(Locale.ROOT, v)
     // qNN short keys (full names in SURVEY.md §2.12 / Verify output).
     def short(k: String): String = k.takeWhile(_ != '_')
     val totalMin = results.values.map(_._1).sum

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -287,7 +289,7 @@ object ServeMain {
         s""""$k":{"p50_ms":$p50,"max_ms":$mx}"""
       }.mkString("{", ",", "}")
       s"""{"n":${c.n},"requests":${c.requests},"wall_ms":${c.wallMs},""" +
-        s""""qps":${"%.1f".format(c.qps)},"p50_ms":${c.p50Ms},""" +
+        s""""qps":${"%.1f".formatLocal(Locale.ROOT, c.qps)},"p50_ms":${c.p50Ms},""" +
         s""""max_ms":${c.maxMs},"legs":$legs}"""
     }.mkString("[", ",", "]")
 }

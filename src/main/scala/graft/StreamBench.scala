@@ -20,7 +20,7 @@ import graft.streaming.SessionProcessor
   * maxFilesPerTrigger` micro-batches — enough triggers for a p50/p99,
   * each one a real state-store round trip. State rides the RocksDB
   * provider (the 100 TB production choice; rocksdbjni ships with
-  * Spark) unless `useRocksDb = false`.
+  * Spark).
   *
   * Scale note: the plan is ONE shuffle (groupByKey on sessionId) into
   * state-store-partitioned tasks; throughput scales with shuffle
@@ -179,23 +179,14 @@ object StreamBench {
     var runCost = 0.0
     var exhausted = false
     def measure(files: Int): KneeStep = {
-      val runs = scala.collection.mutable.ArrayBuffer.empty[Result]
-      var i = 1
-      // First run of a step is unconditional (the step-level gate
-      // already approved it); runs 2..N are each budget-checked.
-      while (i <= runsPerStep &&
-          (runs.isEmpty || fits(deadlineNs, runCost))) {
-        val t0 = System.nanoTime()
-        runs += run(spark, sfDir, workDir = s"${workDir}_f${files}_r$i",
-          stageFiles = files, filesPerTrigger = 1)
-        runCost = (System.nanoTime() - t0) / 1e9
-        i += 1
-      }
-      if (runs.size < runsPerStep) exhausted = true
-      // lower median: with a full complement this is the median-of-N
-      // discipline; with a budget-truncated step it degrades to the
-      // median of what was measured (never best-of).
-      val med = runs.sortBy(_.epsSustained).apply((runs.size - 1) / 2)
+      // the step-level gate already approved the first run
+      val (med, made, lastCost) =
+        budgetedMedian(runsPerStep, deadlineNs) { i =>
+          run(spark, sfDir, workDir = s"${workDir}_f${files}_r$i",
+            stageFiles = files, filesPerTrigger = 1)
+        }
+      runCost = lastCost
+      if (made < runsPerStep) exhausted = true
       val st = KneeStep(files, med)
       steps += st
       st
@@ -241,22 +232,28 @@ object StreamBench {
     * not a best-of that a re-run can't match. */
   def runMedian3(spark: SparkSession, sfDir: String,
       workDir: String = "/tmp/graft_stream_bench",
-      deadlineNs: Long = Long.MaxValue): Result = {
-    // Budget path (VERDICT r16 #1): the first run is unconditional
-    // (the caller gates entering the phase); runs 2-3 happen only if
-    // the measured cost of the previous run still fits the deadline.
-    // Lower median of what was measured — identical to the original
-    // median-of-3 when nothing is skipped.
+      deadlineNs: Long = Long.MaxValue): Result =
+    // the caller gates entering the phase (VERDICT r16 #1)
+    budgetedMedian(3, deadlineNs)(i =>
+      run(spark, sfDir, workDir = s"${workDir}_m$i"))._1
+
+  /** Up to `n` runs of `one(i)`, i from 1: the first always, each later
+    * one only while the previous run's wall still [[fits]] before
+    * `deadlineNs`. Keeps the LOWER median by sustained eps — the
+    * median-of-n with a full complement, the median of what was
+    * measured when the budget cut runs (never a best-of). Returns it
+    * with the number of runs made and the last run's wall seconds. */
+  private def budgetedMedian(n: Int, deadlineNs: Long)(
+      one: Int => Result): (Result, Int, Double) = {
     val runs = scala.collection.mutable.ArrayBuffer.empty[Result]
     var cost = 0.0
-    var i = 1
-    while (i <= 3 && (runs.isEmpty || fits(deadlineNs, cost))) {
+    while (runs.size < n && (runs.isEmpty || fits(deadlineNs, cost))) {
       val t0 = System.nanoTime()
-      runs += run(spark, sfDir, workDir = s"${workDir}_m$i")
+      runs += one(runs.size + 1)
       cost = (System.nanoTime() - t0) / 1e9
-      i += 1
     }
-    runs.sortBy(_.epsSustained).apply((runs.size - 1) / 2)
+    (runs.sortBy(_.epsSustained).apply((runs.size - 1) / 2), runs.size,
+      cost)
   }
 
   /** Default = the BULK operating point (VERDICT r13 #8, re-picked
@@ -275,7 +272,6 @@ object StreamBench {
       workDir: String = "/tmp/graft_stream_bench",
       stageFiles: Int = 32,
       filesPerTrigger: Int = 2,
-      useRocksDb: Boolean = true,
       shufflePartitions: Option[Int] = Some(4),
       changelogCheckpoint: Boolean = true): Result = {
     GraftSession.delete(spark, new Path(workDir))
@@ -295,7 +291,7 @@ object StreamBench {
     val settings = Seq(
       Some("spark.sql.streaming.numRecentProgressUpdates" ->
         math.max(1000, stageFiles * 2).toString),
-      Option.when(useRocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+      Some("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"),
       shufflePartitions.map(p => "spark.sql.shuffle.partitions" -> p.toString),
       Option.when(changelogCheckpoint)(

@@ -1,5 +1,6 @@
 package graft.observability
 
+import java.util.Locale
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -137,7 +138,7 @@ object JobWatch {
       .map(_.replaceAll("([A-Z])", "_$1").toLowerCase).zip(productIterator).toSeq
 
     def json: String = fields.map {
-      case (k, v: Double) => "\"%s\":%.3f".format(k, v)
+      case (k, v: Double) => "\"%s\":%.3f".formatLocal(Locale.ROOT, k, v)
       case (k, v) => s""""$k":$v"""
     }.mkString("{", ",", "}")
   }

@@ -254,18 +254,18 @@ object AnnIvfIndex {
       .select(col("q_id"), col("cell"))
     // the ONE driver-side step: the probe plan runs ONCE, its collected
     // rows (≤ MaxQueries·nprobe (q_id, cell) pairs) feed BOTH the
-    // literal In-filter that bucket-prunes the corpus scan AND — as a
+    // key list that bucket-prunes the corpus scan AND — as a
     // local relation — the candidate join's probe side, so the
     // latency-sensitive serving path never re-executes the probe
     // scoring subplan
     val Materialize.Local(probeRows, probesLocal) = Materialize.local(
       probes, "ann.probes", InvertedTextIndex.MaxQueries * nprobe)
-    val probedCells = probeRows.map(_.getLong(1)).distinct
     val qPayload = queries
       .select(col("q_id"), col("embedding").as("q_emb"),
         norm(col("embedding")).as("q_nrm"))
-    val corpus = s.table(table)
-      .filter(col("cell").isin(probedCells: _*))
+    val corpus = BucketedSnapshot.prune(s.table(table), "cell",
+        probeRows.map(_.getLong(1)).distinct, probesLocal,
+        BucketedSnapshot.MaxInList)
       .select(col("vec_id").as("c_id"), col("cell"),
         col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
     corpus

@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * no exchange, and a key filter prunes to the touched buckets. This
   * object owns that layout decision — sizing, the deployed count read
   * back from the catalog, the bucketed write, the rows-per-bucket
-  * audit, compaction, and the bucketed-scan pin for eager lookups —
-  * so each index keeps only how it derives its rows and how it
-  * answers. Appends land as new files in the same buckets (the rolling
-  * retention the reference's queue applies to its stream,
-  * src/queue/redis_queue.py:124-130, applied to an index). */
+  * audit, compaction, and the key-list narrowing every index read
+  * makes ([[prune]]) — so each index keeps only how it derives its
+  * rows and how it answers. Appends land as new files in the same
+  * buckets (the rolling retention the reference's queue applies to its
+  * stream, src/queue/redis_queue.py:124-130, applied to an index). */
 object BucketedSnapshot {
 
   /** Bucket count for `rows` rows at ≤ `rowsPerBucket` each: floor 8,
@@ -69,50 +69,32 @@ object BucketedSnapshot {
           .as("rebucket_due"))
   }
 
-  private val AutoBucketedScan =
-    "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+  /** Ceiling on the literal IN-list a collected key list may become.
+    * Below it, the `.isin` filter is what turns the bucketed+sorted
+    * layout into bucket- and rowgroup-pruned reads; above it the
+    * literal predicate itself degenerates (a multi-thousand-element In
+    * expression bloats the plan, codegen, and the parquet pushdown it
+    * exists to feed), so [[prune]] switches to a broadcast LEFT SEMI
+    * join on the key frame — same rows, no file pruning, still no
+    * index-side shuffle. The cutover is result-invariant (the index
+    * specs run both sides). */
+  private[graft] val MaxInList = 4096
 
-  /** Per-session pin holders: (callers inside, the value to restore). */
-  private val pins =
-    scala.collection.mutable.HashMap.empty[SparkSession, (Int, Option[String])]
-
-  /** Pin bucketed scans ON for an eagerly-executed lookup stage:
-    * Spark's DisableUnnecessaryBucketedScan drops bucketed reading for
-    * a filter-only subplan (nothing downstream wants the
-    * partitioning), which silently forfeits the BUCKET PRUNING the
-    * layout exists for — the In-filter would fall back to opening
-    * every bucket file. The toggle is SESSION-scoped (runtime SQLConf),
-    * so concurrent lookups on one session share one pin: the first
-    * caller in saves the prior value and sets the pin, the last caller
-    * out restores it, under one lock — overlapping callers never see
-    * the pin drop mid-lookup and never leak it into the session. A
-    * query running concurrently outside any lookup sees bucketed scans
-    * pinned on during the window (behavior, not results: the flag
-    * never changes answers). */
-  private[graft] def withBucketedScan[T](s: SparkSession)(f: => T): T = {
-    pins.synchronized {
-      pins(s) = pins.get(s) match {
-        case Some((n, prev)) => (n + 1, prev)
-        case None =>
-          // the explicitly set value, None when unset (getOption would
-          // report the default and restore it as an explicit setting)
-          val prev = s.conf.getAll.get(AutoBucketedScan)
-          s.conf.set(AutoBucketedScan, "false")
-          (1, prev)
-      }
-    }
-    try f finally pins.synchronized {
-      pins(s) match {
-        case (1, prev) =>
-          pins.remove(s)
-          prev match {
-            case Some(v) => s.conf.set(AutoBucketedScan, v)
-            case None => s.conf.unset(AutoBucketedScan)
-          }
-        case (n, prev) => pins(s) = (n - 1, prev)
-      }
-    }
-  }
+  /** Narrow a scan of index table `idx` to the driver-collected `keys`
+    * of its bucket column `keyCol`: a literal In-filter up to
+    * `maxInList` keys, a broadcast left-semi join on `keyFrame`'s
+    * `keyCol` (already driver-local) above that. The one narrowing
+    * decision of every index read. The In-filter prunes files by bucket
+    * id whether Spark plans the scan bucketed (a join or aggregate on
+    * the key above it) or not (a filter-only lookup, where
+    * `DisableUnnecessaryBucketedScan` drops the bucketed partitioning
+    * but keeps the selected buckets' files), so no session setting
+    * is needed for either. */
+  def prune(idx: DataFrame, keyCol: String, keys: Seq[Any],
+      keyFrame: DataFrame, maxInList: Int): DataFrame =
+    if (keys.size <= maxInList) idx.filter(col(keyCol).isin(keys: _*))
+    else idx.join(broadcast(keyFrame.select(col(keyCol)).distinct()),
+      Seq(keyCol), "left_semi")
 
   /** COMPACTION — the file-count half of index lifecycle (the audits'
     * `*_due` flags are the row-count half). Every append lands a

@@ -45,7 +45,7 @@ import graft.queries.RetrievalQueries
   * and the short-probe guard. */
 object FuzzyVocabIndex {
 
-  import BucketedSnapshot.withBucketedScan
+  import BucketedSnapshot.{MaxInList, prune}
 
   private def vocabTable(table: String): String = table + "_vocab"
 
@@ -162,7 +162,9 @@ object FuzzyVocabIndex {
     * deletion keys (they prune the key-table scan) and the key-join
     * survivors (the candidate pairs the exact-distance verify runs on
     * — they prune the vocab scan, whose df aggregation is then
-    * exchange-free under the w bucketing).
+    * exchange-free under the w bucketing). Both narrow through
+    * [[BucketedSnapshot.prune]]: an In-filter that opens only the
+    * keys' bucket files, a broadcast semi-join past `maxInList` keys.
     *
     * Guards, enforced here (not upstream prose): probe-side d2 keys
     * only for probes of length ≥ [[RetrievalQueries.MinD2Len]] (the
@@ -175,33 +177,23 @@ object FuzzyVocabIndex {
     * submitting several probes gets each probe's own best suggestion
     * (q188's one-probe-per-doc workload is the special case). */
   def search(probes: DataFrame, table: String, maxDist: Int = 1,
-      maxInList: Int = 4096): DataFrame = {
+      maxInList: Int = MaxInList): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,
       s"maxDist must be 1 or 2, got $maxDist")
     val s = probes.sparkSession
     val keysExpr = if (maxDist >= 2) RetrievalQueries.delKeys2Expr("probe")
       else RetrievalQueries.delKeysExpr("probe")
-    val Materialize.Local(pkRows, pkLocal) = withBucketedScan(s)(
-      Materialize.local(probes.select(col("q_doc"), col("probe"),
-        explode(expr(keysExpr)).as("k")), "fuzzy.probe_keys", MaxKeyRows))
-    val keyList = pkRows.map(_.getAs[String]("k")).distinct
-    val matchedKeys =
-      if (keyList.size <= maxInList)
-        s.table(keysTable(table)).filter(col("k").isin(keyList: _*))
-      else s.table(keysTable(table))
-        .join(broadcast(pkLocal.select(col("k")).distinct()), Seq("k"),
-          "left_semi")
-    val Materialize.Local(candRows, candLocal) = withBucketedScan(s)(
-      Materialize.local(matchedKeys.join(broadcast(pkLocal), "k")
+    val Materialize.Local(pkRows, pkLocal) = Materialize.local(
+      probes.select(col("q_doc"), col("probe"),
+        explode(expr(keysExpr)).as("k")), "fuzzy.probe_keys", MaxKeyRows)
+    val matchedKeys = prune(s.table(keysTable(table)), "k",
+      pkRows.map(_.getAs[String]("k")).distinct, pkLocal, maxInList)
+    val Materialize.Local(candRows, candLocal) = Materialize.local(
+      matchedKeys.join(broadcast(pkLocal), "k")
         .select(col("q_doc"), col("probe"), col("w")).distinct(),
-        "fuzzy.candidates", MaxCandidateRows))
-    val candWords = candRows.map(_.getAs[String]("w")).distinct
-    val prunedVocab =
-      if (candWords.size <= maxInList)
-        s.table(vocabTable(table)).filter(col("w").isin(candWords: _*))
-      else s.table(vocabTable(table))
-        .join(broadcast(candLocal.select(col("w")).distinct()), Seq("w"),
-          "left_semi")
+      "fuzzy.candidates", MaxCandidateRows)
+    val prunedVocab = prune(s.table(vocabTable(table)), "w",
+      candRows.map(_.getAs[String]("w")).distinct, candLocal, maxInList)
     // per-word df = SUM over the append slices' contributions
     val dfw = prunedVocab.groupBy(col("w")).agg(sum(col("df")).as("df"))
     val cand = candLocal.join(dfw, "w")

@@ -29,8 +29,9 @@ import graft.expressions.Registration
   * queried terms is counted over the pruned scan only — bucketing by wh
   * makes that groupBy exchange-free — and the driver-side term-hash
   * collection is bounded by the QUERY workload, never the corpus (the
-  * IN-list is what turns the bucketed layout into actual file pruning,
-  * `SelectedBucketsCount` in the scan). Between snapshot cuts the index
+  * IN-list is what turns the bucketed layout into actual file pruning:
+  * the scan opens only the selected buckets' files, whether Spark plans
+  * it bucketed or not). Between snapshot cuts the index
   * advances WITHOUT a rebuild: [[append]] writes new posting rows into
   * the same bucket layout, and [[layoutAudit]] trips the rebucket
   * trigger once rows-per-bucket exceed 2× the sizing target —
@@ -40,7 +41,7 @@ import graft.expressions.Registration
   */
 object InvertedTextIndex {
 
-  import BucketedSnapshot.withBucketedScan
+  import BucketedSnapshot.{MaxInList, prune}
 
   private def metaTable(table: String): String = table + "_meta"
 
@@ -197,17 +198,6 @@ object InvertedTextIndex {
       .drop("max_df", "n_docs")
   }
 
-  /** Ceiling on the literal IN-list the workload's distinct token
-    * hashes may become. Below it, the `.isin` filter is what turns the
-    * bucketed+sorted layout into bucket- and rowgroup-pruned reads;
-    * above it the literal predicate itself degenerates (a multi-
-    * thousand-element In expression bloats the plan, codegen, and the
-    * parquet pushdown it exists to feed), so the scan switches to a
-    * broadcast LEFT SEMI join on the workload's term frame — same
-    * rows, no file pruning, still zero corpus shuffle. The cutover is
-    * result-invariant (InvertedTextIndexSpec pins both sides). */
-  private[graft] val MaxInList = 4096
-
   /** Bounds of the query-side frames a serving call brings to the
     * driver (the serving indexes' requests are batches of query docs,
     * 16 in the serve benchmark and ≤ one per source in the retrieval
@@ -219,19 +209,6 @@ object InvertedTextIndex {
   private[graft] val MaxQueries = 1024
   private[graft] val MaxDocTokens = 256
 
-  /** Prune an index-table scan to the workload's token hashes:
-    * literal In-filter under [[MaxInList]], broadcast semi-join on the
-    * (already driver-local) term frame above it. */
-  private def pruneByWh(idx: DataFrame, whList: Seq[Long],
-      whFrame: DataFrame, maxInList: Int): DataFrame =
-    pruneByKey(idx, "wh", whList, whFrame, maxInList)
-
-  private def pruneByKey(idx: DataFrame, keyCol: String, keys: Seq[Long],
-      keyFrame: DataFrame, maxInList: Int): DataFrame =
-    if (keys.size <= maxInList) idx.filter(col(keyCol).isin(keys: _*))
-    else idx.join(broadcast(keyFrame.select(col(keyCol)).distinct()),
-      Seq(keyCol), "left_semi")
-
   /** Top-k keyword search against the prebuilt index. `queries` must
     * have `q_doc` and `text`; output is q180's frame (q_doc, rk,
     * doc_id, n_hit, score) — rank-for-rank identical when `queries`
@@ -240,14 +217,15 @@ object InvertedTextIndex {
     * The ONE driver-side step is collecting the query docs' distinct
     * (q_doc, token-hash) rows — at most [[MaxQueries]]·[[MaxDocTokens]],
     * never the corpus. The collected rows serve three masters at
-    * once: the scan's IN-list (what lets the
-    * bucketed+sorted layout prune buckets and row groups instead of
-    * streaming every posting — the ResultStore precedent: a bounded,
-    * documented collect at the serving seam), the [[MaxInList]] guard
-    * that swaps the literal filter for a broadcast semi-join when the
-    * workload outgrows a sane predicate, and the term frame itself as
-    * a LOCAL relation — so the query-side tokenization plan executes
-    * exactly once, never re-derived inside the candidate join.
+    * once: the scan's IN-list through [[BucketedSnapshot.prune]] (what
+    * lets the bucketed+sorted layout prune buckets and row groups
+    * instead of streaming every posting — the ResultStore precedent: a
+    * bounded, documented collect at the serving seam), the same call's
+    * [[BucketedSnapshot.MaxInList]] guard that swaps the literal filter
+    * for a broadcast semi-join when the workload outgrows a sane
+    * predicate, and the term frame itself as a LOCAL relation — so the
+    * query-side tokenization plan executes exactly once, never
+    * re-derived inside the candidate join.
     * df for each queried term is counted over the pruned scan — all
     * of a term's postings survive the wh filter, so the count is the
     * term's TRUE corpus df, append-stable by construction. */
@@ -270,7 +248,7 @@ object InvertedTextIndex {
       .distinct(), "inverted.query_terms", MaxQueries * MaxDocTokens)
     val whList = qtokRows.map(_.getAs[Long]("wh")).distinct
     def pruned(idx: DataFrame): DataFrame =
-      pruneByWh(idx, whList, qtok, maxInList)
+      prune(idx, "wh", whList, qtok, maxInList)
     val matched = pruned(s.table(table))
     val dfreq = matched.groupBy(col("wh")).agg(count(lit(1)).as("df"))
     val tw = Window.partitionBy(col("q_doc"))
@@ -355,7 +333,7 @@ object InvertedTextIndex {
     val whList = ptermRows.map(_.getAs[Long]("wh")).distinct
     val plen = pterms.groupBy(col("q_doc"))
       .agg(countDistinct(col("off")).as("plen"))
-    val matched = pruneByWh(s.table(posTable(table)), whList, pterms,
+    val matched = prune(s.table(posTable(table)), "wh", whList, pterms,
       maxInList)
     matched.join(broadcast(pterms), "wh")
       .select(col("q_doc"), col("doc_id"),
@@ -380,7 +358,7 @@ object InvertedTextIndex {
     * output on q185's workload (InvertedTextIndexSpec).
     *
     * Driver-side steps, each bounded over [[MaxQueries]] and each
-    * feeding IN-list pruning (guarded by [[MaxInList]]): the initial
+    * feeding [[BucketedSnapshot.prune]]: the initial
     * terms (·termsPerQuery), the pseudo-relevant hits (·prfDocs), the
     * harvested expansion candidates (·prfDocs·[[MaxDocTokens]]), and
     * the adopted expansions (·expTerms). Serving cost = the touched
@@ -399,19 +377,19 @@ object InvertedTextIndex {
     // second time when the pseudo-relevant hits are collected below
     val (_, terms, pruned) =
       searchPlan(queries, table, termsPerQuery, prfDocs, maxInList)
-    val Materialize.Local(termRows, termsLocal) = withBucketedScan(s)(
-      Materialize.local(terms, "prf.terms", MaxQueries * termsPerQuery))
+    val Materialize.Local(termRows, termsLocal) =
+      Materialize.local(terms, "prf.terms", MaxQueries * termsPerQuery)
     val prRanked = RetrievalQueries.rankTop(
       RetrievalQueries.scoreCandidates(
         pruned(s.table(table)).join(broadcast(termsLocal), "wh")
           .crossJoin(broadcast(stats(s, table)))),
       "rk", prfDocs)
-    val Materialize.Local(prRows, prLocal) = withBucketedScan(s)(
+    val Materialize.Local(prRows, prLocal) =
       Materialize.local(prRanked.select(col("q_doc"), col("doc_id")),
-        "prf.hits", MaxQueries * prfDocs))
+        "prf.hits", MaxQueries * prfDocs)
     val prIds = prRows.map(_.getAs[Long]("doc_id")).distinct
     // harvest: expansion candidates with their pseudo-relevant support
-    val fwdPruned = pruneByKey(s.table(fwdTable(table)), "doc_id", prIds,
+    val fwdPruned = prune(s.table(fwdTable(table)), "doc_id", prIds,
       prLocal, maxInList)
     val expCand = fwdPruned
       .select(col("doc_id"), explode(col("tset")).as("wh"))
@@ -420,13 +398,13 @@ object InvertedTextIndex {
       .agg(count(lit(1)).as("nd"))
       .join(termsLocal.select(col("q_doc"), col("wh")), Seq("q_doc", "wh"),
         "left_anti")
-    val Materialize.Local(candRows, candLocal) = withBucketedScan(s)(
+    val Materialize.Local(candRows, candLocal) =
       Materialize.local(expCand, "prf.candidates",
-        MaxQueries * prfDocs * MaxDocTokens))
+        MaxQueries * prfDocs * MaxDocTokens)
     val candWhs = candRows.map(_.getAs[Long]("wh")).distinct
     // candidate df over the pruned postings scan = the TRUE corpus df
     // (all of a term's postings survive the wh filter)
-    val dfreq2 = pruneByWh(s.table(table), candWhs, candLocal, maxInList)
+    val dfreq2 = prune(s.table(table), "wh", candWhs, candLocal, maxInList)
       .groupBy(col("wh")).agg(count(lit(1)).as("df"))
     val ew = Window.partitionBy(col("q_doc"))
       .orderBy(col("nd").desc, col("df").asc, col("wh").asc)
@@ -434,14 +412,14 @@ object InvertedTextIndex {
       .withColumn("ern", row_number().over(ew))
       .filter(col("ern") <= expTerms)
       .select(col("q_doc"), col("wh"), col("df"))
-    val Materialize.Local(expRows, expsLocal) = withBucketedScan(s)(
-      Materialize.local(exps, "prf.expansions", MaxQueries * expTerms))
+    val Materialize.Local(expRows, expsLocal) =
+      Materialize.local(exps, "prf.expansions", MaxQueries * expTerms)
     // re-score with the widened term set — q185's second round
     val allTerms = termsLocal.unionByName(expsLocal)
     val allWhs =
       (termRows.map(_.getAs[Long]("wh")) ++
         expRows.map(_.getAs[Long]("wh"))).distinct
-    val cands = pruneByWh(s.table(table), allWhs, allTerms, maxInList)
+    val cands = prune(s.table(table), "wh", allWhs, allTerms, maxInList)
       .join(broadcast(allTerms), "wh")
       .crossJoin(broadcast(stats(s, table)))
     RetrievalQueries.rankTop(RetrievalQueries.scoreCandidates(cands), "rk", k)
@@ -473,15 +451,15 @@ object InvertedTextIndex {
     val (ranked, _, _) =
       searchPlan(queries, table, termsPerQuery, fuseDepth, maxInList)
     val mw = Window.partitionBy(col("q_doc"))
-    val Materialize.Local(candRows, candsLocal) = withBucketedScan(s)(
+    val Materialize.Local(candRows, candsLocal) =
       Materialize.local(ranked
         .withColumn("maxs", max(col("score")).over(mw))
         .withColumn("rel_bp",
           expr("score div greatest(1L, maxs div 10000L)"))
         .select(col("q_doc"), col("rk"), col("doc_id"), col("rel_bp")),
-        "mmr.candidates", MaxQueries * fuseDepth))
+        "mmr.candidates", MaxQueries * fuseDepth)
     val candIds = candRows.map(_.getAs[Long]("doc_id")).distinct
-    val tsets = pruneByKey(s.table(fwdTable(table)), "doc_id", candIds,
+    val tsets = prune(s.table(fwdTable(table)), "doc_id", candIds,
         candsLocal, maxInList)
       .select(col("doc_id"), col("tset"))
     RetrievalQueries.mmrFold(candsLocal.join(broadcast(tsets), "doc_id"), k)

@@ -1,13 +1,13 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration._
-
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileScanRDD}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -16,7 +16,9 @@ import graft.operators._
   * bucket count, bucket columns and sort columns, after one build per
   * family and one append per family that has one. The expected literal
   * was recorded before the families' writes moved onto one shared
-  * core, so it pins that the move changed no table's layout. */
+  * core, so it pins that the move changed no table's layout. Also pins
+  * [[BucketedSnapshot.prune]]'s file pruning under default settings,
+  * and that no query or operator changes session conf to get it. */
 class BucketedSnapshotSpec extends SparkSpec {
 
   private val prefix = "bsnap_"
@@ -120,41 +122,58 @@ class BucketedSnapshotSpec extends SparkSpec {
     } finally cleanup()
   }
 
-  test("overlapping bucketed-scan pins on one session hold the pin and restore the prior value") {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val original = spark.conf.getAll.get(key)
-    def await(l: CountDownLatch): Unit =
-      assert(l.await(60, TimeUnit.SECONDS), "latch timed out")
-    try for (prior <- Seq(None, Some("true"))) {
-      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      val aIn, bIn, aOut = new CountDownLatch(1)
-      val seen = new ConcurrentLinkedQueue[(String, Option[String])]()
-      // forced order: A enters, B enters, A exits, B exits
-      val a = Future {
-        BucketedSnapshot.withBucketedScan(spark) {
-          aIn.countDown()
-          await(bIn)
-          seen.add("A, both inside" -> spark.conf.getOption(key))
-        }
-        aOut.countDown()
-      }
-      val b = Future {
-        await(aIn)
-        BucketedSnapshot.withBucketedScan(spark) {
-          seen.add("B, both inside" -> spark.conf.getOption(key))
-          bIn.countDown()
-          await(aOut)
-          seen.add("B, after A left" -> spark.conf.getOption(key))
-        }
-      }
-      Await.result(a.zip(b), 2.minutes)
-      import scala.jdk.CollectionConverters._
-      val notPinned = seen.asScala.toSeq.filter(_._2 != Some("false"))
-      assert(seen.size == 3 && notPinned.isEmpty,
-        s"prior $prior: pin dropped inside a lookup: $notPinned")
-      // getAll holds only explicitly set keys: None here means unset
-      assert(spark.conf.getAll.get(key) == prior,
-        s"prior $prior: restored to ${spark.conf.getAll.get(key)}")
-    } finally original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  test("prune opens only the selected buckets' files, on either side of maxInList") {
+    val table = prefix + "prune"
+    val buckets = 16
+    cleanup()
+    try {
+      // two writer tasks: every bucket lands as two files
+      BucketedSnapshot.write(spark.range(0, 400).repartition(2)
+        .select(col("id").as("k"), (col("id") * 7).as("v")), table,
+        buckets, "k")
+      import spark.implicits._
+      val keys = Seq(3L, 77L, 250L)
+      val keyFrame = keys.toDF("k")
+      val selected = keyFrame
+        .select(pmod(hash(col("k")), lit(buckets)).as("b")).as[Int]
+        .collect().toSet
+      def bucketOf(file: Path): Int = BucketingUtils.getBucketId(file.getName)
+        .getOrElse(fail(s"not a bucket file: $file"))
+      val all = spark.table(table).inputFiles.toSeq.map(f => bucketOf(new Path(f)))
+
+      // a filter-only lookup under the session's own settings
+      val viaIn = BucketedSnapshot.prune(spark.table(table), "k", keys,
+        keyFrame, BucketedSnapshot.MaxInList)
+      val rows = viaIn.collect().toSet
+      val scan = PlanGuards.flatten(viaIn.queryExecution.executedPlan)
+        .collectFirst { case f: FileSourceScanExec => f }
+        .getOrElse(fail("no file scan in the lookup plan"))
+      val opened = scan.inputRDD.asInstanceOf[FileScanRDD].filePartitions
+        .flatMap(_.files.map(f => bucketOf(f.filePath.toPath)))
+      assert(opened.sorted == all.filter(selected).sorted,
+        s"opened buckets $opened, selected $selected")
+      assert(opened.size < all.size, s"opened all ${all.size} files")
+      assert(rows == keys.map(k => Row(k, k * 7)).toSet, s"rows $rows")
+
+      // the broadcast semi-join side returns the same rows
+      val viaSemi = BucketedSnapshot.prune(spark.table(table), "k", keys,
+        keyFrame, maxInList = 0)
+      assert(viaSemi.collect().toSet == rows)
+    } finally cleanup()
+  }
+
+  test("no query or operator source changes session conf") {
+    val root = Paths.get("src/main/scala/graft")
+    val dirs = Seq("operators", "queries").map(root.resolve)
+    assert(dirs.forall(Files.isDirectory(_)), s"sources not found under $root")
+    val offenders = for {
+      dir <- dirs
+      file <- Files.walk(dir).iterator().asScala.toSeq
+      if file.toString.endsWith(".scala")
+      (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
+      if Seq("conf.set", "conf.unset", "autoBucketedScan").exists(line.contains)
+    } yield s"${root.relativize(file)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "a lookup must not change session state:\n" + offenders.mkString("\n"))
   }
 }
